@@ -1459,11 +1459,11 @@ private[graft] object RegistryAnn {
     // versioned artifact, each micro-batch appends its frozen-bounds
     // encodes (crash-recoverable like the CM/MG/q-digest folds); the
     // final table must equal the one-shot incremental encode
-    "ann_sq_encode_stream" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_sq_persist_")
-      graft.streaming.StreamingSketches.replaySqEncodePersisted(
-        Tables.embeddings(s, dir), root)
-    }),
+    "ann_sq_encode_stream" -> ((s, dir) =>
+      withTempReplayRoot("graft_sq_persist_") { root =>
+        graft.streaming.StreamingSketches.replaySqEncodePersisted(
+          Tables.embeddings(s, dir), root)
+      }),
     "ann_recall_floor" -> ((s, dir) =>
       Similarity.annRecallReport(Tables.embeddings(s, dir), 20, 10,
         ivfFloor = 140L, lshFloor = 25L)),

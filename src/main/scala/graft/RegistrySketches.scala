@@ -441,9 +441,10 @@ private[graft] object RegistrySketches {
     // artifact and readout match the in-memory streamed twin exactly
     "quantile_qdigest_persist" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
-      val root = java.nio.file.Files.createTempDirectory("graft_qd_persist_")
-      graft.operators.Sketches.qdigestGateStreamed(
-        graft.streaming.StreamingSketches.replayQDigestPersisted(ev, root), ev)
+      withTempReplayRoot("graft_qd_persist_") { root =>
+        graft.operators.Sketches.qdigestGateStreamed(
+          graft.streaming.StreamingSketches.replayQDigestPersisted(ev, root), ev)
+      }
     }),
     // mergeable per-source HLL vocabulary sketches, gated against exact
     // distinct counts (incl. the artifact-merge TOTAL path)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
 
 /** Skew-defended STREAMING sessionization — the streaming twin of
@@ -15,9 +14,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   * (measured at 10M events / 90% on one user: 28–44 s single-task folds
   * vs 4.9 s salted batch — ARCHITECTURE r13/r14).
   *
-  * Shape: a `foreachBatch` admission loop in the
-  * [[StreamingPack.packAdmissionStream]] versioned-artifact discipline,
-  * NOT a stateful-operator query — precisely so the per-batch work runs
+  * Shape: an [[ArtifactLoop]] step with a versioned state snapshot, NOT
+  * a stateful-operator query — precisely so the per-batch work runs
   * as ordinary parallel batch plans instead of key-partitioned state-store
   * tasks:
   *
@@ -95,22 +93,17 @@ object SaltedSessionStream {
   /** Latest committed snapshot under `stateDir`:
     * (open partials, watermark µs, last batch id, events processed). */
   private[streaming] def readState(spark: SparkSession, stateDir: String)
-      : (DataFrame, Long, Long, Long) = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingDedup.committedBatchDirs(fs, root).lastOption match {
-      case Some(p) =>
-        val df = spark.read.schema(stateSchema).parquet(p.toString)
+      : (DataFrame, Long, Long, Long) =
+    ArtifactLoop.latestCommitted(spark, stateDir, stateSchema) match {
+      case Some(df) =>
         val m = df.filter(col("user_id").isNull)
           .select(col("wm_us"), col("last_batch_id"), col("n_total")).head()
         (df.filter(col("user_id").isNotNull).select(partialCols: _*),
           m.getLong(0), m.getLong(1), m.getLong(2))
       case None =>
-        (spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], StructType(partialFields)),
+        (ArtifactLoop.emptyFrame(spark, StructType(partialFields)),
           Long.MinValue, -1L, 0L)
     }
-  }
 
   /** Merge one effective micro-batch's pre-folded partials into the open
     * state, emit closed sessions, and persist the next snapshot — the
@@ -123,13 +116,7 @@ object SaltedSessionStream {
                         nTotal: Long, partials: DataFrame,
                         nBatch: Long, batchMaxUs: Long, batchId: Long,
                         stateDir: String, outDir: String,
-                        delayUs: Long, dbg: Boolean): Unit = {
-    def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (dbg) println(f"[salted-batch $batchId] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+                        delayUs: Long): Unit = {
     val wmNew = math.max(wmUs,
       if (batchMaxUs == Long.MinValue) Long.MinValue
       else batchMaxUs - delayUs)
@@ -140,9 +127,8 @@ object SaltedSessionStream {
       .persist()
     try {
       val closed = merged.filter(unix_micros(col("e")) < wmNew)
-      t("mergeAndEmit")(StreamingDedup.writeOutputBatch(
-        graft.operators.Sessions.finalizePartials(closed),
-        outDir, batchId))
+      ArtifactLoop.writeOutputBatch(
+        graft.operators.Sessions.finalizePartials(closed), outDir, batchId)
       // marker-bearing snapshot LAST (replay-safety contract),
       // named by the cumulative event count — strictly monotone
       // per effective batch, so the retention prune can never
@@ -152,19 +138,12 @@ object SaltedSessionStream {
         java.util.Arrays.asList(Row(null, null, null, null, null,
           wmNew, batchId, nTotal + nBatch)),
         stateSchema)
-      t("stateWrite")(open
+      ArtifactLoop.commitSnapshot(open
         .withColumn("wm_us", lit(null).cast(LongType))
         .withColumn("last_batch_id", lit(null).cast(LongType))
         .withColumn("n_total", lit(null).cast(LongType))
-        .unionAll(marker)
-        .write.mode("overwrite").parquet(
-          new org.apache.hadoop.fs.Path(stateDir,
-            s"batch=${nTotal + nBatch}").toString))
+        .unionAll(marker), stateDir, nTotal + nBatch)
     } finally merged.unpersist()
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-    StreamingDedup.committedBatchDirs(fs, root).dropRight(2)
-      .foreach(p => fs.delete(p, true))
   }
 
   /** Run the salted session loop over parquet files appearing in `inDir`
@@ -178,20 +157,11 @@ object SaltedSessionStream {
     */
   def run(spark: SparkSession, inDir: String, stateDir: String,
           outDir: String, ckptDir: String, schema: StructType, gap: Column,
-          delayUs: Long, sliceSeconds: Long = 3600L,
-          foldPartitions: Int = 4): Unit = {
+          delayUs: Long, sliceSeconds: Long = 3600L): Unit = {
     require(delayUs >= 0, s"delayUs must be non-negative, got $delayUs")
-    require(foldPartitions > 0, s"foldPartitions must be positive, got $foldPartitions")
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val dbg = sys.env.contains("GRAFT_REPLAY_PROGRESS")
-    def t[A](name: String, batchId: Long)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (dbg) println(f"[salted-batch $batchId] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
+    ArtifactLoop.run(stream, ckptDir) { (batch, batchId) =>
       // ONE scan of the batch per micro-batch: the pre-fold computes the
       // partials AND the batch stats — `nBatch` (count of sessionizable
       // rows) and the watermark candidate (max event time) derive from
@@ -204,59 +174,25 @@ object SaltedSessionStream {
       // every real session regardless, so the emitted sessions are
       // unchanged (the null rows never sessionize either way).
       val b = widened(batch)
-      locally {
-        val sess = b.sparkSession
-        val (opens, wmUs, lastBatchId, nTotal) =
-          t("readState", batchId)(readState(sess, stateDir))
-        // fully-committed replay (output + snapshot landed, checkpoint
-        // didn't): reprocessing against the POST-batch state would fold
-        // the events twice — skip, the idempotent output already holds
-        // this batch's sessions
-        if (batchId > lastBatchId) {
-          val partials = graft.operators.Sessions
-            .slicePartialsWithMax(b, gap, sliceSeconds).persist()
-          try {
-            val (nBatch, batchMaxUs) = t("batchStats", batchId) {
-              val r = partials
-                .agg(coalesce(sum(col("n")), lit(0L)), max(col("mx_us"))).head()
-              (r.getLong(0), if (r.isNullAt(1)) Long.MinValue else r.getLong(1))
-            }
-            if (nBatch > 0)
-              foldBatch(sess, opens, wmUs, nTotal,
-                partials, nBatch, batchMaxUs, batchId, stateDir, outDir,
-                delayUs, dbg)
-          } finally partials.unpersist()
-        }
-      }
-    }
-    // Scope the loop's exchanges to `foldPartitions` — the same per-batch
-    // partition discipline [[StreamingSessions.replayStageOutOfOrder]]
-    // applies to its stateful stage, for the same reason: every job in
-    // `step` (pre-fold groupBy, island-merge window, state/output writes)
-    // inherits the SESSION shuffle partitioning, and a micro-batch's
-    // volume is a fraction of the corpus — at the bench SFs a sub-MB
-    // batch across 32 session partitions pays 32 near-empty tasks per
-    // exchange plus a 32-file state snapshot, measured 15.2 s vs 6.0 s
-    // for the whole replay (r15, local[32] vs foldPartitions=4; at 8
-    // cores the same query read 8.9 s — the cost tracked the partition
-    // count, not the data). A production deployment sizes this to
-    // sustained batch volume / target partition size (guide §2.2: 100
-    // MB–1 GB post-shuffle partitions), exactly like the sibling's
-    // statePartitions knob. Snapshot/restore: the loop must not leak
-    // session conf.
-    val spKey = "spark.sql.shuffle.partitions"
-    val spSnapshot = spark.conf.getOption(spKey)
-    spark.conf.set(spKey, foldPartitions.toString)
-    try {
-      val q = stream.writeStream.foreachBatch(step)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .start()
-      q.awaitTermination()
-    } finally {
-      spSnapshot match {
-        case Some(v) => spark.conf.set(spKey, v)
-        case None => spark.conf.unset(spKey)
+      val sess = b.sparkSession
+      val (opens, wmUs, lastBatchId, nTotal) = readState(sess, stateDir)
+      // fully-committed replay (output + snapshot landed, checkpoint
+      // didn't): reprocessing against the POST-batch state would fold
+      // the events twice — skip, the idempotent output already holds
+      // this batch's sessions
+      if (batchId > lastBatchId) {
+        val partials = graft.operators.Sessions
+          .slicePartialsWithMax(b, gap, sliceSeconds).persist()
+        try {
+          val r = partials
+            .agg(coalesce(sum(col("n")), lit(0L)), max(col("mx_us"))).head()
+          val (nBatch, batchMaxUs) =
+            (r.getLong(0), if (r.isNullAt(1)) Long.MinValue else r.getLong(1))
+          if (nBatch > 0)
+            foldBatch(sess, opens, wmUs, nTotal,
+              partials, nBatch, batchMaxUs, batchId, stateDir, outDir,
+              delayUs)
+        } finally partials.unpersist()
       }
     }
   }
@@ -294,7 +230,7 @@ object SaltedSessionStream {
       run(spark, root.resolve("in").toString, root.resolve("state").toString,
         root.resolve("out").toString, root.resolve("ckpt").toString,
         events.schema, gap, delaySeconds * 1000000L, sliceSeconds)
-      StreamingDedup.readOutput(spark, root.resolve("out").toString)
+      ArtifactLoop.readOutput(spark, root.resolve("out").toString)
         .filter(!(col("user_id") <=> lit(StreamingSessions.FlushUser)))
         .orderBy(col("user_id"), col("session_start"))
         .localCheckpoint()

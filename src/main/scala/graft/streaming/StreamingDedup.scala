@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming document ingest with exact-dedup admission — the production
@@ -11,7 +10,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * key table ([[graft.operators.Dedup.incrementalExact]]'s supplied-table
   * path, so per-batch work is O(batch) + one key-table join), and the
   * table is extended with the batch's newly-admitted keys before the next
-  * batch fires.
+  * batch fires. The near-dup, perceptual and semantic loops below extend
+  * the same shape to their own artifact tables.
   *
   * `foreachBatch` is the right Spark shape here: admission needs a join
   * against mutable on-disk state AND a write-back to it, which the pure
@@ -20,156 +20,22 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * dedup, index join, and the append are all the engine's own relational
   * operators.
   *
-  * Exactly-once OUTPUT: admissions are written through the batch-id-keyed
-  * idempotent writer ([[writeOutputBatch]]) — batch N's rows land in
-  * `outDir/batch=N`, a replayed micro-batch leaves an already-committed
-  * batch dir untouched instead of appending a duplicate (or rewriting it
-  * from a partially-effective replay), and readers ([[readOutput]]) only
-  * see `_SUCCESS`-committed batch dirs. The KEY table still absorbs
-  * replayed appends by
-  * canonicalize-on-read (min canonical_id per text_key) — a replayed
-  * append can duplicate key rows on disk, but later batches still see one
-  * row per key, so their admission joins never fan out. The admission
-  * LOGIC is unchanged either way, which is what the spec pins (stream ≡
-  * whole-corpus batch dedup).
+  * The loop protocol — runner, batch-id-keyed idempotent output,
+  * versioned snapshots, the replay-frontier guard — is
+  * [[ArtifactLoop]]'s; each loop here is its step. The KEY table absorbs
+  * replayed appends by canonicalize-on-read (min canonical_id per
+  * text_key) — a replayed append can duplicate key rows on disk, but
+  * later batches still see one row per key, so their admission joins
+  * never fan out. The admission LOGIC is unchanged either way, which is
+  * what the spec pins (stream ≡ whole-corpus batch dedup).
   */
 object StreamingDedup {
 
-  /** Batch-id-keyed idempotent output write: batch `batchId`'s admission
-    * rows land in `outDir/batch=<id>`, exactly once across every crash
-    * point. A dir that is already COMMITTED (`_SUCCESS` present) is a
-    * crashed-but-output-complete earlier attempt of this same batch: its
-    * rows were derived from the full batch under the correct pre-batch
-    * index state, so they are kept verbatim — rewriting them is at best
-    * redundant and at worst wrong, because a replayed batch can be only
-    * PARTIALLY effective (its frontier-bearing index append landed, the
-    * checkpoint commit did not, and some below-frontier doc's admission
-    * is no longer recomputable from post-batch state — near-dup labels
-    * mutate under later bridge merges). A crash DURING the output write
-    * leaves the dir uncommitted; the index appends all come after, so
-    * that replay reprocesses the batch in full and overwrites the
-    * partial files. An EMPTY admissions frame with no committed dir is a
-    * genuinely empty input batch; skipped.
+  /** Committed admission output across all batch dirs
+    * ([[ArtifactLoop.readOutput]]).
     */
-  private[streaming] def writeOutputBatch(admissions: DataFrame, outDir: String,
-                               batchId: Long): Unit = {
-    val target = new org.apache.hadoop.fs.Path(outDir, s"batch=$batchId")
-    val fs = target.getFileSystem(
-      admissions.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS")) &&
-        !admissions.isEmpty)
-      admissions.write.mode("overwrite").parquet(target.toString)
-  }
-
-  /** Committed `batch=N` dirs under `root`, numerically ordered. A crash
-    * mid-write leaves a dir without Spark's `_SUCCESS` marker; its batch
-    * has not committed to the streaming checkpoint either, so it WILL
-    * replay and overwrite the orphan — readers skip it rather than
-    * surface partial rows.
-    */
-  private[streaming] def committedBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
-                                 root: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.Path] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(_.getPath.getName.startsWith("batch="))
-      .filter(s => fs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .sortBy(_.getPath.getName.stripPrefix("batch=").toLong)
-      .map(_.getPath)
-
-  /** Start and drain a `foreachBatch` admission loop with the session's
-    * shuffle partitioning scoped to `foldPartitions` for the loop's
-    * lifetime (snapshot/restore — the loop must not leak session conf).
-    * Every job the step runs (screen joins, rank merges, state/output
-    * writes) inherits the SESSION shuffle partitioning, and a
-    * micro-batch is a fraction of the corpus: at the bench SFs a sub-MB
-    * batch across 32 session partitions pays 32 near-empty tasks per
-    * exchange plus a 32-file output/state write per batch (the
-    * [[graft.streaming.SaltedSessionStream]] r15 measurement: the cost
-    * tracked the partition count, not the data). A production
-    * deployment sizes `foldPartitions` to sustained batch volume /
-    * target partition size (guide §2.2), exactly like
-    * `replayStageOutOfOrder`'s statePartitions knob.
-    */
-  private[streaming] def runAdmissionLoop(stream: DataFrame, ckptDir: String,
-      step: (DataFrame, Long) => Unit, foldPartitions: Int = 4): Unit =
-    withFoldPartitions(stream.sparkSession, foldPartitions) {
-      val q = stream.writeStream.foreachBatch(step)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .start()
-      q.awaitTermination()
-    }
-
-  /** Scope `spark.sql.shuffle.partitions` to `foldPartitions` for the
-    * duration of `body` (snapshot/restore) — the conf discipline behind
-    * [[runAdmissionLoop]], exposed for the loops whose start/drain shape
-    * differs (the sketch folds' mutable-state steps).
-    */
-  private[streaming] def withFoldPartitions[A](spark: SparkSession,
-      foldPartitions: Int = 4)(body: => A): A = {
-    require(foldPartitions > 0,
-      s"foldPartitions must be positive, got $foldPartitions")
-    val spKey = "spark.sql.shuffle.partitions"
-    val snap = spark.conf.getOption(spKey)
-    spark.conf.set(spKey, foldPartitions.toString)
-    try body
-    finally snap match {
-      case Some(v) => spark.conf.set(spKey, v)
-      case None => spark.conf.unset(spKey)
-    }
-  }
-
-  /** Committed admission output across all batch dirs (see
-    * [[committedBatchDirs]]). Leaf dirs are passed explicitly, so no
-    * `batch` partition column is inferred into the result schema.
-    */
-  def readOutput(spark: SparkSession, outDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(outDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = committedBatchDirs(fs, root).map(_.toString)
-    require(dirs.nonEmpty, s"no committed output batches under $outDir")
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** Replay-vs-violation guard shared by the three admission loops (the
-    * two here and [[StreamingPack]]): every doc the frontier filter drops
-    * must hold a COMMITTED output row, because the output batch commits
-    * before any frontier-bearing artifact write — a legitimately replayed
-    * id always has one, an out-of-order NEW id never does. Paid only on
-    * batches that drop something (replays and violations, never the
-    * steady-state path); the output scan carries a doc_id range filter so
-    * parquet footer stats prune non-overlapping batch dirs. An index
-    * frontier with NO committed output (an index seeded from a batch-mode
-    * run against a fresh outDir) treats every drop as unplaced — the
-    * correct loud diagnostic, not an obscure empty-read error.
-    */
-  private[streaming] def requireDroppedAreReplays(dropped: DataFrame,
-      frontier: Long, outDir: String, opName: String,
-      idCol: String = "doc_id"): Unit = {
-    val bounds = dropped.agg(min(col(idCol)), max(col(idCol))).head()
-    if (bounds.isNullAt(0)) return // nothing dropped
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val sess = dropped.sparkSession
-    val root = new org.apache.hadoop.fs.Path(outDir)
-    val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-    val dirs = committedBatchDirs(fs, root).map(_.toString)
-    val placedIds =
-      if (dirs.isEmpty)
-        sess.createDataFrame(sess.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField(idCol, LongType))))
-      else sess.read.parquet(dirs: _*).select(col(idCol))
-        .filter(col(idCol).between(lo, hi))
-    val unplaced = dropped.select(col(idCol)).distinct()
-      .join(placedIds, Seq(idCol), "left_anti")
-      .agg(min(col(idCol)), count(lit(1))).head()
-    require(unplaced.isNullAt(0),
-      s"$opName: $idCol ${unplaced.get(0)} (${unplaced.getLong(1)} in " +
-        s"total) is at or below the frontier $frontier but holds no " +
-        "committed output row — out-of-order ingest (not a replay); " +
-        "re-run through the whole-corpus operator")
-  }
+  def readOutput(spark: SparkSession, outDir: String): DataFrame =
+    ArtifactLoop.readOutput(spark, outDir)
 
   val docSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
@@ -186,60 +52,35 @@ object StreamingDedup {
                            outDir: String, ckptDir: String): Unit = {
     val stream = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
+    ArtifactLoop.run(stream, ckptDir) { (batch, batchId) =>
       val b = batch.persist()
       try {
-        val sess = b.sparkSession
-        // Hadoop FS existence check (not java.io.File) so the key table can
-        // live on HDFS/S3 in a cluster deployment, per the docstring above.
-        val keyPath = new org.apache.hadoop.fs.Path(keyDir)
-        val fs = keyPath.getFileSystem(sess.sparkContext.hadoopConfiguration)
-        val idx =
-          (if (fs.exists(keyPath))
-            // canonicalize on read: a replayed append may have written a
-            // key twice; min(canonical_id) per key keeps admission joins
-            // one-row-per-key regardless (min of duplicates == the value)
-            sess.read.schema(keySchema).parquet(keyDir)
-              .groupBy(col("text_key"))
-              .agg(min(col("canonical_id")).as("canonical_id"))
-          else sess.createDataFrame(
-            sess.sparkContext.emptyRDD[org.apache.spark.sql.Row], keySchema))
+        // canonicalize on read: a replayed append may have written a key
+        // twice; min(canonical_id) per key keeps admission joins
+        // one-row-per-key regardless (min of duplicates == the value)
+        val idx = ArtifactLoop.readOrEmpty(b.sparkSession, keyDir, keySchema)
+          .groupBy(col("text_key"))
+          .agg(min(col("canonical_id")).as("canonical_id"))
           .persist()
         try {
           // replay frontier: a batch whose key append already landed (crash
           // before the checkpoint commit) would trip the monotone-id guard
-          // on its own stored canonicals; docs at-or-below the stored
-          // maximum are filtered out instead of re-admitted
-          val frontier = idx.agg(max(col("canonical_id"))).head()
-          val eff = if (frontier.isNullAt(0)) b
-                    else b.filter(col("doc_id") > frontier.getLong(0))
-          // replay-vs-violation discrimination, two independent layers:
-          //  - per DOC against the committed output (shared guard): a
-          //    key-level check alone would wave through an out-of-order
-          //    NEW doc sharing its text with an indexed one (whole-corpus
-          //    dedup would have made the lower id canonical — silently
-          //    dropping it diverges);
-          //  - per KEY against the key table: a crash mid-job-commit of
-          //    the key APPEND can leave the frontier advanced while some
-          //    canonical's key row never became visible (a torn append) —
-          //    the output check can't see that, a replayed doc whose key
-          //    is missing from the index can.
-          if (!frontier.isNullAt(0)) {
-            val dropped = b.filter(col("doc_id") <= frontier.getLong(0))
-            requireDroppedAreReplays(dropped, frontier.getLong(0), outDir,
-              "exactAdmissionStream")
-            val torn = dropped.select(md5(col("text")).as("text_key"))
-              .join(idx, Seq("text_key"), "left_anti").count()
-            require(torn == 0,
-              s"exactAdmissionStream: $torn replayed docs have keys " +
-                "absent from the index — torn key append (crash mid-" +
-                "commit); rebuild the key table from whole-corpus dedup")
-          }
+          // on its own stored canonicals. Dropped docs are checked per DOC
+          // against the committed output — a key-level check alone would
+          // wave through an out-of-order NEW doc sharing its text with an
+          // indexed one (whole-corpus dedup would have made the lower id
+          // canonical) — and per KEY against the key table (torn append).
+          val eff = ArtifactLoop.aboveFrontier(b,
+            ArtifactLoop.frontierOf(idx, "canonical_id"), outDir,
+            "exactAdmissionStream", torn = Some(ArtifactLoop.TornCheck("key",
+              _.select(md5(col("text")).as("text_key")),
+              idx.select(col("text_key")),
+              "rebuild the key table from whole-corpus dedup")))
           val admitted = graft.operators.Dedup
             .incrementalExact(eff.limit(0), eff, indexKeys = Some(idx))
             .persist()
           try {
-            writeOutputBatch(admitted, outDir, batchId)
+            ArtifactLoop.writeOutputBatch(admitted, outDir, batchId)
             // extend the index with this batch's newly-admitted canonicals
             admitted.filter(col("admitted")).join(eff, "doc_id")
               .select(md5(col("text")).as("text_key"),
@@ -249,7 +90,6 @@ object StreamingDedup {
         } finally idx.unpersist()
       } finally b.unpersist()
     }
-    runAdmissionLoop(stream, ckptDir, step)
   }
 
   private val shingleSchema = StructType(Seq(
@@ -292,7 +132,7 @@ object StreamingDedup {
     *    written before the artifact appends, so every crash point replays
     *    to the same state; old snapshots are pruned (latest two kept);
     *  - the output write is batch-id-keyed and idempotent
-    *    ([[writeOutputBatch]]): a replayed batch overwrites its own
+    *    ([[ArtifactLoop.writeOutputBatch]]): a replayed batch overwrites its own
     *    `batch=N` dir with the identical re-derived rows, so no crash
     *    point can duplicate OUTPUT rows.
     */
@@ -301,82 +141,40 @@ object StreamingDedup {
                              ckptDir: String): Unit = {
     val stream = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
+    val labRoot = s"$indexDir/labels"
+    ArtifactLoop.run(stream, ckptDir) { (batch, batchId) =>
       val b = batch.persist()
       try {
         val sess = b.sparkSession
-        val conf = sess.sparkContext.hadoopConfiguration
-        def readOr(sub: String, schema: StructType): DataFrame = {
-          val p = new org.apache.hadoop.fs.Path(indexDir, sub)
-          if (p.getFileSystem(conf).exists(p))
-            sess.read.schema(schema).parquet(p.toString)
-          else sess.createDataFrame(
-            sess.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        }
-        val labRoot = new org.apache.hadoop.fs.Path(indexDir, "labels")
-        val labFs = labRoot.getFileSystem(conf)
-        // an uncommitted (crashed) snapshot dir would silently resurrect
-        // an EMPTY label store (absence = own-canonical in the sparse
-        // semantics) and re-snapshot the degraded state — only committed
-        // dirs count, per the shared _SUCCESS-gated listing
-        def committedSnapshots(): Seq[org.apache.hadoop.fs.Path] =
-          committedBatchDirs(labFs, labRoot)
-        // latest committed label snapshot; a replayed batch N may read its
-        // own committed output — safe, because the snapshot it re-derives
-        // is identical (labels only decrease; min is idempotent)
-        val idxLab = committedSnapshots().lastOption
-          .map(p => sess.read.schema(labelSchema).parquet(p.toString))
-          .getOrElse(sess.createDataFrame(
-            sess.sparkContext.emptyRDD[org.apache.spark.sql.Row], labelSchema))
-        val idxSigs = readOr("sigs", sigSchema)
-        val idxSh = readOr("shingles", shingleSchema)
+        val idxLab = ArtifactLoop.latestCommitted(sess, labRoot, labelSchema)
+          .getOrElse(ArtifactLoop.emptyFrame(sess, labelSchema))
+        val idxSigs = ArtifactLoop.readOrEmpty(sess, s"$indexDir/sigs", sigSchema)
+        val idxSh = ArtifactLoop.readOrEmpty(sess, s"$indexDir/shingles", shingleSchema)
         // replay frontier from the SHINGLE artifact — the last write of
         // this step, so by the time a doc is at-or-below the frontier,
         // every other write for its batch has landed; reprocessing it
-        // would trip the monotone-id guard and double-index it
-        val frontier = idxSh.agg(max(col("doc_id"))).head()
-        val eff = (if (frontier.isNullAt(0)) b
-                   else b.filter(col("doc_id") > frontier.getLong(0))).persist()
+        // would trip the monotone-id guard and double-index it. Dropped
+        // docs are checked per DOC against the committed output (a
+        // shingle-less out-of-order doc carries no signature yet still
+        // owes the corpus an admission row) and per SHINGLED doc against
+        // the shingle artifact (torn append: future admissions would
+        // silently miss near-dups against the lost rows).
+        val eff = ArtifactLoop.aboveFrontier(b,
+          ArtifactLoop.frontierOf(idxSh, "doc_id"), outDir,
+          "nearDupAdmissionStream", torn = Some(ArtifactLoop.TornCheck(
+            "shingle", graft.operators.NearDup.shingled(_).select(col("doc_id")),
+            idxSh.select(col("doc_id")),
+            "rebuild the artifacts from whole-corpus dedup"))).persist()
         try {
-          // replay-vs-violation discrimination, two independent layers:
-          //  - per DOC against the committed output (shared guard; the
-          //    former signature-membership check covered shingled docs
-          //    only — an out-of-order SHINGLE-LESS doc carries no
-          //    signature yet still owes the corpus an admission row);
-          //  - per SHINGLED doc against the shingle artifact: the
-          //    frontier comes from that artifact's max(doc_id), so a
-          //    crash mid-job-commit of the shingle APPEND can advance it
-          //    while other docs' shingle rows never became visible (a
-          //    torn append) — future admissions would silently miss
-          //    near-dups against those docs; a replayed shingled doc
-          //    absent from the artifact exposes it.
-          if (!frontier.isNullAt(0)) {
-            val dropped = b.filter(col("doc_id") <= frontier.getLong(0))
-            requireDroppedAreReplays(dropped, frontier.getLong(0), outDir,
-              "nearDupAdmissionStream")
-            val torn = graft.operators.NearDup.shingled(dropped)
-              .select(col("doc_id"))
-              .join(idxSh.select(col("doc_id")), Seq("doc_id"), "left_anti")
-              .count()
-            require(torn == 0,
-              s"nearDupAdmissionStream: $torn replayed shingled docs are " +
-                "absent from the shingle artifact — torn shingle append " +
-                "(crash mid-commit); rebuild the artifacts from " +
-                "whole-corpus dedup")
-          }
           // an effective-empty batch (full replay) mutates nothing: the
           // re-derived snapshot would equal the latest committed one, and
           // writing it under a fresh name would only churn the retention
           // window — skip the whole mutation block
           if (!eff.isEmpty) {
             // snapshot name = the batch's own id frontier (max doc_id),
-            // NOT the streaming batch id: batch ids are only monotone
-            // within one checkpoint lineage, so after a checkpoint reset
-            // a lower-numbered snapshot could land below the retained
-            // ones and the prune would delete the newest labels. The id
-            // frontier is monotone across lineages (eff ids are above
-            // the artifact frontier) and a replay re-derives the same
-            // name with identical content.
+            // NOT the streaming batch id (see ArtifactLoop): eff ids are
+            // above the artifact frontier, and a replay re-derives the
+            // same name with identical content
             val effMax = eff.agg(max(col("doc_id"))).head().getLong(0)
             // batch shingles are shared between admission and the artifact
             // append — shingling is the hottest dedup stage, don't pay it 2×
@@ -385,31 +183,23 @@ object StreamingDedup {
               val (admissions, newLabels) = graft.operators.NearDup
                 .incrementalNearDupsIndexed(idxSh, idxSigs, idxLab, eff,
                   batchShingles = Some(bSh))
-              writeOutputBatch(admissions, outDir, batchId)
+              ArtifactLoop.writeOutputBatch(admissions, outDir, batchId)
               // snapshot labels BEFORE the artifact appends: if an append
               // crashes, the replayed batch re-derives the identical snapshot
               // (ignored-extra label rows + min-idempotence), never stale.
               // newLabels is localCheckpointed (materialized), so overwriting
-              // the very snapshot it was read from is safe.
-              newLabels.write.mode("overwrite")
-                .parquet(new org.apache.hadoop.fs.Path(labRoot, s"batch=$effMax").toString)
+              // or pruning the very snapshot it was read from is safe.
+              ArtifactLoop.commitSnapshot(newLabels, labRoot, effMax)
               // extend the artifacts: sigs first, the frontier-bearing
               // shingle table LAST (see replay-safety contract above)
               graft.operators.NearDup.minhashSignatures(bSh).write.mode("append")
-                .parquet(new org.apache.hadoop.fs.Path(indexDir, "sigs").toString)
-              bSh.write.mode("append")
-                .parquet(new org.apache.hadoop.fs.Path(indexDir, "shingles").toString)
+                .parquet(s"$indexDir/sigs")
+              bSh.write.mode("append").parquet(s"$indexDir/shingles")
             } finally bSh.unpersist()
-            // bounded snapshot retention: replay only ever needs the latest
-            // committed snapshot; keep two (current + predecessor) so a
-            // reader racing the prune still finds one
-            committedSnapshots().dropRight(2)
-              .foreach(p => labFs.delete(p, true))
           }
         } finally eff.unpersist()
       } finally b.unpersist()
     }
-    runAdmissionLoop(stream, ckptDir, step)
   }
 
   private val embSchema = StructType(Seq(
@@ -422,33 +212,6 @@ object StreamingDedup {
   private val semLabelSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("cluster_id", LongType)))
 
-  /** Streaming SEMANTIC (embedding-space) admission — the continuous form
-    * of [[graft.operators.Similarity.semanticDedupIncremental]], closing
-    * the streaming column of the dedup matrix (exact ✓, text near-dup ✓,
-    * embedding ✓): each micro-batch of `(vec_id, embedding)` rows is
-    * admitted against the persisted artifact tables (`indexDir/emb` — the
-    * vector store for exact-cosine verify, `indexDir/buckets` — the LSH
-    * bucket table, `indexDir/labels/batch=N` — sparse label snapshots),
-    * then the artifacts are extended.
-    *
-    * The crash-safety construction is the [[nearDupAdmissionStream]]
-    * contract with the BUCKET table as the frontier-bearing artifact
-    * (written LAST): a replayed micro-batch either reprocesses in full
-    * (the vector-store append may duplicate rows — absorbed by
-    * dedupe-on-read, duplicates are bit-identical) or sees an empty
-    * effective batch; dropped below-frontier vectors are checked per
-    * VECTOR against the committed output (legitimate replay) and against
-    * the bucket artifact (torn bucket append detection); label snapshots
-    * are `_SUCCESS`-gated and idempotent to re-derive; the output write
-    * is batch-id-keyed.
-    *
-    * Parameter drift is a silent-corruption risk unique to this loop: a
-    * bucket table probed at a different plane count lives in a different
-    * bit space (near-dup pairs silently vanish), and labels admitted
-    * under a different threshold are a different equivalence relation —
-    * both are pinned in a one-row `indexDir/params` artifact on first
-    * run and `require`d to match on every later one.
-    */
   /** Streaming PERCEPTUAL admission — the continuous form of
     * [[graft.operators.Multimodal.fingerprintAdmission]], closing the
     * streaming admission family (exact / near-dup / semantic /
@@ -461,10 +224,10 @@ object StreamingDedup {
     * reach the artifact, the join, or the output.
     *
     * Crash safety is the single-artifact special case of the
-    * [[nearDupAdmissionStream]] contract: the fingerprint table is the
+    * [[ArtifactLoop]] frontier contract: the fingerprint table is the
     * frontier-bearing artifact and the ONLY artifact, written after the
     * batch-id-keyed output commit — a crash between them replays the
-    * batch in full and [[writeOutputBatch]] keeps the committed rows; a
+    * batch in full and [[ArtifactLoop.writeOutputBatch]] keeps the committed rows; a
     * torn fingerprint append (max row landed, others lost) is detected
     * per replayed doc and fails loudly, because a silently absent
     * fingerprint would never refuse that doc's future twins. The
@@ -487,68 +250,65 @@ object StreamingDedup {
       StructField("doc_id", LongType), StructField(fpCol, StringType)))
     val stream = spark.readStream.schema(inSchema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
+    ArtifactLoop.run(stream, ckptDir) { (batch, batchId) =>
       val bfp = fingerprint(batch)
         .select(col("doc_id").cast("long").as("doc_id"), col(fpCol))
         .persist()
       try {
         val sess = bfp.sparkSession
-        val conf = sess.sparkContext.hadoopConfiguration
-        val fpsPath = new org.apache.hadoop.fs.Path(indexDir, "fps")
-        val fs = fpsPath.getFileSystem(conf)
         // dedupe-on-read: a crashed-then-replayed append may have written
         // a fingerprint twice; duplicates are bit-identical
-        val idxFps = (if (fs.exists(fpsPath))
-            sess.read.schema(fpSchema).parquet(fpsPath.toString)
-          else sess.createDataFrame(
-            sess.sparkContext.emptyRDD[org.apache.spark.sql.Row], fpSchema))
+        val idxFps = ArtifactLoop.readOrEmpty(sess, s"$indexDir/fps", fpSchema)
           .dropDuplicates("doc_id")
-        val paramsPath = new org.apache.hadoop.fs.Path(indexDir, "params")
-        if (fs.exists(paramsPath)) {
-          val p = sess.read.parquet(paramsPath.toString).head()
-          require(p.getInt(0) == hexLen && p.getInt(1) == maxHamming,
-            s"perceptualAdmissionStream: index at $indexDir was built " +
-              s"with hexLen=${p.getInt(0)}, maxHamming=${p.getInt(1)} — " +
-              s"this run passed ($hexLen, $maxHamming); parameter drift " +
-              "silently changes the dedup relation, rebuild the index to " +
-              "change parameters")
-        }
+        ArtifactLoop.pinParams(sess, indexDir, "perceptualAdmissionStream",
+          Seq("hex_len" -> hexLen, "max_hamming" -> maxHamming))
         // replay frontier from the fingerprint artifact — the last (and
         // only) artifact write, so a frontier-covered doc's batch landed
-        val frontier = idxFps.agg(max(col("doc_id"))).head()
-        val eff = (if (frontier.isNullAt(0)) bfp
-                   else bfp.filter(col("doc_id") > frontier.getLong(0)))
-          .persist()
+        val eff = ArtifactLoop.aboveFrontier(bfp,
+          ArtifactLoop.frontierOf(idxFps, "doc_id"), outDir,
+          "perceptualAdmissionStream", torn = Some(ArtifactLoop.TornCheck(
+            "fingerprint", _.select(col("doc_id")), idxFps.select(col("doc_id")),
+            "rebuild the index by re-running the batch fingerprint " +
+              "extraction over the corpus"))).persist()
         try {
-          if (!frontier.isNullAt(0)) {
-            val dropped = bfp.filter(col("doc_id") <= frontier.getLong(0))
-            requireDroppedAreReplays(dropped, frontier.getLong(0), outDir,
-              "perceptualAdmissionStream")
-            val torn = dropped.select(col("doc_id"))
-              .join(idxFps.select(col("doc_id")), Seq("doc_id"), "left_anti")
-              .count()
-            require(torn == 0,
-              s"perceptualAdmissionStream: $torn replayed docs are absent " +
-                "from the fingerprint artifact — torn fingerprint append " +
-                "(crash mid-commit); rebuild the index by re-running the " +
-                "batch fingerprint extraction over the corpus")
-          }
           val admissions = graft.operators.Multimodal.fingerprintAdmission(
             idxFps, eff, fpCol, hexLen, maxHamming)
-          writeOutputBatch(admissions, outDir, batchId)
-          if (!fs.exists(paramsPath))
-            sess.range(1).select(lit(hexLen).as("hex_len"),
-              lit(maxHamming).as("max_hamming"))
-              .write.mode("overwrite").parquet(paramsPath.toString)
+          ArtifactLoop.writeOutputBatch(admissions, outDir, batchId)
           // frontier-bearing artifact append LAST (contract above)
           if (!eff.isEmpty)
-            eff.write.mode("append").parquet(fpsPath.toString)
+            eff.write.mode("append").parquet(s"$indexDir/fps")
         } finally eff.unpersist()
       } finally bfp.unpersist()
     }
-    runAdmissionLoop(stream, ckptDir, step)
   }
 
+  /** Streaming SEMANTIC (embedding-space) admission — the continuous form
+    * of [[graft.operators.Similarity.semanticDedupIncremental]], closing
+    * the streaming column of the dedup matrix (exact ✓, text near-dup ✓,
+    * embedding ✓): each micro-batch of `(vec_id, embedding)` rows is
+    * admitted against the persisted artifact tables (`indexDir/emb` — the
+    * vector store for exact-cosine verify, `indexDir/buckets` — the LSH
+    * bucket table, `indexDir/labels/batch=N` — sparse label snapshots),
+    * then the artifacts are extended.
+    *
+    * The crash-safety construction is the [[ArtifactLoop]] frontier
+    * contract with the BUCKET table as the frontier-bearing artifact
+    * (written LAST): a replayed micro-batch either reprocesses in full
+    * (the vector-store append may duplicate rows — absorbed by
+    * dedupe-on-read, duplicates are bit-identical) or sees an empty
+    * effective batch; dropped below-frontier vectors are checked per
+    * VECTOR against the committed output (legitimate replay) and against
+    * the bucket artifact (torn bucket append detection); label snapshots
+    * are `_SUCCESS`-gated and idempotent to re-derive; the output write
+    * is batch-id-keyed.
+    *
+    * Parameter drift is a silent-corruption risk unique to this loop: a
+    * bucket table probed at a different plane count lives in a different
+    * bit space (near-dup pairs silently vanish), and labels admitted
+    * under a different threshold are a different equivalence relation —
+    * both are pinned in a one-row `indexDir/params` artifact on first
+    * run and `require`d to match on every later one.
+    */
   def semanticAdmissionStream(spark: SparkSession, inDir: String,
                               indexDir: String, outDir: String,
                               ckptDir: String, threshold: Double,
@@ -562,99 +322,58 @@ object StreamingDedup {
       s"semanticAdmissionStream: input $inDir must carry (vec_id, embedding)")
     val stream = spark.readStream.schema(inSchema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
+    val labRoot = s"$indexDir/labels"
+    ArtifactLoop.run(stream, ckptDir) { (batch, batchId) =>
       val b = batch.select(col("vec_id").cast("long").as("vec_id"),
         col("embedding").cast("array<double>").as("embedding")).persist()
       try {
         val sess = b.sparkSession
-        val conf = sess.sparkContext.hadoopConfiguration
-        def readOr(sub: String, schema: StructType): DataFrame = {
-          val p = new org.apache.hadoop.fs.Path(indexDir, sub)
-          if (p.getFileSystem(conf).exists(p))
-            sess.read.schema(schema).parquet(p.toString)
-          else sess.createDataFrame(
-            sess.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        }
         // parameter pin (see scaladoc): one bounded read per batch
-        val paramsPath = new org.apache.hadoop.fs.Path(indexDir, "params")
-        val paramsFs = paramsPath.getFileSystem(conf)
-        if (paramsFs.exists(paramsPath)) {
-          val p = sess.read.parquet(paramsPath.toString).head()
-          require(p.getInt(0) == numPlanes && p.getDouble(1) == threshold,
-            s"semanticAdmissionStream: index at $indexDir was built with " +
-              s"numPlanes=${p.getInt(0)}, threshold=${p.getDouble(1)} — " +
-              s"this run passed ($numPlanes, $threshold); parameter drift " +
-              "silently changes the dedup relation, rebuild the index " +
-              "to change parameters")
-        }
+        ArtifactLoop.pinParams(sess, indexDir, "semanticAdmissionStream",
+          Seq("num_planes" -> numPlanes, "threshold" -> threshold))
         // dedupe-on-read: a crashed-then-replayed append may have written
         // a vector (or bucket row) twice; duplicates are bit-identical,
         // so any-one-per-key restores the exactly-once view
-        val idxEmb = readOr("emb", embSchema).dropDuplicates("vec_id")
-        val idxBuckets = readOr("buckets", bucketSchema).distinct()
-        val labRoot = new org.apache.hadoop.fs.Path(indexDir, "labels")
-        val labFs = labRoot.getFileSystem(conf)
-        val idxLab = committedBatchDirs(labFs, labRoot).lastOption
-          .map(p => sess.read.schema(semLabelSchema).parquet(p.toString))
-          .getOrElse(sess.createDataFrame(
-            sess.sparkContext.emptyRDD[org.apache.spark.sql.Row], semLabelSchema))
+        val idxEmb = ArtifactLoop.readOrEmpty(sess, s"$indexDir/emb", embSchema)
+          .dropDuplicates("vec_id")
+        val idxBuckets = ArtifactLoop
+          .readOrEmpty(sess, s"$indexDir/buckets", bucketSchema).distinct()
+        val idxLab = ArtifactLoop.latestCommitted(sess, labRoot, semLabelSchema)
+          .getOrElse(ArtifactLoop.emptyFrame(sess, semLabelSchema))
         // replay frontier from the BUCKET artifact — the last write of the
-        // step, so a frontier-covered vector's batch has fully landed
-        val frontier = idxBuckets.agg(max(col("vec_id"))).head()
-        val eff = (if (frontier.isNullAt(0)) b
-                   else b.filter(col("vec_id") > frontier.getLong(0))).persist()
+        // step, so a frontier-covered vector's batch has fully landed; a
+        // replayed vector absent from it exposes a torn bucket append
+        // (rows future admissions would silently never probe)
+        val eff = ArtifactLoop.aboveFrontier(b,
+          ArtifactLoop.frontierOf(idxBuckets, "vec_id"), outDir,
+          "semanticAdmissionStream", idCol = "vec_id",
+          torn = Some(ArtifactLoop.TornCheck("bucket", _.select(col("vec_id")),
+            idxBuckets.select(col("vec_id")),
+            "rebuild the index from whole-corpus semanticDedup"))).persist()
         try {
-          if (!frontier.isNullAt(0)) {
-            val dropped = b.filter(col("vec_id") <= frontier.getLong(0))
-            requireDroppedAreReplays(dropped, frontier.getLong(0), outDir,
-              "semanticAdmissionStream", idCol = "vec_id")
-            // torn bucket append: the frontier artifact itself can commit
-            // partially — a replayed vector absent from it exposes rows
-            // future admissions would silently never probe
-            val torn = dropped.select(col("vec_id"))
-              .join(idxBuckets.select(col("vec_id")), Seq("vec_id"), "left_anti")
-              .count()
-            require(torn == 0,
-              s"semanticAdmissionStream: $torn replayed vectors are absent " +
-                "from the bucket artifact — torn bucket append (crash " +
-                "mid-commit); rebuild the index from whole-corpus " +
-                "semanticDedup")
-          }
-          if (!paramsFs.exists(paramsPath))
-            sess.range(1).select(lit(numPlanes).as("num_planes"),
-              lit(threshold).as("threshold"))
-              .write.mode("overwrite").parquet(paramsPath.toString)
           // effective-empty batch (full replay): nothing to admit and the
           // re-derived label snapshot would equal the committed one — skip
           // the mutation block (same reasoning as the near-dup loop)
           if (!eff.isEmpty) {
             // snapshot name = the batch's id frontier, not the streaming
-            // batch id — monotone across checkpoint lineages (see the
-            // near-dup loop's rationale)
+            // batch id (see the near-dup loop)
             val effMax = eff.agg(max(col("vec_id"))).head().getLong(0)
             val (admissions, newLabels) = graft.operators.Similarity
               .semanticDedupIncremental(idxEmb, idxBuckets, idxLab, eff,
                 threshold, numPlanes)
-            writeOutputBatch(admissions, outDir, batchId)
+            ArtifactLoop.writeOutputBatch(admissions, outDir, batchId)
             // snapshot labels BEFORE the artifact appends (same idempotence
             // argument as the near-dup loop; newLabels is localCheckpointed,
             // so overwriting the snapshot it was read from is safe)
-            newLabels.write.mode("overwrite").parquet(
-              new org.apache.hadoop.fs.Path(labRoot, s"batch=$effMax").toString)
+            ArtifactLoop.commitSnapshot(newLabels, labRoot, effMax)
             // extend the artifacts: vector store first, the frontier-
             // bearing bucket table LAST (replay-safety contract above)
-            eff.write.mode("append").parquet(
-              new org.apache.hadoop.fs.Path(indexDir, "emb").toString)
+            eff.write.mode("append").parquet(s"$indexDir/emb")
             graft.operators.Similarity.bucketTable(eff, numPlanes)
-              .write.mode("append").parquet(
-                new org.apache.hadoop.fs.Path(indexDir, "buckets").toString)
-            // bounded snapshot retention (latest two, as in the near-dup loop)
-            committedBatchDirs(labFs, labRoot).dropRight(2)
-              .foreach(p => labFs.delete(p, true))
+              .write.mode("append").parquet(s"$indexDir/buckets")
           }
         } finally eff.unpersist()
       } finally b.unpersist()
     }
-    runAdmissionLoop(stream, ckptDir, step)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 /** Streaming sequence packing — the continuous form of
@@ -20,25 +19,24 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, 
   * [[graft.operators.Curation.packStateAfter]] — O(batch) per micro-batch,
   * nothing ever rescans the packed corpus.
   *
-  * Replay safety follows the admission-loop contract
-  * ([[StreamingDedup]]): the batch is filtered to ids above the state
-  * frontier (`max_doc_id`); the frontier-bearing state snapshot is the
-  * LAST write of the step, so a replayed batch either reprocesses in full
-  * against the identical pre-batch state (re-deriving byte-identical
-  * placements; the batch-id-keyed idempotent output writer keeps the
-  * committed dir verbatim) or sees an empty effective batch. Replay-vs-
-  * violation discrimination rests on one invariant: the output batch
-  * commits BEFORE the frontier-bearing state snapshot, so every id a
-  * LEGITIMATE replay re-delivers below the frontier already holds a
-  * committed placement — in the crash window (output committed, state
-  * missing) the old frontier keeps the batch effective rather than
-  * dropped. Dropped ids are therefore anti-joined against the committed
-  * output (only on batches that drop anything — replays and violations;
-  * the steady-state path never pays it), and an UNPLACED id at or below
-  * the frontier is genuinely out-of-order input that fails loudly
-  * instead of silently losing a document's placement. Each snapshot
-  * still records `prev_max_doc_id`, the frontier before its own batch,
-  * as a replay-window diagnostic.
+  * Replay safety is [[ArtifactLoop]]'s frontier contract: the batch is
+  * filtered to ids above the state frontier (`max_doc_id`); the
+  * frontier-bearing state snapshot is the LAST write of the step, so a
+  * replayed batch either reprocesses in full against the identical
+  * pre-batch state (re-deriving byte-identical placements; the
+  * batch-id-keyed idempotent output writer keeps the committed dir
+  * verbatim) or sees an empty effective batch. Every dropped id must
+  * already hold a committed placement — in the crash window (output
+  * committed, state missing) the old frontier keeps the batch effective
+  * rather than dropped — so an UNPLACED id at or below the frontier is
+  * genuinely out-of-order input that fails loudly instead of silently
+  * losing a document's placement. No torn-append layer: the state
+  * snapshot is an atomic `_SUCCESS`-gated versioned dir, not an append.
+  * Each snapshot still records `prev_max_doc_id`, the frontier before its
+  * own batch, as a replay-window diagnostic.
+  *
+  * The sibling screens below are stateless loops on the same runner and
+  * output writer.
   */
 object StreamingPack {
 
@@ -80,17 +78,13 @@ object StreamingPack {
     * prev_max_doc_id) — a single driver-side row (the artifact is one
     * row by construction).
     */
-  def readState(spark: SparkSession, stateDir: String): Row = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingDedup.committedBatchDirs(fs, root).lastOption
-      .map(p => spark.read.schema(stateSchema).parquet(p.toString).head())
+  def readState(spark: SparkSession, stateDir: String): Row =
+    ArtifactLoop.latestCommitted(spark, stateDir, stateSchema).map(_.head())
       .getOrElse(Row(0L, -1L, 0L, -1L))
-  }
 
   /** Committed placement rows across all batch dirs. */
   def readOutput(spark: SparkSession, outDir: String): DataFrame =
-    StreamingDedup.readOutput(spark, outDir)
+    ArtifactLoop.readOutput(spark, outDir)
 
   /** Run the packing loop over parquet files appearing in `inDir` (one
     * file per micro-batch, mtime order) until drained. Placement rows
@@ -103,22 +97,15 @@ object StreamingPack {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")
     val stream = spark.readStream.schema(StreamingDedup.docSchema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
+    ArtifactLoop.run(stream, ckptDir) { (batch, batchId) =>
       val b = batch.persist()
       try {
         val sess = b.sparkSession
         val st = readState(sess, stateDir)
         val frontier = st.getLong(1)
-        val eff = b.filter(col("doc_id") > frontier)
-        // replay-vs-violation discrimination (see class doc): every
-        // dropped id must already hold a committed placement — output
-        // commits before the state snapshot, so a replayed id always
-        // does and an out-of-order NEW id (at ANY position below the
-        // frontier) never does. No torn-append layer here: the state
-        // snapshot is an atomic _SUCCESS-gated versioned dir, not an
-        // append.
-        StreamingDedup.requireDroppedAreReplays(
-          b.filter(col("doc_id") <= frontier), frontier, outDir,
+        // the empty-corpus frontier (-1) still runs the dropped-are-
+        // replays check: it drops only ids at or below -1
+        val eff = ArtifactLoop.aboveFrontier(b, Some(frontier), outDir,
           "packAdmissionStream")
         if (!eff.isEmpty) {
           val stateDf = sess.createDataFrame(
@@ -128,27 +115,17 @@ object StreamingPack {
           val placements = graft.operators.Curation
             .packSequencesWith(stateDf, eff, seqLen).persist()
           try {
-            StreamingDedup.writeOutputBatch(placements, outDir, batchId)
+            ArtifactLoop.writeOutputBatch(placements, outDir, batchId)
             // frontier-bearing snapshot LAST (replay-safety contract),
-            // named by the NEW FRONTIER rather than the streaming batch
-            // id — batch ids restart across checkpoint lineages, the
-            // frontier is monotone across them (see the cluster loop)
+            // named by the NEW FRONTIER (see ArtifactLoop)
             val newFrontier = eff.agg(max(col("doc_id"))).head().getLong(0)
-            val after = graft.operators.Curation
+            ArtifactLoop.commitSnapshot(graft.operators.Curation
               .packStateAfter(stateDf, eff)
-              .withColumn("prev_max_doc_id", lit(frontier))
-            after.write.mode("overwrite").parquet(
-              new org.apache.hadoop.fs.Path(stateDir, s"batch=$newFrontier").toString)
+              .withColumn("prev_max_doc_id", lit(frontier)), stateDir, newFrontier)
           } finally placements.unpersist()
-          // bounded retention: latest two committed snapshots
-          val root = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-          StreamingDedup.committedBatchDirs(fs, root).dropRight(2)
-            .foreach(p => fs.delete(p, true))
         }
       } finally b.unpersist()
     }
-    StreamingDedup.runAdmissionLoop(stream, ckptDir, step)
   }
 
   /** Streamed exact-n-gram decontamination — the continuous form of
@@ -167,13 +144,12 @@ object StreamingPack {
                                   ckptDir: String, n: Int = 8): Unit = {
     val stream = spark.readStream.schema(StreamingDedup.docSchema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
+    ArtifactLoop.run(stream, ckptDir) { (batch, batchId) =>
       val art = batch.sparkSession.read.parquet(s"$artifactDir/eval_ngrams")
-      StreamingDedup.writeOutputBatch(
+      ArtifactLoop.writeOutputBatch(
         graft.operators.Curation.decontaminateWith(art, widened(batch), n),
         outDir, batchId)
     }
-    StreamingDedup.runAdmissionLoop(stream, ckptDir, step)
   }
 
   /** Streamed fuzzy decontamination — the continuous form of
@@ -188,15 +164,14 @@ object StreamingPack {
                         ckptDir: String): Unit = {
     val stream = spark.readStream.schema(StreamingDedup.docSchema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
+    ArtifactLoop.run(stream, ckptDir) { (batch, batchId) =>
       val sess = batch.sparkSession
-      StreamingDedup.writeOutputBatch(
+      ArtifactLoop.writeOutputBatch(
         graft.operators.Curation.decontaminateFuzzyWith(
           sess.read.parquet(s"$artifactDir/bands"),
           sess.read.parquet(s"$artifactDir/shingles"), widened(batch)),
         outDir, batchId)
     }
-    StreamingDedup.runAdmissionLoop(stream, ckptDir, step)
   }
 
   /** Streamed semantic decontamination — the continuous form of
@@ -214,35 +189,17 @@ object StreamingPack {
                              graft.operators.Similarity.NumPlanes): Unit = {
     val stream = spark.readStream.schema(embSchema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
+    ArtifactLoop.run(stream, ckptDir) { (batch, batchId) =>
       val sess = batch.sparkSession
-      StreamingDedup.writeOutputBatch(
+      ArtifactLoop.writeOutputBatch(
         graft.operators.Similarity.decontaminateSemanticWith(
           sess.read.parquet(s"$artifactDir/eval_emb"),
           sess.read.parquet(s"$artifactDir/buckets"),
           widened(batch), threshold, numPlanes),
         outDir, batchId)
     }
-    StreamingDedup.runAdmissionLoop(stream, ckptDir, step)
   }
 
-  /** Streamed importance admission — the continuous form of
-    * [[graft.operators.Curation.importanceSampleIncremental]]: documents
-    * arrive as micro-batches and each batch is scored against the FROZEN
-    * [[graft.operators.Curation.importanceArtifacts]] (weights under
-    * `artifactDir/weights`, the one-row threshold under
-    * `artifactDir/thr`), admitting `w_avg_milli ≥ thr` rows to the
-    * batch-id-keyed idempotent output.
-    *
-    * Unlike the dedup admission loops this one is STATELESS — the
-    * artifacts are read-only and a doc's verdict is a pure function of
-    * them (the incremental operator's spec-pinned purity) — so replay
-    * safety needs no frontier guard: a replayed batch re-derives
-    * byte-identical admissions and the `_SUCCESS`-gated writer keeps the
-    * committed dir verbatim. Per-batch cost is one broadcast join
-    * against the ≤buckets-row weight table plus a partial-aggregated
-    * groupBy — O(batch), the artifacts never rescan.
-    */
   private val quotaSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("cell", LongType),
     StructField("max_vec_id", LongType)))
@@ -253,13 +210,9 @@ object StreamingPack {
     * committed a snapshot yet. Bounded: ≤ cells × perCell rows.
     */
   def readClusterQuota(spark: SparkSession, stateDir: String,
-                       artifactDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingDedup.committedBatchDirs(fs, root).lastOption
-      .map(p => spark.read.schema(quotaSchema).parquet(p.toString))
+                       artifactDir: String): DataFrame =
+    ArtifactLoop.latestCommitted(spark, stateDir, quotaSchema)
       .getOrElse(spark.read.schema(quotaSchema).parquet(s"$artifactDir/quota"))
-  }
 
   /** Streamed cluster-balanced diversity sampling — the continuous form
     * of [[graft.operators.Similarity.clusterBalancedSampleIncremental]]:
@@ -275,7 +228,7 @@ object StreamingPack {
     * merge argument), and the state after any prefix of batches IS the
     * whole-so-far pick — the current sample, independent of batching.
     *
-    * Replay contract (the [[packAdmissionStream]] discipline): the batch
+    * Replay contract ([[ArtifactLoop]]'s frontier rule): the batch
     * filters to ids above the state frontier; output commits BEFORE the
     * frontier-bearing snapshot, so the crash window replays the full
     * batch against the identical pre-batch state (byte-identical
@@ -298,7 +251,7 @@ object StreamingPack {
                              perCell: Int = 8): Unit = {
     val stream = spark.readStream.schema(embSchema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
+    ArtifactLoop.run(stream, ckptDir) { (batch, batchId) =>
       val b = batch.persist()
       try {
         val sess = b.sparkSession
@@ -322,42 +275,48 @@ object StreamingPack {
           .agg(count(lit(1)), coalesce(max(col("vec_id")), lit(-1L))).head()
         if (effStats.getLong(0) > 0) {
           val quota = st.select(col("vec_id"), col("cell"))
-          StreamingDedup.writeOutputBatch(
+          ArtifactLoop.writeOutputBatch(
             graft.operators.Similarity.clusterBalancedAdmitAssigned(
               quota, assigned, perCell), outDir, batchId)
           // frontier-bearing snapshot LAST (replay-safety contract),
-          // NAMED BY THE FRONTIER, not the streaming batch id: batch ids
-          // are only monotone within one checkpoint lineage, so after a
-          // checkpoint reset a new batch could write a LOWER-numbered
-          // snapshot than the retained ones and the prune would delete
-          // the newest state. The frontier (max admitted vec_id) is
-          // monotone across lineages — eff is filtered to ids above the
-          // old frontier, so each effective batch's name strictly
-          // increases, and a replayed batch re-derives the same name
-          // with identical content (idempotent overwrite).
+          // named by the frontier (see ArtifactLoop): eff is filtered to
+          // ids above the old frontier, so each effective batch's name
+          // strictly increases, and a replayed batch re-derives the same
+          // name with identical content (idempotent overwrite)
           val newFrontier = effStats.getLong(1)
-          graft.operators.Similarity
+          ArtifactLoop.commitSnapshot(graft.operators.Similarity
             .clusterQuotaAfterAssigned(quota, assigned, perCell)
-            .withColumn("max_vec_id", lit(math.max(frontier, newFrontier)))
-            .write.mode("overwrite").parquet(
-              new org.apache.hadoop.fs.Path(stateDir, s"batch=$newFrontier").toString)
-          val root = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-          StreamingDedup.committedBatchDirs(fs, root).dropRight(2)
-            .foreach(p => fs.delete(p, true))
+            .withColumn("max_vec_id", lit(math.max(frontier, newFrontier))),
+            stateDir, newFrontier)
         }
       } finally b.unpersist()
     }
-    StreamingDedup.runAdmissionLoop(stream, ckptDir, step)
   }
 
+  /** Streamed importance admission — the continuous form of
+    * [[graft.operators.Curation.importanceSampleIncremental]]: documents
+    * arrive as micro-batches and each batch is scored against the FROZEN
+    * [[graft.operators.Curation.importanceArtifacts]] (weights under
+    * `artifactDir/weights`, the one-row threshold under
+    * `artifactDir/thr`), admitting `w_avg_milli ≥ thr` rows to the
+    * batch-id-keyed idempotent output.
+    *
+    * Unlike the dedup admission loops this one is STATELESS — the
+    * artifacts are read-only and a doc's verdict is a pure function of
+    * them (the incremental operator's spec-pinned purity) — so replay
+    * safety needs no frontier guard: a replayed batch re-derives
+    * byte-identical admissions and the `_SUCCESS`-gated writer keeps the
+    * committed dir verbatim. Per-batch cost is one broadcast join
+    * against the ≤buckets-row weight table plus a partial-aggregated
+    * groupBy — O(batch), the artifacts never rescan.
+    */
   def importanceAdmissionStream(spark: SparkSession, inDir: String,
                                 artifactDir: String, outDir: String,
                                 ckptDir: String,
                                 buckets: Int = 4096): Unit = {
     val stream = spark.readStream.schema(StreamingDedup.docSchema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
+    ArtifactLoop.run(stream, ckptDir) { (batch, batchId) =>
       val sess = batch.sparkSession
       // plain read, no checkpoint: the weight table is consumed exactly
       // once per batch (the scoring join), so materializing it would add
@@ -375,8 +334,7 @@ object StreamingPack {
           graft.operators.Curation.importanceScores(wide, wt, buckets)
             .filter(org.apache.spark.sql.functions.col("w_avg_milli") >= t)
       }
-      StreamingDedup.writeOutputBatch(admitted, outDir, batchId)
+      ArtifactLoop.writeOutputBatch(admitted, outDir, batchId)
     }
-    StreamingDedup.runAdmissionLoop(stream, ckptDir, step)
   }
 }

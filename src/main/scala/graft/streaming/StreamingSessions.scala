@@ -183,79 +183,80 @@ object StreamingSessions {
                             statePartitions: Int = 4): DataFrame = {
     val spark = events.sparkSession
     val root = writeReplaySlices(events, jitterUs, slices)
-    val inDir = root.resolve("in")
-    val src = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    val sinkName = "graft_ooo_sink"
-    spark.catalog.dropTempView(sinkName)
     // state-store commit cost is per (partition x micro-batch) and the
     // per-batch volume here is small: scope the stateful query to a few
     // state partitions (the setting is baked into the fresh checkpoint,
     // so it is per-replay; a production deployment sizes this to
-    // sustained throughput instead). Every mutated conf is snapshotted
-    // and restored — the harness must not leak session state.
-    val mutatedKeys = Seq(
-      "spark.sql.shuffle.partitions",
-      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition",
-      "spark.sql.streaming.stateStore.providerClass",
-      "spark.sql.streaming.noDataMicroBatches.enabled")
-    val snapshot = mutatedKeys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    spark.conf.set("spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
-    // load-bearing for the single-sentinel design: the final sessions
-    // emit in the no-data micro-batch AvailableNow runs after the
-    // sentinel raised the watermark. Default true, but a session that
-    // disabled it would silently drop the append-mode tail — pin it.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    // RocksDB state store: halves replay wall-clock vs the HDFS-backed
-    // provider here (per-batch delta-file commit overhead dominates at
-    // micro-batch sizes), and is the provider a production deployment
-    // of large session state runs anyway. Exception: chained stateful
-    // operators (session agg → streaming dedup) trip a RocksDB provider
-    // assertion in Spark 4.1 ("Can only upgrade readStore to writeStore
-    // with the same stateStoreId") when two stateful exec nodes share a
-    // task — those callers keep the default HDFS-backed provider.
-    if (useRocksDb)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // sustained throughput instead).
+    //  - merge.sessions.in.local.partition: pre-merge sessions map-side;
+    //  - noDataMicroBatches: load-bearing for the single-sentinel design —
+    //    the final sessions emit in the no-data micro-batch AvailableNow
+    //    runs after the sentinel raised the watermark. Default true, but
+    //    a session that disabled it would silently drop the append-mode
+    //    tail — pin it;
+    //  - RocksDB state store: halves replay wall-clock vs the HDFS-backed
+    //    provider here (per-batch delta-file commit overhead dominates at
+    //    micro-batch sizes), and is the provider a production deployment
+    //    of large session state runs anyway. Exception: chained stateful
+    //    operators (session agg → streaming dedup) trip a RocksDB provider
+    //    assertion in Spark 4.1 ("Can only upgrade readStore to writeStore
+    //    with the same stateStoreId") when two stateful exec nodes share a
+    //    task — those callers keep the session's provider.
+    val conf = Seq(
+      "spark.sql.shuffle.partitions" -> statePartitions.toString,
+      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition" -> "true",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") ++
+      (if (useRocksDb) Seq(StateStoreProvider -> RocksDbProvider) else Nil)
+    val sunk = replayToMemory(spark, root, "graft_ooo_sink", conf) {
+      statefulStage(spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", "1").parquet(root.resolve("in").toString))
+    }
+    // a stage whose output keeps no user_id column has already excluded
+    // the sentinel itself (see the replayStageOutOfOrder contract)
     val result =
-      try {
-        val t0 = System.nanoTime()
-        val q = statefulStage(src).writeStream
-          .format("memory").queryName(sinkName).outputMode("append")
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // opt-in dev instrumentation: per-micro-batch duration breakdown
-        // (the fixed cost the replay-harness bench entries pay) — set
-        // GRAFT_REPLAY_PROGRESS=1; numbers land in ARCHITECTURE.md
-        if (sys.env.contains("GRAFT_REPLAY_PROGRESS")) {
-          println(f"[replay-stream] total ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          q.recentProgress.foreach(p => println(
-            s"[replay-batch] id=${p.batchId} rows=${p.numInputRows} " +
-              s"durationMs=${p.durationMs}"))
-        }
-        // memory sink rows live on the driver: snapshot them into a local
-        // frame so the replay's temp dirs (input files + checkpoint) can
-        // be deleted before returning. A stage whose output keeps no
-        // user_id column has already excluded the sentinel itself (see
-        // the replayStageOutOfOrder contract).
-        val sunk = spark.table(sinkName)
-        (if (sunk.columns.contains("user_id"))
-          sunk.filter(!(col("user_id") <=> lit(FlushUser)))
-        else sunk).localCheckpoint()
-      } finally {
-        snapshot.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-        deleteRecursively(root)
-      }
+      if (sunk.columns.contains("user_id"))
+        sunk.filter(!(col("user_id") <=> lit(FlushUser)))
+      else sunk
     // deterministic order over whatever schema the stage left
     result.orderBy(Seq("user_id", "session_start", "w_start", "day", "event_type")
       .filter(result.columns.contains).map(col): _*)
   }
+
+  private[streaming] val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+  private[streaming] val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The memory-sink runner behind the replay harnesses: build the
+    * replay query with `conf` set on the caller's session, start it into
+    * the memory sink `sinkName`, and restore the conf as soon as
+    * `start()` returns — the query keeps the session it cloned at
+    * construction, so a concurrent query on the caller's session sees
+    * the replay's settings only while this one is being built, never for
+    * its drain. Drains (`Trigger.AvailableNow`, checkpoint under `root`),
+    * then snapshots the sink rows — they live on the driver — into a
+    * local frame and deletes `root` (input files + checkpoint).
+    */
+  private[streaming] def replayToMemory(spark: org.apache.spark.sql.SparkSession,
+      root: java.nio.file.Path, sinkName: String, conf: Seq[(String, String)])(
+      query: => DataFrame): DataFrame =
+    try {
+      spark.catalog.dropTempView(sinkName)
+      val snapshot = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      val q =
+        try {
+          conf.foreach { case (k, v) => spark.conf.set(k, v) }
+          query.writeStream
+            .format("memory").queryName(sinkName).outputMode("append")
+            .option("checkpointLocation", root.resolve("ckpt").toString)
+            .trigger(Trigger.AvailableNow())
+            .start()
+        } finally snapshot.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      q.awaitTermination()
+      spark.table(sinkName).localCheckpoint()
+    } finally deleteRecursively(root)
 
   /** Sliding-window replay twin of
     * [[graft.operators.Relational.slidingActivity]] (1-day windows every
@@ -600,34 +601,14 @@ object StreamingSessions {
       col("session_sum")), lit(2)) === 0).toDF(), inDir, 1)
     appendReplayFile(sessions.filter(pmod(xxhash64(col("user_id"),
       col("session_sum")), lit(2)) === 1).toDF(), inDir, 2)
-    val mutated = Seq("spark.sql.streaming.stateStore.providerClass",
-      "spark.sql.shuffle.partitions")
-    val snapshot = mutated.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val sinkName = "graft_tws_sink"
-    spark.catalog.dropTempView(sinkName)
-    try {
-      val src = spark.readStream
+    replayToMemory(spark, root, "graft_tws_sink", Seq(
+      StateStoreProvider -> RocksDbProvider,
+      "spark.sql.shuffle.partitions" -> "4")) {
+      alertOnceTws(spark.readStream
         .schema(org.apache.spark.sql.Encoders.product[AlertInput].schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-        .as[AlertInput]
-      val q = alertOnceTws(src, threshold).writeStream
-        .format("memory").queryName(sinkName).outputMode("append")
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(sinkName).select(col("user_id")).localCheckpoint()
-        .orderBy(col("user_id"))
-    } finally {
-      snapshot.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      deleteRecursively(root)
-    }
+        .as[AlertInput], threshold).toDF()
+    }.select(col("user_id")).orderBy(col("user_id"))
   }
 }
 
@@ -754,32 +735,12 @@ object FunnelCoverage {
       slim.filter(pmod(xxhash64(col("event_id")), lit(2)) === 0), inDir, 1)
     StreamingSessions.appendReplayFile(
       slim.filter(pmod(xxhash64(col("event_id")), lit(2)) === 1), inDir, 2)
-    val mutated = Seq("spark.sql.streaming.stateStore.providerClass",
-      "spark.sql.shuffle.partitions")
-    val snapshot = mutated.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val sinkName = "graft_funnel_sink"
-    spark.catalog.dropTempView(sinkName)
-    try {
-      val src = spark.readStream.schema(slim.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val q = coverageStream(src, steps).writeStream
-        .format("memory").queryName(sinkName).outputMode("append")
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(sinkName).select(col("user_id")).localCheckpoint()
-        .orderBy(col("user_id"))
-    } finally {
-      snapshot.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      StreamingSessions.deleteRecursively(root)
-    }
+    StreamingSessions.replayToMemory(spark, root, "graft_funnel_sink", Seq(
+      StreamingSessions.StateStoreProvider -> StreamingSessions.RocksDbProvider,
+      "spark.sql.shuffle.partitions" -> "4")) {
+      coverageStream(spark.readStream.schema(slim.schema)
+        .option("maxFilesPerTrigger", "1").parquet(inDir.toString), steps).toDF()
+    }.select(col("user_id")).orderBy(col("user_id"))
   }
 }
 

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Sketches
 
@@ -16,8 +15,8 @@ import graft.operators.Sketches
   *
   * `foreachBatch` is the right Spark shape: the fold is an arbitrary
   * batch join/aggregate against driver-held state, not a keyed
-  * per-row update — the same pattern as the dedup admission loops
-  * ([[StreamingDedup]]). Because the merge is an exactly-associative
+  * per-row update — every fold here is an [[ArtifactLoop]] step, like
+  * the admission loops. Because the merge is an exactly-associative
   * integer vector add, ANY batching of the input lands on the same
   * artifact — `StreamingSpec` pins artifact-after-N-batches ≡ one-shot
   * build, and the drift readout therefore shares `value_drift_daily`'s
@@ -31,38 +30,13 @@ import graft.operators.Sketches
 object StreamingSketches {
 
   /** Replay `events` through the incremental histogram maintainer:
-    * deterministic `nBatches`-way split on `xxhash64(event_id)`, one
-    * parquet file per micro-batch (mtime-ordered), fold each batch into
-    * the artifact with [[graft.operators.Sketches.valueHistDailyUpdate]].
-    * Returns the FINAL artifact table; `localCheckpoint` per fold keeps
-    * lineage O(1) in the number of batches.
+    * deterministic `nBatches`-way split on `xxhash64(event_id)`, each
+    * batch folded into the artifact with
+    * [[graft.operators.Sketches.valueHistDailyUpdate]] ([[replayDocFold]]).
     */
-  def replayHistDaily(events: DataFrame, nBatches: Int = 4): DataFrame = {
-    val spark = events.sparkSession
-    val root = java.nio.file.Files.createTempDirectory("graft_drift_")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    (0 until nBatches).foreach { i =>
-      StreamingSessions.appendReplayFile(
-        events.filter(pmod(xxhash64(col("event_id")), lit(nBatches)) === i),
-        inDir, i + 1)
-    }
-    var state = Sketches.valueHistDailyState(events.limit(0)).localCheckpoint()
-    val src = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    // scope the fold's exchanges to a few partitions — the
-    // StreamingDedup.runAdmissionLoop discipline (guide §2.2)
-    StreamingDedup.withFoldPartitions(spark) {
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          state = Sketches.valueHistDailyUpdate(state, batch).localCheckpoint()
-        }
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    state
-  }
+  def replayHistDaily(events: DataFrame, nBatches: Int = 4): DataFrame =
+    replayDocFold(events, nBatches, Sketches.valueHistDailyState,
+      Sketches.valueHistDailyUpdate, hashSplit("event_id"))
 
   /** The streaming drift monitor end-to-end: incremental artifact
     * maintenance over the replay, then the artifact-only drift readout —
@@ -89,63 +63,60 @@ object StreamingSketches {
     // eroding the bound — so the 2-batch shape is a contract, not a default
     require(nBatches == 2,
       s"replayQDigest is gate-priced for exactly 2 batches, got $nBatches")
-    val spark = events.sparkSession
-    val root = java.nio.file.Files.createTempDirectory("graft_qd_")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    (0 until nBatches).foreach { i =>
-      StreamingSessions.appendReplayFile(
-        events.filter(pmod(col("event_id"), lit(nBatches)) === i), inDir, i + 1)
-    }
-    var state = Sketches.qdigestState(events.limit(0), sigma)
-    val src = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    // scope the fold's exchanges to a few partitions — the
-    // StreamingDedup.runAdmissionLoop discipline (guide §2.2)
-    StreamingDedup.withFoldPartitions(spark) {
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          state = Sketches.qdigestUpdate(state, batch, sigma)
-        }
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    state
+    replayDocFold(events, nBatches, Sketches.qdigestState(_, sigma),
+      Sketches.qdigestUpdate(_, _, sigma), modSplit("event_id"))
   }
 
-  /** Generic document-stream fold: split `documents` into `nBatches`
-    * deterministic micro-batches and fold each into an artifact with
-    * `step` — the shared harness behind the Count-Min, Misra–Gries and
-    * HLL streamed maintainers.
+  /** `xxhash64(idCol) mod n` — the default deterministic batch split. */
+  private def hashSplit(idCol: String)(i: Int, n: Int): Column =
+    pmod(xxhash64(col(idCol)), lit(n)) === i
+
+  /** `idCol mod n` — the engine-portable split the q-digest oracle and
+    * the SQ8 maintainer replay.
     */
-  private def replayDocFold(documents: DataFrame, nBatches: Int,
-                            empty: DataFrame,
-                            step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    val root = java.nio.file.Files.createTempDirectory("graft_fold_")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
+  private def modSplit(idCol: String)(i: Int, n: Int): Column =
+    pmod(col(idCol), lit(n)) === i
+
+  /** Write the `nBatches` slices of `documents` (`split(i, nBatches)`) as
+    * mtime-ordered replay files under `inDir`, one micro-batch each.
+    */
+  private def writeSplit(documents: DataFrame, inDir: java.nio.file.Path,
+                         nBatches: Int, split: (Int, Int) => Column): Unit = {
+    java.nio.file.Files.createDirectories(inDir)
     (0 until nBatches).foreach { i =>
       StreamingSessions.appendReplayFile(
-        documents.filter(pmod(xxhash64(col("doc_id")), lit(nBatches)) === i),
-        inDir, i + 1)
+        documents.filter(split(i, nBatches)), inDir, i + 1)
     }
-    var state = empty.localCheckpoint()
-    val src = spark.readStream.schema(documents.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    // scope the fold's exchanges to a few partitions — the
-    // StreamingDedup.runAdmissionLoop discipline (guide §2.2)
-    StreamingDedup.withFoldPartitions(spark) {
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          state = step(state, batch).localCheckpoint()
-        }
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    state
+  }
+
+  /** Generic in-memory fold: split `documents` into `nBatches`
+    * deterministic micro-batches and fold each into an artifact with
+    * `step` — the shared harness behind the drift, q-digest, Count-Min,
+    * Misra–Gries and HLL streamed maintainers. `empty` maps an empty
+    * input frame to the empty artifact. The state is built from the
+    * first batch's own frame, so every fold runs on the stream's session
+    * ([[ArtifactLoop]]), and `localCheckpoint` per fold keeps lineage
+    * O(1) in the number of batches. The result is materialized, so the
+    * temp root (input split + checkpoint) is deleted before returning;
+    * it stays on the stream's session, so readouts rooted on it run at
+    * the fold partition count too.
+    */
+  private def replayDocFold(documents: DataFrame, nBatches: Int,
+                            empty: DataFrame => DataFrame,
+                            step: (DataFrame, DataFrame) => DataFrame,
+                            split: (Int, Int) => Column = hashSplit("doc_id")): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory("graft_fold_")
+    try {
+      writeSplit(documents, root.resolve("in"), nBatches, split)
+      var state: Option[DataFrame] = None
+      ArtifactLoop.run(documents.sparkSession.readStream.schema(documents.schema)
+        .option("maxFilesPerTrigger", "1").parquet(root.resolve("in").toString),
+        root.resolve("ckpt").toString) { (batch, _) =>
+        val prev = state.getOrElse(empty(batch.limit(0)))
+        state = Some(step(prev, batch).localCheckpoint())
+      }
+      state.getOrElse(empty(documents.limit(0)).localCheckpoint())
+    } finally StreamingSessions.deleteRecursively(root)
   }
 
   /** Streamed Misra–Gries maintenance: per-batch summaries folded with
@@ -155,9 +126,8 @@ object StreamingSketches {
     */
   def replayHeavyHitters(documents: DataFrame, nBatches: Int = 3,
                          k: Int = 8): DataFrame =
-    replayDocFold(documents, nBatches,
-      Sketches.heavyHitterState(documents.limit(0), k),
-      (st, b) => Sketches.heavyHitterUpdate(st, b, k))
+    replayDocFold(documents, nBatches, Sketches.heavyHitterState(_, k),
+      Sketches.heavyHitterUpdate(_, _, k))
 
   /** Streamed HLL vocabulary maintenance: per-batch sketches folded with
     * `hll_union_agg` ([[graft.operators.Sketches.vocabSketchUpdate]]) —
@@ -165,9 +135,8 @@ object StreamingSketches {
     * one-shot build (`StreamingSpec` pins it).
     */
   def replayVocabSketch(documents: DataFrame, nBatches: Int = 3): DataFrame =
-    replayDocFold(documents, nBatches,
-      Sketches.vocabSketchState(documents.limit(0)),
-      (st, b) => Sketches.vocabSketchUpdate(st, b))
+    replayDocFold(documents, nBatches, Sketches.vocabSketchState,
+      Sketches.vocabSketchUpdate)
 
   /** Streamed Count-Min maintenance: fold each document micro-batch into
     * the (row, col, cnt) artifact with
@@ -177,9 +146,8 @@ object StreamingSketches {
     * from the streamed artifact shares `vocab_cmsketch`'s oracle.
     */
   def replayCmSketch(documents: DataFrame, nBatches: Int = 3): DataFrame =
-    replayDocFold(documents, nBatches,
-      Sketches.cmsketchState(documents.limit(0)),
-      (st, b) => Sketches.cmsketchUpdate(st, b))
+    replayDocFold(documents, nBatches, Sketches.cmsketchState(_),
+      Sketches.cmsketchUpdate(_, _))
 
   /** Count-Min maintenance with the artifact PERSISTED to a parquet table
     * per micro-batch — the production shape the `localCheckpoint`
@@ -210,8 +178,7 @@ object StreamingSketches {
                               nBatches: Int = 3,
                               failAfterBatch: Int = -1): DataFrame =
     replayDocFoldPersisted(documents, root, nBatches, failAfterBatch,
-      Sketches.cmsketchState(documents.limit(0)),
-      (st, b) => Sketches.cmsketchUpdate(st, b))
+      Sketches.cmsketchState(_), Sketches.cmsketchUpdate(_, _))
 
   /** Misra–Gries maintenance with the artifact persisted per micro-batch —
     * the [[replayCmSketchPersisted]] pattern ported to the second
@@ -229,8 +196,7 @@ object StreamingSketches {
                                   nBatches: Int = 3, k: Int = 8,
                                   failAfterBatch: Int = -1): DataFrame =
     replayDocFoldPersisted(documents, root, nBatches, failAfterBatch,
-      Sketches.heavyHitterState(documents.limit(0), k),
-      (st, b) => Sketches.heavyHitterUpdate(st, b, k))
+      Sketches.heavyHitterState(_, k), Sketches.heavyHitterUpdate(_, _, k))
 
   /** q-digest maintenance with the artifact persisted per micro-batch —
     * the versioned-parquet crash-recovery pattern ported to the one
@@ -254,9 +220,8 @@ object StreamingSketches {
                              sigma: Int = 256,
                              failAfterBatch: Int = -1): DataFrame =
     replayDocFoldPersisted(events, root, nBatches = 2, failAfterBatch,
-      Sketches.qdigestState(events.limit(0), sigma),
-      (st, b) => Sketches.qdigestUpdate(st, b, sigma),
-      (i, n) => pmod(col("event_id"), lit(n)) === i)
+      Sketches.qdigestState(_, sigma), Sketches.qdigestUpdate(_, _, sigma),
+      modSplit("event_id"))
 
   /** Streaming SQ8 index maintenance: the code TABLE as the persisted
     * artifact — bounds freeze over the stored corpus (first 4/5 of
@@ -280,9 +245,9 @@ object StreamingSketches {
       Similarity.sqTrainBounds(embeddings.filter(col("vec_id") < cut))
     replayDocFoldPersisted(embeddings.filter(col("vec_id") >= cut),
       root, nBatches, failAfterBatch,
-      Similarity.sqEncodeWithBounds(embeddings.limit(0), mins, maxs),
+      Similarity.sqEncodeWithBounds(_, mins, maxs),
       (st, b) => st.unionByName(Similarity.sqEncodeWithBounds(b, mins, maxs)),
-      (i, n) => pmod(col("vec_id"), lit(n)) === i)
+      modSplit("vec_id"))
       .orderBy(col("vec_id"))
   }
 
@@ -308,20 +273,15 @@ object StreamingSketches {
   private def replayDocFoldPersisted(documents: DataFrame,
                                      root: java.nio.file.Path,
                                      nBatches: Int, failAfterBatch: Int,
-                                     empty: => DataFrame,
+                                     empty: DataFrame => DataFrame,
                                      step: (DataFrame, DataFrame) => DataFrame,
-                                     split: (Int, Int) => org.apache.spark.sql.Column =
-                                       (i, n) => pmod(xxhash64(col("doc_id")), lit(n)) === i): DataFrame = {
+                                     split: (Int, Int) => Column = hashSplit("doc_id")): DataFrame = {
     val spark = documents.sparkSession
     val inDir = root.resolve("in")
     val artDir = root.resolve("artifact")
     val marker = root.resolve("nbatches")
     if (!java.nio.file.Files.exists(inDir)) {
-      java.nio.file.Files.createDirectories(inDir)
-      (0 until nBatches).foreach { i =>
-        StreamingSessions.appendReplayFile(
-          documents.filter(split(i, nBatches)), inDir, i + 1)
-      }
+      writeSplit(documents, inDir, nBatches, split)
       java.nio.file.Files.write(marker, nBatches.toString.getBytes("UTF-8"))
     } else {
       val stored =
@@ -334,30 +294,21 @@ object StreamingSketches {
           "would not match this run; use a fresh root")
     }
     if (!java.nio.file.Files.exists(artDir.resolve("v0")))
-      empty.write.mode("overwrite").parquet(artDir.resolve("v0").toString)
-    val src = spark.readStream.schema(documents.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    // scope the fold's exchanges to a few partitions — the
-    // StreamingDedup.runAdmissionLoop discipline (guide §2.2)
-    StreamingDedup.withFoldPartitions(spark) {
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val ss = batch.sparkSession
-          val prev = ss.read.parquet(artDir.resolve(s"v$bid").toString)
-          step(prev, batch)
-            .write.mode("overwrite")
-            .parquet(artDir.resolve(s"v${bid + 1}").toString)
-          // injected crash AFTER the artifact write, BEFORE the offset
-          // commit — the harder recovery case: the replayed batch must
-          // overwrite v{bid+1} with a bit-identical table
-          if (bid + 1 == failAfterBatch)
-            throw new IllegalStateException(
-              s"injected crash after persisting v${bid + 1}")
-        }
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      empty(documents.limit(0)).write.mode("overwrite")
+        .parquet(artDir.resolve("v0").toString)
+    ArtifactLoop.run(spark.readStream.schema(documents.schema)
+      .option("maxFilesPerTrigger", "1").parquet(inDir.toString),
+      root.resolve("ckpt").toString) { (batch, bid) =>
+      val prev = batch.sparkSession.read.parquet(artDir.resolve(s"v$bid").toString)
+      step(prev, batch)
+        .write.mode("overwrite")
+        .parquet(artDir.resolve(s"v${bid + 1}").toString)
+      // injected crash AFTER the artifact write, BEFORE the offset
+      // commit — the harder recovery case: the replayed batch must
+      // overwrite v{bid+1} with a bit-identical table
+      if (bid + 1 == failAfterBatch)
+        throw new IllegalStateException(
+          s"injected crash after persisting v${bid + 1}")
     }
     spark.read.parquet(artDir.resolve(s"v$nBatches").toString)
   }
