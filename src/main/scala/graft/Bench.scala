@@ -1,42 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // session warmup: scheduler + codegen + parquet footer paths, so the
-    // first timed query doesn't absorb startup cost
-    spark.range(1000).selectExpr("sum(id)").collect()
-    SparkEntry.entry(spark).count()
-    // streaming warmup: the first streaming query in a session pays ~4 s
-    // of engine init (state-store provider load, streaming codegen,
-    // micro-batch scheduler) that is per-JVM, not per-query — amortize it
-    // here the same way the batch warmup amortizes scheduler/codegen init.
-    // Synthetic in-memory events: no fixture-path dependency, and a
-    // warmup failure must not abort the timed run.
-    try {
-      import org.apache.spark.sql.functions._
-      val synth = spark.range(1000).select(
-        col("id").as("event_id"),
-        timestamp_micros(lit(1704067200000000L) + col("id") * 1000000L).as("ts"),
-        pmod(col("id"), lit(20)).as("user_id"),
-        lit("view").as("event_type"),
-        (col("id") % 100).cast("double").as("value"),
-        lit("{}").as("props"))
-      graft.streaming.StreamingSessions.replayOutOfOrder(synth, lit("30 seconds"))
-        .queryExecution.toRdd.count()
-    } catch { case scala.util.control.NonFatal(e) =>
-      // fatal JVM errors (OOM, linkage) must still abort — timings from
-      // a corrupted JVM would look legitimate
-      System.err.println(s"[bench] streaming warmup failed: ${e.getMessage}")
-    }
+    val spark = SparkEntry.session()
+    SparkEntry.warmup(spark)
     // fixed name order: cross-round timings stay comparable and cache
     // effects between related queries don't reshuffle per run; optional
     // args = query-name filter (dev iteration only — the driver passes none)
@@ -54,12 +21,7 @@ object Bench {
       val times = (0 until repeat).map { i =>
         // free the previous iteration's leaked blocks BETWEEN repeats too,
         // or iteration 2 measures iteration 1's cache pressure
-        if (i > 0) {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          System.gc() // same between-entries hygiene (see below), between repeats
-        }
+        if (i > 0) SparkEntry.cleanup(spark)
         val t0 = System.nanoTime()
         // toRdd.count() materializes every output column of the physical
         // plan (no projection pruning under count() — that would time a
@@ -68,26 +30,7 @@ object Bench {
                  catch { case _: Throwable => false }
         ((System.nanoTime() - t0) / 1e9, ok)
       }
-      // Drop the query's leaked storage before the next entry runs:
-      // `localCheckpoint` blocks (the ANN/dedup index artifacts) pin
-      // executor memory for the life of the SparkContext, and 185
-      // queries in one 8 GiB JVM accumulate enough of them that
-      // mid-run entries degrade up to ~5× vs the same query isolated
-      // (r12 measured: pipeline_multimodal 32.6 s in-run vs 6.8 s
-      // alone). A bench entry must not pay its predecessors' GC.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      // ... and collect it: Spark's ContextCleaner reclaims broadcast
-      // blocks, shuffle files and checkpoint state only when GC actually
-      // collects their weak references, and codegen'd classes unload only
-      // on a GC cycle. Left to its own schedule, the collector runs INSIDE
-      // a later entry's timed region and that entry pays its predecessors'
-      // garbage (r14 measured: multimodal_video_dups 9.9 s in-suite vs
-      // 4.5 s isolated, same code). An explicit GC here — between entries,
-      // outside every timed region — keeps each measurement the query's
-      // own cost. Standard benchmark hygiene (same rationale as the
-      // clearCache above), not a change to what any query computes.
-      System.gc()
+      SparkEntry.cleanup(spark)
       (name, times.map(_._1).min, times.forall(_._2), times.map(_._1).max)
     }
     val qs = results.map { case (k, v, ok, _) => "\"" + k + "\":" + (if (ok) v else -1.0) }

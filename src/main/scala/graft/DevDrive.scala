@@ -2,16 +2,13 @@ package graft
 
 // Scratch sample-code drive (dev aid): exercises the public library
 // surface the way an external user would.
-import org.apache.spark.sql.SparkSession
 
 object DevDrive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
+    graft.functions.ArrayOps.register(spark)
     import spark.implicits._
-    // 1. SQL-text path through extensions
+    // 1. SQL-text path through the runtime function registration
     println("graft_dot SQL = " + spark.sql(
       "SELECT graft_dot(array(1.0d,2.0d,3.0d), array(4.0d,5.0d,6.0d)) AS d")
       .collect().head.getDouble(0))

@@ -9,31 +9,22 @@ package graft
 //                   corpus never touched
 // and checks the estimates against the planted truth at the same
 // union-relative bound the oracle gate uses (5%). Args: [nSrc] [vocab].
-import org.apache.spark.sql.SparkSession
+// The ARCHITECTURE.md rows were taken at 32 cores: set SPARK_GRAFT_CPUS=32
+// to re-run one (the session factory defaults to 4).
 import org.apache.spark.sql.functions._
 
 object DevOverlapScale {
   def main(args: Array[String]): Unit = {
     val nSrc = args.headOption.map(_.toInt).getOrElse(1000)
     val v = args.drop(1).headOption.map(_.toInt).getOrElse(100000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     val step = v / 2 // adjacent sources overlap exactly v/2 tokens
     val toks = spark.range(nSrc.toLong * v).select(
       concat(lit("s"), lpad(expr(s"id div $v").cast("string"), 4, "0"))
         .as("source"),
       concat(lit("t"), expr(s"id div $v") * step + pmod(col("id"), lit(v)))
         .as("tok"))
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[overlap-scale] $name%-14s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
+    import Profile.time
     val lgK = args.drop(2).headOption.map(_.toInt).getOrElse(12)
     val state = time("state_build") {
       val st = toks.groupBy(col("source"))

@@ -14,22 +14,16 @@ package graft
 // still produce the plan of the frame the bench times — which is exactly
 // the contract: the captured plan is the plan of the DataFrame whose
 // `toRdd.count()` the bench measures.
-import org.apache.spark.sql.SparkSession
 
 object DevPlans {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: DevPlans <tag> <suffix> [query ...]")
     val (tag, suffix) = (args(0), args(1))
-    // Defaults MATCH Bench (cpus=4, sf0.1): the captured plan is the plan
+    // Bench's session and default sf0.1: the captured plan is the plan
     // the bench executes — stats-driven join choices and partition counts
-    // depend on both knobs, so diverging defaults here would capture a
-    // plan the bench never runs (advisor finding, r14).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // depend on both, so a different session here would capture a plan
+    // the bench never runs.
+    val spark = SparkEntry.session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(outDir)

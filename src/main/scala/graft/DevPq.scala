@@ -3,15 +3,11 @@ package graft
 // Scratch diagnostic (dev aid): PQ reconstruction quality — ADC
 // self-score of each vector against its own codes should approach 1.0
 // if the codebooks capture the subvector geometry.
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 object DevPq {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.session()
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val diag = graft.operators.Similarity.pqSelfScores(emb)
     diag.agg(min(col("self_score")), avg(col("self_score")),

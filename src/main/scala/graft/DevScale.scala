@@ -1,9 +1,11 @@
 package graft
 
 // Scratch scale harness (dev aid): drives the session engine over a
-// synthetic 10M-row event stream on local[32] to measure throughput and
-// confirm the plan survives a 100×-rows scale-up of the bench table.
-import org.apache.spark.sql.SparkSession
+// synthetic 10M-row event stream on local[SPARK_GRAFT_CPUS] to measure
+// throughput and confirm the plan survives a 100×-rows scale-up of the
+// bench table.
+// The ARCHITECTURE.md rows were taken at 32 cores: set SPARK_GRAFT_CPUS=32
+// to re-run one (the session factory defaults to 4).
 import org.apache.spark.sql.functions._
 
 import graft.operators.Sessions
@@ -12,12 +14,7 @@ object DevScale {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
     val users = 50000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     // deterministic synthetic stream: n events, `users` tenants, uniform
     // over 30 days (inter-event gap/user ≈ 13 min at 10M/50k)
     val startMicros = 1704067200000000L // 2024-01-01 UTC
@@ -34,12 +31,7 @@ object DevScale {
     // optional row filter (args after nEvents): run only the named rows
     val onlyRows = args.drop(1).toSet
     def time(name: String)(f: => Long): Unit =
-      if (onlyRows.isEmpty || onlyRows(name)) {
-        val t0 = System.nanoTime()
-        val rows = f
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"$name%-24s ${sec}%8.2f s  rows=$rows  (${n / sec}%,.0f events/s)")
-      }
+      if (onlyRows.isEmpty || onlyRows(name)) Profile.time(name, n, "events")(f)
     time("sessions_30min")(Sessions.sessionAgg(ev, lit("30 minutes")).count())
     time("sessions_dynamic")(Sessions.sessionAgg(ev, Sessions.scaledDynamicGap).count())
     time("big_customers")(Sessions.bigCustomers(
@@ -85,12 +77,7 @@ object DevScale {
     // the doc-row half of the same filter
     val only = onlyRows
     def timeDocs(name: String)(f: => Long): Unit =
-      if (only.isEmpty || only(name)) {
-        val t0 = System.nanoTime()
-        val rows = f
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"$name%-24s ${sec}%8.2f s  rows=$rows  (${nDocs / sec}%,.0f docs/s)")
-      }
+      if (only.isEmpty || only(name)) Profile.time(name, nDocs, "docs")(f)
     timeDocs("minhash_lsh_500k")(
       graft.operators.NearDup.minhashNearDups(dc).count())
     timeDocs("dedup_clusters_500k")(

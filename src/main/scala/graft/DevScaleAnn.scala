@@ -3,16 +3,12 @@ package graft
 // Focused ANN-at-scale harness (dev aid): times the PQ family over the
 // 500k-vector table DevScale writes to /tmp/scale_vecs, so the PQ rows
 // can be re-measured without the full 20-minute DevScale sweep.
-import org.apache.spark.sql.SparkSession
+// The ARCHITECTURE.md rows were taken at 32 cores: set SPARK_GRAFT_CPUS=32
+// to re-run one (the session factory defaults to 4).
 
 object DevScaleAnn {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     // "10m" = the order-of-magnitude-up residual audit: generate (once)
     // a 10M-vector table with DevScale's deterministic generator and run
     // the production composition on it — the row that proves the per-cell
@@ -58,10 +54,7 @@ object DevScaleAnn {
     val ve = spark.read.parquet(path)
     val n = ve.count()
     def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-26s ${sec}%8.2f s  rows=$rows  (${n / sec}%,.0f vecs/s)")
+      Profile.time(name, n, "vecs")(f)
       // each operator localCheckpoints multi-GB frames; without freeing
       // them between rows the LATER rows fight block eviction (at 10M the
       // 3rd query measured 3x its clean-JVM cost) — rows must be

@@ -4,24 +4,15 @@ package graft
 // triad's fuzzy/semantic members and DSIR importance resampling at 100×
 // bench scale (500k docs / 500k×64 vectors), same synthetic corpora as
 // DevScale so rows are comparable across rounds.
-import org.apache.spark.sql.SparkSession
+// The ARCHITECTURE.md rows were taken at 32 cores: set SPARK_GRAFT_CPUS=32
+// to re-run one (the session factory defaults to 4).
 import org.apache.spark.sql.functions._
 
 object DevScaleCuration {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s ${sec}%8.2f s  rows=$rows  (${nDocs / sec}%,.0f docs/s)")
-    }
+    val spark = SparkEntry.session()
+    def time(name: String)(f: => Long): Unit = Profile.time(name, nDocs, "docs")(f)
 
     // the DevScale 31-word doc corpus with 1% planted near-dup pairs
     // (id%100==1 copies id-1 with a one-token edit)

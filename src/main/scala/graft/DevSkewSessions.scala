@@ -17,19 +17,15 @@ package graft
 //
 // Results must agree exactly — the runner asserts salted ≡ builtin before
 // printing timings. Args: [nEvents] [hotPermille] ["timer"]
-import org.apache.spark.sql.SparkSession
+// The ARCHITECTURE.md rows were taken at 32 cores: set SPARK_GRAFT_CPUS=32
+// to re-run one (the session factory defaults to 4).
 import org.apache.spark.sql.functions._
 
 object DevSkewSessions {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
     val hotPermille = args.drop(1).headOption.map(_.toInt).getOrElse(900)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     val startMicros = 1704067200000000L
     val spanMicros = 30L * 86400000000L // 30 days
     val path = s"/tmp/skew_sess_events_${n}_$hotPermille"
@@ -50,10 +46,7 @@ object DevSkewSessions {
     println(s"[skewsess] n=$n hot=${hotPermille}‰ skew_ratio=${prof.getAs[Double]("skew_ratio")} " +
       s"max_key_rows=${prof.getAs[Long]("max_key_rows")} needs_salting=${prof.getAs[Boolean]("needs_salting")}")
     def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[skewsess] $name%-18s ${sec}%8.2f s  rows=$rows  (${n / sec}%,.0f events/s)")
+      Profile.time(name, n, "events")(f)
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     }
     // 30 s gap on a 90%-hot 10M/30-day corpus ⇒ the hot user's mean

@@ -3,17 +3,11 @@ package graft
 // One-off calibration: SQ8 / IVF-SQ8 hits@10 (20 queries) vs the exact
 // baseline at each fixture SF — the numbers the `ann_recall_floor`
 // floors are frozen against.
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 object DevSqRecall {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val emb = Tables.embeddings(spark, s"/root/testdata/$sf")
       val brute = graft.operators.Similarity.bruteForceTopK(emb, 20, 10)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sinks.ReportSink
@@ -19,14 +18,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val runSeconds = args.headOption.map(_.toInt).getOrElse(15)
     val rate = args.lift(1).map(_.toInt).getOrElse(500)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     println(ReportSink.header)
     val sessions = StreamingSessions.sessionAggStream(
       EventSource.syntheticStream(spark, rate), lit("5 seconds"))

@@ -786,8 +786,9 @@ object Sketches {
     */
   def qdigestGateIncremental(events: DataFrame, sigma: Int = 256,
                              qs: Seq[Int] = Seq(50, 90, 99)): DataFrame = {
-    val cut = events.agg(expr("(max(event_id) * 4) div 5").cast("long"))
-      .head().getLong(0)
+    val c = events.agg(expr("(max(event_id) * 4) div 5").cast("long")).head()
+    // empty input has no cut: both halves are empty, the gate emits 0 rows
+    val cut = if (c.isNullAt(0)) 0L else c.getLong(0)
     val merged = qdigestUpdate(
       qdigestState(events.filter(col("event_id") < cut), sigma),
       events.filter(col("event_id") >= cut), sigma)

@@ -7,15 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.{ArrayDotProduct, MinHashBandKeys, MinHashSignature, SimHash64, WordShingles}
 
 /** Catalyst integration point: registers graft's native expressions with a
-  * SparkSession at build time —
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)
-  *   ...
-  * }}}
-  *
-  * or via config (cluster deployments, no code change):
+  * SparkSession at build time, through the session builder's
+  * `.withExtensions(new GraftExtensions)`, or via config (cluster
+  * deployments, no code change):
   * `spark.sql.extensions=graft.plans.GraftExtensions`. After registration
   * the full `graft_*` family — `graft_dot`, `graft_shingles`,
   * `graft_minhash`, `graft_bandkeys`, `graft_simhash` — is available from

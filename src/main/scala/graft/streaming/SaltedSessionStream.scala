@@ -218,14 +218,6 @@ object SaltedSessionStream {
         s"${jitterUs}µs for the early-close rule to be lossless")
     val spark = events.sparkSession
     val root = StreamingSessions.writeReplaySlices(events, jitterUs, slices)
-    // harness-side partitioning: a replay slice is ONE file, and the file
-    // source splits it only at maxPartitionBytes — lower the split size
-    // for the replay so the per-batch scan parallelizes instead of
-    // funneling through one task (snapshot/restore, the
-    // replayStageOutOfOrder conf discipline)
-    val mpbKey = "spark.sql.files.maxPartitionBytes"
-    val mpbSnapshot = spark.conf.getOption(mpbKey)
-    spark.conf.set(mpbKey, (16L << 20).toString)
     try {
       run(spark, root.resolve("in").toString, root.resolve("state").toString,
         root.resolve("out").toString, root.resolve("ckpt").toString,
@@ -234,12 +226,6 @@ object SaltedSessionStream {
         .filter(!(col("user_id") <=> lit(StreamingSessions.FlushUser)))
         .orderBy(col("user_id"), col("session_start"))
         .localCheckpoint()
-    } finally {
-      mpbSnapshot match {
-        case Some(v) => spark.conf.set(mpbKey, v)
-        case None => spark.conf.unset(mpbKey)
-      }
-      StreamingSessions.deleteRecursively(root)
-    }
+    } finally StreamingSessions.deleteRecursively(root)
   }
 }

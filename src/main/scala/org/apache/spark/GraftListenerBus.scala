@@ -1,9 +1,9 @@
 package org.apache.spark
 
 /** Waits until every listener event posted so far has been delivered, so
-  * a spec reads complete stage records. The bus is package-private in
-  * Spark; this one-line bridge lives in the tests, not the library.
+  * a reader of listener records ([[graft.Profile]], the specs) sees them
+  * complete. The bus is package-private in Spark; this is the one bridge.
   */
-object TestListenerBus {
+object GraftListenerBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

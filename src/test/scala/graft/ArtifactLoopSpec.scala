@@ -4,7 +4,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{ArtifactLoop, StreamingDedup, StreamingSessions, StreamingSketches}
+import graft.streaming.{ArtifactLoop, SaltedSessionStream, StreamingDedup, StreamingSessions, StreamingSketches}
 
 /** Task-side probe: records the CALLER's shuffle partitions each time a
   * row passes, from inside a running query (local mode shares the JVM).
@@ -15,12 +15,18 @@ object CallerConfProbe {
     seen.add(TestSpark.spark.conf.get("spark.sql.shuffle.partitions"))
     u
   })
+  /** The same for the caller's file split size. */
+  val split = udf((u: Long) => {
+    seen.add(TestSpark.spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    u
+  })
 }
 
 /** Pins the [[ArtifactLoop]] contract outside the loops themselves: a
   * loop runs on its query's own session at the fold partition count and
   * never writes the caller's conf; a memory-sink replay holds the
-  * caller's conf only while its query is built; and the replay harnesses
+  * caller's conf only while its query is built, and the salted session
+  * replay never writes the caller's split size; and the replay harnesses
   * leave no temp roots behind.
   */
 class ArtifactLoopSpec extends SparkSpec {
@@ -37,11 +43,11 @@ class ArtifactLoopSpec extends SparkSpec {
         if (e.stageInfo.taskMetrics.shuffleReadMetrics.recordsRead > 0)
           tasks.add(e.stageInfo.numTasks)
     }
-    org.apache.spark.TestListenerBus.drain(sc)
+    org.apache.spark.GraftListenerBus.drain(sc)
     sc.addSparkListener(listener)
     try {
       body
-      org.apache.spark.TestListenerBus.drain(sc)
+      org.apache.spark.GraftListenerBus.drain(sc)
     } finally sc.removeSparkListener(listener)
     tasks.toArray.toSeq.map(_.asInstanceOf[Int])
   }
@@ -99,6 +105,15 @@ class ArtifactLoopSpec extends SparkSpec {
       val during = CallerConfProbe.seen.toArray.toSet
       assert(during == Set("16"), during)
       assert(spark.conf.get(spKey) == "16")
+      // the salted session replay leaves the caller's split size alone: a
+      // probe in its gap expression reads the caller's own value
+      CallerConfProbe.seen.clear()
+      val callerSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
+      val salted = SaltedSessionStream.replaySaltedSessions(events,
+        concat(CallerConfProbe.split(lit(30L)).cast("string"), lit(" seconds")))
+      assert(salted.count() > 0)
+      val splitDuring = CallerConfProbe.seen.toArray.toSet
+      assert(splitDuring == Set(callerSplit), splitDuring)
     } finally StreamingSessions.deleteRecursively(root)
   }
 

@@ -129,6 +129,12 @@ class EdgeCaseSpec extends SparkSpec {
     assert(Curation.decontaminateBloom(emptyDocs).count() == 0)
   }
 
+  test("q-digest gates on an empty events table return the oracle's 0 rows") {
+    import graft.operators.Sketches
+    assert(Sketches.qdigestGate(emptyEvents).count() == 0)
+    assert(Sketches.qdigestGateIncremental(emptyEvents).count() == 0)
+  }
+
   test("wave-3 operators on empty / degenerate inputs") {
     import graft.functions.TextAnalysis
     import graft.operators.{Relational, Sketches}

@@ -21,4 +21,10 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
+
+  /** Run `body` on a fresh temp dir named `prefix…`, deleted afterwards. */
+  def withTempRoot[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    try body(root) finally graft.streaming.StreamingSessions.deleteRecursively(root)
+  }
 }

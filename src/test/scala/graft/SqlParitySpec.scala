@@ -45,6 +45,16 @@ class SqlParitySpec extends SparkSpec {
     }
   }
 
+  test("quantile_qdigest_sql and its twin agree on an empty events table: 0 rows, as the oracle") {
+    val empty = Tables.events(spark, dir).limit(0)
+    empty.createOrReplaceTempView("events")
+    val a = try spark.sql(RegistrySketches.qdigestSparkSql).collect().toSeq.map(_.toSeq)
+      finally Tables.registerAll(spark, dir)
+    val b = graft.operators.Sketches.qdigestGate(empty).collect().toSeq.map(_.toSeq)
+    assert(a == b, s"quantile_qdigest_sql rows $a differ from quantile_qdigest rows $b")
+    assert(a.isEmpty, a)
+  }
+
   test("every SQL-text query's rows equal its DataFrame twin's cell-for-cell") {
     twins.foreach { case (sqlName, dfName) =>
       val a = SparkEntry.queries(sqlName)(spark, dir).collect().toSeq.map(_.toSeq)

@@ -95,121 +95,127 @@ class StreamingSpec extends SparkSpec {
 
   test("persisted CM artifact survives a mid-stream crash: kill + restart, bit-identical") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val root = java.nio.file.Files.createTempDirectory("graft_cmrec_")
-    // run 1: injected crash AFTER batch 2's artifact write but BEFORE its
-    // offset commit — the replayed batch must overwrite v2 idempotently
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingSketches.replayCmSketchPersisted(docs, root, nBatches = 3,
-        failAfterBatch = 2)
+    withTempRoot("graft_cmrec_") { root =>
+      // run 1: injected crash AFTER batch 2's artifact write but BEFORE its
+      // offset commit — the replayed batch must overwrite v2 idempotently
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamingSketches.replayCmSketchPersisted(docs, root, nBatches = 3,
+          failAfterBatch = 2)
+      }
+      assert(ex.getMessage.contains("injected crash"),
+        s"unexpected failure mode: ${ex.getMessage.take(200)}")
+      // the crash left v0..v2 on disk and batch 1 uncommitted
+      assert(java.nio.file.Files.exists(root.resolve("artifact/v2")))
+      assert(!java.nio.file.Files.exists(root.resolve("artifact/v3")))
+      // run 2: same root, same checkpoint — resumes at the uncommitted
+      // batch, replays it against the PERSISTED v1, finishes the stream
+      val recovered = StreamingSketches.replayCmSketchPersisted(docs, root,
+        nBatches = 3).collect().map(_.toSeq).toSet
+      val oneShot = graft.operators.Sketches.cmsketchState(docs)
+        .collect().map(_.toSeq).toSet
+      assert(recovered == oneShot,
+        "crash-recovered persisted artifact must equal the one-shot build cell-for-cell")
+      // resume guard: the same root resumed with a DIFFERENT nBatches must
+      // fail fast — the stored input split and checkpoint belong to 3
+      assert(intercept[IllegalArgumentException] {
+        StreamingSketches.replayCmSketchPersisted(docs, root, nBatches = 4)
+      }.getMessage.contains("nBatches"))
     }
-    assert(ex.getMessage.contains("injected crash"),
-      s"unexpected failure mode: ${ex.getMessage.take(200)}")
-    // the crash left v0..v2 on disk and batch 1 uncommitted
-    assert(java.nio.file.Files.exists(root.resolve("artifact/v2")))
-    assert(!java.nio.file.Files.exists(root.resolve("artifact/v3")))
-    // run 2: same root, same checkpoint — resumes at the uncommitted
-    // batch, replays it against the PERSISTED v1, finishes the stream
-    val recovered = StreamingSketches.replayCmSketchPersisted(docs, root,
-      nBatches = 3).collect().map(_.toSeq).toSet
-    val oneShot = graft.operators.Sketches.cmsketchState(docs)
-      .collect().map(_.toSeq).toSet
-    assert(recovered == oneShot,
-      "crash-recovered persisted artifact must equal the one-shot build cell-for-cell")
-    // resume guard: the same root resumed with a DIFFERENT nBatches must
-    // fail fast — the stored input split and checkpoint belong to 3
-    assert(intercept[IllegalArgumentException] {
-      StreamingSketches.replayCmSketchPersisted(docs, root, nBatches = 4)
-    }.getMessage.contains("nBatches"))
   }
 
   test("persisted MG artifact survives a mid-stream crash: kill + restart, bit-identical") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val root = java.nio.file.Files.createTempDirectory("graft_hhrec_")
-    // run 1: injected crash AFTER batch 2's artifact write but BEFORE its
-    // offset commit — the replayed batch must overwrite v2 idempotently
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingSketches.replayHeavyHittersPersisted(docs, root, nBatches = 3,
-        failAfterBatch = 2)
+    withTempRoot("graft_hhrec_") { root =>
+      // run 1: injected crash AFTER batch 2's artifact write but BEFORE its
+      // offset commit — the replayed batch must overwrite v2 idempotently
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamingSketches.replayHeavyHittersPersisted(docs, root, nBatches = 3,
+          failAfterBatch = 2)
+      }
+      assert(ex.getMessage.contains("injected crash"),
+        s"unexpected failure mode: ${ex.getMessage.take(200)}")
+      assert(java.nio.file.Files.exists(root.resolve("artifact/v2")))
+      assert(!java.nio.file.Files.exists(root.resolve("artifact/v3")))
+      // run 2: same root, same checkpoint — resumes at the uncommitted batch,
+      // replays it against the PERSISTED v1, finishes the stream. MG counter
+      // values depend on the batching, so the reference is the LOCALLY-HELD
+      // fold over the same 3-way split (replayHeavyHitters), which the
+      // recovered persisted run must reproduce row-for-row
+      val recovered = StreamingSketches.replayHeavyHittersPersisted(docs, root,
+        nBatches = 3).collect().map(_.toSeq).toSet
+      val uninterrupted = StreamingSketches.replayHeavyHitters(docs, nBatches = 3)
+        .collect().map(_.toSeq).toSet
+      assert(recovered == uninterrupted,
+        "crash-recovered persisted MG artifact must equal the uninterrupted fold")
+      // and the theorem gate over it matches the one-shot gate (the
+      // batching-independent contract the vocab_hh_persist oracle relies on)
+      val gatePersist = withTempRoot("graft_hhrec2_") { root2 =>
+        graft.operators.Sketches
+          .heavyHitterGateFrom(StreamingSketches.replayHeavyHittersPersisted(
+            docs, root2), docs)
+          .collect().map(_.toSeq).toSeq
+      }
+      val gateOneShot = graft.operators.Sketches.heavyHitterGate(docs)
+        .collect().map(_.toSeq).toSeq
+      assert(gatePersist == gateOneShot,
+        "MG gate over the persisted artifact must be batching-independent")
     }
-    assert(ex.getMessage.contains("injected crash"),
-      s"unexpected failure mode: ${ex.getMessage.take(200)}")
-    assert(java.nio.file.Files.exists(root.resolve("artifact/v2")))
-    assert(!java.nio.file.Files.exists(root.resolve("artifact/v3")))
-    // run 2: same root, same checkpoint — resumes at the uncommitted batch,
-    // replays it against the PERSISTED v1, finishes the stream. MG counter
-    // values depend on the batching, so the reference is the LOCALLY-HELD
-    // fold over the same 3-way split (replayHeavyHitters), which the
-    // recovered persisted run must reproduce row-for-row
-    val recovered = StreamingSketches.replayHeavyHittersPersisted(docs, root,
-      nBatches = 3).collect().map(_.toSeq).toSet
-    val uninterrupted = StreamingSketches.replayHeavyHitters(docs, nBatches = 3)
-      .collect().map(_.toSeq).toSet
-    assert(recovered == uninterrupted,
-      "crash-recovered persisted MG artifact must equal the uninterrupted fold")
-    // and the theorem gate over it matches the one-shot gate (the
-    // batching-independent contract the vocab_hh_persist oracle relies on)
-    val gatePersist = graft.operators.Sketches
-      .heavyHitterGateFrom(StreamingSketches.replayHeavyHittersPersisted(
-        docs, java.nio.file.Files.createTempDirectory("graft_hhrec2_")), docs)
-      .collect().map(_.toSeq).toSeq
-    val gateOneShot = graft.operators.Sketches.heavyHitterGate(docs)
-      .collect().map(_.toSeq).toSeq
-    assert(gatePersist == gateOneShot,
-      "MG gate over the persisted artifact must be batching-independent")
   }
 
   test("persisted q-digest artifact survives a mid-stream crash and keeps the rank bound") {
     val events = Tables.events(spark, "/root/testdata/sf0.001")
-    val root = java.nio.file.Files.createTempDirectory("graft_qdrec_")
-    // run 1: injected crash AFTER batch 1's artifact write but BEFORE its
-    // offset commit — the replayed batch must overwrite v1 idempotently
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingSketches.replayQDigestPersisted(events, root,
-        failAfterBatch = 1)
-    }
-    assert(ex.getMessage.contains("injected crash"),
-      s"unexpected failure mode: ${ex.getMessage.take(200)}")
-    assert(java.nio.file.Files.exists(root.resolve("artifact/v1")))
-    assert(!java.nio.file.Files.exists(root.resolve("artifact/v2")))
-    // run 2: same root, same checkpoint — resumes at the uncommitted
-    // batch, replays it against the PERSISTED v0, finishes the stream.
-    // The deterministic split + compression walk make recovery exact: the
-    // recovered artifact equals the in-memory streamed fold node-for-node
-    val recovered = StreamingSketches.replayQDigestPersisted(events, root)
-    assert(recovered.collect().map(_.toSeq).toSet ==
-      StreamingSketches.replayQDigest(events).collect().map(_.toSeq).toSet,
-      "crash-recovered persisted q-digest must equal the uninterrupted fold")
-    // and — the property that distinguishes this sketch's contract — the
-    // recovered artifact still satisfies the merged 2t-per-node rank-slack
-    // gate (bound-equivalence, not value-exactness, is what q-digest ships)
-    graft.operators.Sketches.qdigestGateStreamed(recovered, events)
-      .collect().foreach { r =>
-        assert(r.getBoolean(6) && r.getBoolean(7),
-          s"recovered artifact breaks the 2t rank bound at q=${r.getLong(0)}")
+    withTempRoot("graft_qdrec_") { root =>
+      // run 1: injected crash AFTER batch 1's artifact write but BEFORE its
+      // offset commit — the replayed batch must overwrite v1 idempotently
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamingSketches.replayQDigestPersisted(events, root,
+          failAfterBatch = 1)
       }
+      assert(ex.getMessage.contains("injected crash"),
+        s"unexpected failure mode: ${ex.getMessage.take(200)}")
+      assert(java.nio.file.Files.exists(root.resolve("artifact/v1")))
+      assert(!java.nio.file.Files.exists(root.resolve("artifact/v2")))
+      // run 2: same root, same checkpoint — resumes at the uncommitted
+      // batch, replays it against the PERSISTED v0, finishes the stream.
+      // The deterministic split + compression walk make recovery exact: the
+      // recovered artifact equals the in-memory streamed fold node-for-node
+      val recovered = StreamingSketches.replayQDigestPersisted(events, root)
+      assert(recovered.collect().map(_.toSeq).toSet ==
+        StreamingSketches.replayQDigest(events).collect().map(_.toSeq).toSet,
+        "crash-recovered persisted q-digest must equal the uninterrupted fold")
+      // and — the property that distinguishes this sketch's contract — the
+      // recovered artifact still satisfies the merged 2t-per-node rank-slack
+      // gate (bound-equivalence, not value-exactness, is what q-digest ships)
+      graft.operators.Sketches.qdigestGateStreamed(recovered, events)
+        .collect().foreach { r =>
+          assert(r.getBoolean(6) && r.getBoolean(7),
+            s"recovered artifact breaks the 2t rank bound at q=${r.getLong(0)}")
+        }
+    }
   }
 
   test("persisted SQ8 code table survives a mid-stream crash, equals the one-shot encode") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val root = java.nio.file.Files.createTempDirectory("graft_sqrec_")
-    // run 1: crash AFTER batch 1 appends its encodes but BEFORE the
-    // offset commit — the replayed batch must overwrite v1 idempotently
-    // (the append fold is a pure function of (stored table, batch slice))
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingSketches.replaySqEncodePersisted(emb, root, failAfterBatch = 1)
+    withTempRoot("graft_sqrec_") { root =>
+      // run 1: crash AFTER batch 1 appends its encodes but BEFORE the
+      // offset commit — the replayed batch must overwrite v1 idempotently
+      // (the append fold is a pure function of (stored table, batch slice))
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamingSketches.replaySqEncodePersisted(emb, root, failAfterBatch = 1)
+      }
+      assert(ex.getMessage.contains("injected crash"),
+        s"unexpected failure mode: ${ex.getMessage.take(200)}")
+      assert(java.nio.file.Files.exists(root.resolve("artifact/v1")))
+      assert(!java.nio.file.Files.exists(root.resolve("artifact/v2")))
+      // run 2: same root + checkpoint — the recovered code table must equal
+      // the one-shot incremental encode row-for-row (frozen bounds make
+      // every code batch-order-independent)
+      val recovered = StreamingSketches.replaySqEncodePersisted(emb, root)
+      assert(recovered.collect().map(_.toSeq).toSet ==
+        graft.operators.Similarity.sqEncodeIncremental(emb)
+          .collect().map(_.toSeq).toSet,
+        "crash-recovered SQ8 code table must equal the one-shot encode")
     }
-    assert(ex.getMessage.contains("injected crash"),
-      s"unexpected failure mode: ${ex.getMessage.take(200)}")
-    assert(java.nio.file.Files.exists(root.resolve("artifact/v1")))
-    assert(!java.nio.file.Files.exists(root.resolve("artifact/v2")))
-    // run 2: same root + checkpoint — the recovered code table must equal
-    // the one-shot incremental encode row-for-row (frozen bounds make
-    // every code batch-order-independent)
-    val recovered = StreamingSketches.replaySqEncodePersisted(emb, root)
-    assert(recovered.collect().map(_.toSeq).toSet ==
-      graft.operators.Similarity.sqEncodeIncremental(emb)
-        .collect().map(_.toSeq).toSet,
-      "crash-recovered SQ8 code table must equal the one-shot encode")
   }
 
   test("streamed HLL vocab artifact estimates exactly match the one-shot build") {
@@ -362,74 +368,76 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.streaming.Trigger
     val events = Tables.events(spark, "/root/testdata/sf0.001")
-    val root = java.nio.file.Files.createTempDirectory("graft_ckpt_")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    val ckpt = root.resolve("ckpt").toString
-    val dataCols = events.columns.map(col)
-    val sliced = events.withColumn("slice",
-      ntile(4).over(Window.orderBy(col("ts"), col("event_id"))))
-    // a fault-tolerant (file) sink: the memory sink rejects checkpoint
-    // recovery by design, the parquet sink's transaction log is what
-    // gives exactly-once across restarts — the property under test
-    val outDir = root.resolve("out").toString
-    def runOnce(): Unit = {
-      val src = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val q = StreamingSessions.sessionAggStream(src, lit("30 seconds"))
-        .writeStream.format("parquet").outputMode("append")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    withTempRoot("graft_ckpt_") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
+      val ckpt = root.resolve("ckpt").toString
+      val dataCols = events.columns.map(col)
+      val sliced = events.withColumn("slice",
+        ntile(4).over(Window.orderBy(col("ts"), col("event_id"))))
+      // a fault-tolerant (file) sink: the memory sink rejects checkpoint
+      // recovery by design, the parquet sink's transaction log is what
+      // gives exactly-once across restarts — the property under test
+      val outDir = root.resolve("out").toString
+      def runOnce(): Unit = {
+        val src = spark.readStream.schema(events.schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+        val q = StreamingSessions.sessionAggStream(src, lit("30 seconds"))
+          .writeStream.format("parquet").outputMode("append")
+          .option("path", outDir)
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
+      // phase 1: two slices, then the query STOPS (AvailableNow drains)
+      (1 to 2).foreach(i => StreamingSessions.appendReplayFile(
+        sliced.filter(col("slice") === i).select(dataCols: _*), inDir, i))
+      runOnce()
+      val part1 = spark.read.parquet(outDir).collect().map(_.toSeq).toSet
+      // phase 2: remaining slices + watermark flush sentinels, RESTART from
+      // the same checkpoint — offsets, watermark, and open-session state
+      // must all resume
+      val maxTs = events.agg(max(col("ts"))).collect()(0).getTimestamp(0)
+      (3 to 4).foreach(i => StreamingSessions.appendReplayFile(
+        sliced.filter(col("slice") === i).select(dataCols: _*), inDir, i))
+      (1 to 2).foreach(i => StreamingSessions.appendReplayFile(
+        StreamingSessions.flushFrame(events, maxTs, i), inDir, 4 + i))
+      runOnce()
+      val part2 = spark.read.parquet(outDir).collect().map(_.toSeq).toSet -- part1
+      assert(part1.nonEmpty && part2.nonEmpty, "both runs should emit sessions")
+      assert((part1 & part2).isEmpty, "restart must not re-emit sessions")
+      val got = (part1 | part2).filter(_.head != StreamingSessions.FlushUser)
+      val want = Sessions.sessionAgg(events, lit("30 seconds"))
+        .collect().map(_.toSeq).toSet
+      assert(got == want, "union across restart must equal batch sessionization")
     }
-    // phase 1: two slices, then the query STOPS (AvailableNow drains)
-    (1 to 2).foreach(i => StreamingSessions.appendReplayFile(
-      sliced.filter(col("slice") === i).select(dataCols: _*), inDir, i))
-    runOnce()
-    val part1 = spark.read.parquet(outDir).collect().map(_.toSeq).toSet
-    // phase 2: remaining slices + watermark flush sentinels, RESTART from
-    // the same checkpoint — offsets, watermark, and open-session state
-    // must all resume
-    val maxTs = events.agg(max(col("ts"))).collect()(0).getTimestamp(0)
-    (3 to 4).foreach(i => StreamingSessions.appendReplayFile(
-      sliced.filter(col("slice") === i).select(dataCols: _*), inDir, i))
-    (1 to 2).foreach(i => StreamingSessions.appendReplayFile(
-      StreamingSessions.flushFrame(events, maxTs, i), inDir, 4 + i))
-    runOnce()
-    val part2 = spark.read.parquet(outDir).collect().map(_.toSeq).toSet -- part1
-    assert(part1.nonEmpty && part2.nonEmpty, "both runs should emit sessions")
-    assert((part1 & part2).isEmpty, "restart must not re-emit sessions")
-    val got = (part1 | part2).filter(_.head != StreamingSessions.FlushUser)
-    val want = Sessions.sessionAgg(events, lit("30 seconds"))
-      .collect().map(_.toSeq).toSet
-    assert(got == want, "union across restart must equal batch sessionization")
   }
 
   test("stream-stream interval join equals the batch range join") {
     import org.apache.spark.sql.streaming.Trigger
     val events = Tables.events(spark, "/root/testdata/sf0.001")
-    val root = java.nio.file.Files.createTempDirectory("graft_ssj_")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    // two slice files -> the join must match across micro-batches too
-    val sliced = events.withColumn("slice",
-      ntile(2).over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("ts"), col("event_id"))))
-    val dataCols = events.columns.map(col)
-    (1 to 2).foreach(i => StreamingSessions.appendReplayFile(
-      sliced.filter(col("slice") === i).select(dataCols: _*), inDir, i))
-    val src = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    spark.catalog.dropTempView("ssj_out")
-    val q = StreamingSessions.purchaseErrorPairsStream(src)
-      .writeStream.format("memory").queryName("ssj_out").outputMode("append")
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("ssj_out").collect().map(_.toSeq).toSet
-    val want = graft.operators.Relational.purchaseErrorPairs(events)
-      .collect().map(_.toSeq).toSet
-    assert(got.nonEmpty)
-    assert(got == want, "stream-stream interval join must equal batch")
+    withTempRoot("graft_ssj_") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
+      // two slice files -> the join must match across micro-batches too
+      val sliced = events.withColumn("slice",
+        ntile(2).over(org.apache.spark.sql.expressions.Window
+          .orderBy(col("ts"), col("event_id"))))
+      val dataCols = events.columns.map(col)
+      (1 to 2).foreach(i => StreamingSessions.appendReplayFile(
+        sliced.filter(col("slice") === i).select(dataCols: _*), inDir, i))
+      val src = spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+      spark.catalog.dropTempView("ssj_out")
+      val q = StreamingSessions.purchaseErrorPairsStream(src)
+        .writeStream.format("memory").queryName("ssj_out").outputMode("append")
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val got = spark.table("ssj_out").collect().map(_.toSeq).toSet
+      val want = graft.operators.Relational.purchaseErrorPairs(events)
+        .collect().map(_.toSeq).toSet
+      assert(got.nonEmpty)
+      assert(got == want, "stream-stream interval join must equal batch")
+    }
   }
 
   test("stream-static enrichment replay under disorder equals the batch rollup") {
@@ -613,11 +621,11 @@ class StatefulAlertSpec extends SparkSpec {
       q.awaitTermination()
       spark.read.parquet(out.toString).count()
     }
-    try {
+    try withTempRoot("graft_ttl_") { root =>
       // long retention: once-ever across batches and a restart
       val memA = MemoryStream[Long]
-      val ckA = java.nio.file.Files.createTempDirectory("graft_ttl_a")
-      val outA = java.nio.file.Files.createTempDirectory("graft_ttl_a_out")
+      val ckA = java.nio.file.Files.createDirectories(root.resolve("a"))
+      val outA = java.nio.file.Files.createDirectories(root.resolve("a_out"))
       memA.addData(7L, 7L, 8L)
       assert(run(memA, java.time.Duration.ofHours(1), outA, ckA) == 2L)
       val first = spark.read.parquet(outA.toString).collect()
@@ -629,8 +637,8 @@ class StatefulAlertSpec extends SparkSpec {
         "unexpired keys stay suppressed across the restart (no new rows)")
       // tiny retention: the key re-admits once the state store expired it
       val memB = MemoryStream[Long]
-      val ckB = java.nio.file.Files.createTempDirectory("graft_ttl_b")
-      val outB = java.nio.file.Files.createTempDirectory("graft_ttl_b_out")
+      val ckB = java.nio.file.Files.createDirectories(root.resolve("b"))
+      val outB = java.nio.file.Files.createDirectories(root.resolve("b_out"))
       memB.addData(7L)
       assert(run(memB, java.time.Duration.ofMillis(1), outB, ckB) == 1L)
       Thread.sleep(300) // safely past the 1 ms TTL
@@ -900,8 +908,8 @@ class FileSourceSpec extends SparkSpec {
 
   test("parquet file stream through session agg equals the batch result") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    try {
+    withTempRoot("graft-stream") { root =>
+      val dir = root.toString
       val ev = Tables.events(spark, "/root/testdata/sf0.001")
       ev.coalesce(1).write.mode("overwrite").parquet(dir)
       val streamed = graft.streaming.StreamingSessions.sessionAggStream(
@@ -915,16 +923,12 @@ class FileSourceSpec extends SparkSpec {
         assert(got == want)
         assert(got > 0)
       } finally q.stop()
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(dir)).deleteRecursively()
     }
   }
 
   test("streaming exact admission across micro-batches equals whole-corpus dedup") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-dedup")
-    try {
+    withTempRoot("graft-stream-dedup") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       // three micro-batches with internal AND cross-batch duplicates
       val batches = Seq(
@@ -956,13 +960,12 @@ class FileSourceSpec extends SparkSpec {
       val keys = spark.read.parquet(root.resolve("keys").toString)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet
       assert(keys == canon.toSet)
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("replay-duplicated key table stays bounded: admission joins never fan out") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-replay")
-    try {
+    withTempRoot("graft-stream-replay") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       val keys = root.resolve("keys")
       StreamingSessions.appendReplayFile(
@@ -992,13 +995,12 @@ class FileSourceSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
         .sortBy(_._1).toSeq
       assert(out == Seq((10L, 0L, false), (11L, 11L, true)))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("exact admission: full replay is a no-op; out-of-order input fails loudly") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-exact-replay")
-    try {
+    withTempRoot("graft-stream-exact-replay") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       Seq(Seq((0L, "alpha"), (1L, "beta")), Seq((10L, "alpha"), (11L, "gamma")))
         .zipWithIndex.foreach { case (bt, i) =>
@@ -1030,13 +1032,12 @@ class FileSourceSpec extends SparkSpec {
         if (t == null) Seq.empty
         else t.getMessage +: causes(t.getCause)
       assert(causes(ex).exists(m => m != null && m.contains("out-of-order")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("batch-id-keyed output: a replayed batch never duplicates its rows") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-idem")
-    try {
+    withTempRoot("graft-stream-idem") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       def run(): Unit = graft.streaming.StreamingDedup.exactAdmissionStream(
         spark, in.toString, root.resolve("keys").toString,
@@ -1070,7 +1071,7 @@ class FileSourceSpec extends SparkSpec {
         root.resolve("out").resolve("batch=99"))
       assert(graft.streaming.StreamingDedup
         .readOutput(spark, root.resolve("out").toString).count() == 4)
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("partial replay (frontier below batch max) keeps committed output rows") {
@@ -1081,8 +1082,7 @@ class FileSourceSpec extends SparkSpec {
     // replay's effective batch is a nonempty strict subset, so rewriting
     // the batch dir from the subset would destroy the below-frontier
     // docs' committed rows; the committed dir must be kept verbatim
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-partial")
-    try {
+    withTempRoot("graft-stream-partial") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       def run(): Unit = graft.streaming.StreamingDedup.exactAdmissionStream(
         spark, in.toString, root.resolve("keys").toString,
@@ -1110,13 +1110,12 @@ class FileSourceSpec extends SparkSpec {
       assert(rows == Seq((0L, 0L, true), (1L, 1L, true),
         (10L, 10L, true), (11L, 0L, false)),
         s"partial replay lost or corrupted rows: $rows")
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("near-dup partial replay keeps below-frontier output rows") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-nd-partial")
-    try {
+    withTempRoot("graft-stream-nd-partial") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       def block(p: String, n: Int) = (0 until n).map(i => s"$p$i")
       val t0 = block("a", 100).mkString(" ")
@@ -1153,13 +1152,12 @@ class FileSourceSpec extends SparkSpec {
       assert(rows == Seq((0L, 0L, true), (1L, 1L, true),
         (10L, 0L, false), (11L, 11L, true)),
         s"near-dup partial replay lost or corrupted rows: $rows")
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("near-dup output is replay-idempotent through the same crash window") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-nd-idem")
-    try {
+    withTempRoot("graft-stream-nd-idem") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       def block(p: String, n: Int) = (0 until n).map(i => s"$p$i")
       val t0 = block("a", 100).mkString(" ")
@@ -1187,13 +1185,12 @@ class FileSourceSpec extends SparkSpec {
       assert(rows == Seq((0L, 0L, true), (1L, 1L, true),
         (10L, 0L, false), (11L, 11L, true)),
         s"duplicated or lost output rows: $rows")
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("streaming near-dup admission: cross-batch bridge merges reach later batches") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-neardup")
-    try {
+    withTempRoot("graft-stream-neardup") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       def block(p: String, n: Int) = (0 until n).map(i => s"$p$i")
       val A = block("a", 150); val B = block("b", 150)
@@ -1277,13 +1274,12 @@ class FileSourceSpec extends SparkSpec {
         if (t == null) Seq.empty
         else t.getMessage +: causes(t.getCause)
       assert(causes(ex).exists(m => m != null && m.contains("out-of-order")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("streaming semantic admission: bridge merges, replay no-op, param pin") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-semantic")
-    try {
+    withTempRoot("graft-stream-semantic") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       // dim-16 basis vectors on dims 4 and 8: those two dims share the
       // same 6-plane sign pattern in the deterministic plane family, so
@@ -1362,13 +1358,12 @@ class FileSourceSpec extends SparkSpec {
         Seq((1L, basis(0, 1.0))).toDF("vec_id", "embedding"), in, 3)
       val ex = intercept[Exception] { run("ckpt4") }
       assert(causes(ex).exists(m => m != null && m.contains("out-of-order")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("streaming perceptual admission: parity, replay no-op, param pin") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-perc")
-    try {
+    withTempRoot("graft-stream-perc") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       // batches carry only doc_id — the audio fingerprint fixtures derive
       // entirely from the id. 7 is the planted gain-twin of 0, 17 of 10.
@@ -1418,13 +1413,12 @@ class FileSourceSpec extends SparkSpec {
       StreamingSessions.appendReplayFile(Seq(2L).toDF("doc_id"), in, 3)
       val ex = intercept[Exception] { run("ckpt4") }
       assert(causes(ex).exists(m => m != null && m.contains("out-of-order")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("perceptual admission detects a torn fingerprint append on replay") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-perc-torn")
-    try {
+    withTempRoot("graft-stream-perc-torn") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       val index = root.resolve("index")
       def run(ckpt: String): Unit =
@@ -1448,7 +1442,7 @@ class FileSourceSpec extends SparkSpec {
         if (t == null) Seq.empty else t.getMessage +: causes(t.getCause)
       assert(causes(ex).exists(m =>
         m != null && m.contains("torn fingerprint append")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("semantic admission survives the emb-appended/buckets-missing crash window") {
@@ -1459,8 +1453,7 @@ class FileSourceSpec extends SparkSpec {
     // stray batch ids in the index vector store must not perturb
     // admission (index membership is decided by the BUCKET table)
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-sem-crashwin")
-    try {
+    withTempRoot("graft-stream-sem-crashwin") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       val index = root.resolve("index")
       def basis(d: Int, x: Double) = Seq.tabulate(16)(i => if (i == d) x else 0.0)
@@ -1496,7 +1489,7 @@ class FileSourceSpec extends SparkSpec {
         .groupBy(col("vec_id")).count().collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(embCnt == Map(0L -> 1L, 1L -> 1L, 10L -> 2L, 11L -> 2L))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("semantic admission detects a torn bucket append on replay") {
@@ -1505,8 +1498,7 @@ class FileSourceSpec extends SparkSpec {
     // never probe that vector again — the artifact-membership layer
     // must fail loudly on the vector's replay
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-sem-torn")
-    try {
+    withTempRoot("graft-stream-sem-torn") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       val index = root.resolve("index")
       def basis(d: Int, x: Double) = Seq.tabulate(16)(i => if (i == d) x else 0.0)
@@ -1530,13 +1522,12 @@ class FileSourceSpec extends SparkSpec {
       def causes(t: Throwable): Seq[String] =
         if (t == null) Seq.empty else t.getMessage +: causes(t.getCause)
       assert(causes(ex).exists(m => m != null && m.contains("torn bucket append")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("near-dup admission survives the sigs-appended/shingles-missing crash window") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-crashwin")
-    try {
+    withTempRoot("graft-stream-crashwin") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       def block(p: String, n: Int) = (0 until n).map(i => s"$p$i")
       val t0 = block("a", 100).mkString(" ")
@@ -1571,13 +1562,12 @@ class FileSourceSpec extends SparkSpec {
         .groupBy(col("doc_id")).count().collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(shCnt == Map(0L -> 1L, 1L -> 1L, 10L -> 1L, 11L -> 1L))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("streaming sequence packing equals whole-corpus packSequences") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-pack")
-    try {
+    withTempRoot("graft-stream-pack") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       // token counts chosen so batch boundaries fall mid-sequence (L=8):
       // batch 0 ends at token 11, batch 1 at 21 — both continue a
@@ -1625,7 +1615,7 @@ class FileSourceSpec extends SparkSpec {
       def causes(t: Throwable): Seq[String] =
         if (t == null) Seq.empty else t.getMessage +: causes(t.getCause)
       assert(causes(ex).exists(m => m != null && m.contains("out-of-order")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("exact admission detects a torn key append on replay") {
@@ -1634,8 +1624,7 @@ class FileSourceSpec extends SparkSpec {
     // output check alone cannot see it (the replayed doc HAS an output
     // row) — the key-membership layer must fail loudly
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-exact-torn")
-    try {
+    withTempRoot("graft-stream-exact-torn") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       val keys = root.resolve("keys").toString
       def run(ckpt: String): Unit =
@@ -1660,7 +1649,7 @@ class FileSourceSpec extends SparkSpec {
       def causes(t: Throwable): Seq[String] =
         if (t == null) Seq.empty else t.getMessage +: causes(t.getCause)
       assert(causes(ex).exists(m => m != null && m.contains("torn key append")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("near-dup admission detects a torn shingle append on replay") {
@@ -1669,8 +1658,7 @@ class FileSourceSpec extends SparkSpec {
     // every future near-dup against that doc — the artifact-membership
     // layer must fail loudly on the doc's replay
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-ndup-torn")
-    try {
+    withTempRoot("graft-stream-ndup-torn") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       val index = root.resolve("index")
       def block(w: String, n: Int) = Seq.fill(n)(w)
@@ -1695,7 +1683,7 @@ class FileSourceSpec extends SparkSpec {
       def causes(t: Throwable): Seq[String] =
         if (t == null) Seq.empty else t.getMessage +: causes(t.getCause)
       assert(causes(ex).exists(m => m != null && m.contains("torn shingle append")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("exact admission rejects an out-of-order doc sharing text with an indexed one") {
@@ -1704,8 +1692,7 @@ class FileSourceSpec extends SparkSpec {
     // made the LOWER id canonical, so silently dropping it diverges —
     // only the per-doc committed-output check catches it
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-exact-samekey")
-    try {
+    withTempRoot("graft-stream-exact-samekey") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       def run(ckpt: String): Unit =
         graft.streaming.StreamingDedup.exactAdmissionStream(spark,
@@ -1721,7 +1708,7 @@ class FileSourceSpec extends SparkSpec {
       def causes(t: Throwable): Seq[String] =
         if (t == null) Seq.empty else t.getMessage +: causes(t.getCause)
       assert(causes(ex).exists(m => m != null && m.contains("out-of-order")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("near-dup admission rejects an out-of-order shingle-less doc") {
@@ -1729,8 +1716,7 @@ class FileSourceSpec extends SparkSpec {
     // signature-membership check could not see it — but it still owes
     // the corpus an admission row, and must fail loudly when dropped
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-ndup-short")
-    try {
+    withTempRoot("graft-stream-ndup-short") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       val index = root.resolve("index")
       def block(w: String, n: Int) = Seq.fill(n)(w)
@@ -1750,7 +1736,7 @@ class FileSourceSpec extends SparkSpec {
       def causes(t: Throwable): Seq[String] =
         if (t == null) Seq.empty else t.getMessage +: causes(t.getCause)
       assert(causes(ex).exists(m => m != null && m.contains("out-of-order")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("streaming pack rejects an unseen id inside the last batch's window") {
@@ -1759,8 +1745,7 @@ class FileSourceSpec extends SparkSpec {
     // by id range alone — only the committed-placement check can tell it
     // apart, so it must fail loudly, not silently drop
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-pack-win")
-    try {
+    withTempRoot("graft-stream-pack-win") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       def run(ckpt: String): Unit =
         graft.streaming.StreamingPack.packAdmissionStream(spark,
@@ -1780,13 +1765,12 @@ class FileSourceSpec extends SparkSpec {
         if (t == null) Seq.empty else t.getMessage +: causes(t.getCause)
       assert(causes(ex).exists(m => m != null && m.contains("out-of-order")
         && m.contains("22")))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("streaming pack replays the output-committed/state-missing crash window") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-pack-crash")
-    try {
+    withTempRoot("graft-stream-pack-crash") { root =>
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
       def run(): Unit =
         graft.streaming.StreamingPack.packAdmissionStream(spark,
@@ -1821,13 +1805,12 @@ class FileSourceSpec extends SparkSpec {
       val st = graft.streaming.StreamingPack
         .readState(spark, root.resolve("state").toString)
       assert((st.getLong(0), st.getLong(1), st.getLong(2)) == (2L, 10L, 11L))
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("CSV-line stream parses through the same permissive stage as batch") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv-stream")
-    try {
+    withTempRoot("graft-csv-stream") { dir =>
       import spark.implicits._
       val ev = Tables.events(spark, "/root/testdata/sf0.001")
       val lines = graft.operators.CsvIngest.renderCsv(ev)
@@ -1845,7 +1828,7 @@ class FileSourceSpec extends SparkSpec {
         assert(got == want, "streaming parse differs from batch parse")
         assert(got.nonEmpty)
       } finally q.stop()
-    } finally graft.streaming.StreamingSessions.deleteRecursively(dir)
+    }
   }
 
   test("synthetic rate workload: bursty tenants, reference payload rule") {
@@ -1877,8 +1860,7 @@ class FileSourceSpec extends SparkSpec {
     val pool = docs.filter(col("doc_id") < cut)
     val batch = docs.filter(col("doc_id") >= cut)
       .select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-imp-stream")
-    try {
+    withTempRoot("graft-imp-stream") { root =>
       val (wt, thr) = graft.operators.Curation.importanceArtifacts(pool)
       wt.write.parquet(s"$root/art/weights")
       thr.write.parquet(s"$root/art/thr")
@@ -1907,7 +1889,7 @@ class FileSourceSpec extends SparkSpec {
       // leave the committed output verbatim
       run("ckpt2")
       assert(readOut() == got)
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("streamed decontamination screen equals the frozen-artifact single shot") {
@@ -1915,8 +1897,7 @@ class FileSourceSpec extends SparkSpec {
     val batch = docs.filter(col("doc_id") % 2 === 1 &&
         graft.operators.Curation.sampleBucket(col("doc_id")) >= 1000)
       .select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-decon-stream")
-    try {
+    withTempRoot("graft-decon-stream") { root =>
       graft.operators.Curation.evalNgramArtifact(docs)
         .write.parquet(s"$root/art/eval_ngrams")
       val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
@@ -1942,7 +1923,7 @@ class FileSourceSpec extends SparkSpec {
         "streamed screening must equal the single-shot artifact screen")
       run("ckpt2") // lost-checkpoint replay is a no-op
       assert(readOut() == got)
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("streamed cluster-balanced admission: per-batch picks, evolving quota, replay no-op") {
@@ -1951,8 +1932,7 @@ class FileSourceSpec extends SparkSpec {
     val cut = mx * 4 / 5
     val e1 = cut + (mx - cut) / 3
     val e2 = cut + 2 * (mx - cut) / 3
-    val root = java.nio.file.Files.createTempDirectory("graft-cbal-stream")
-    try {
+    withTempRoot("graft-cbal-stream") { root =>
       val idx = emb.filter(col("vec_id") < cut)
       val cents = graft.operators.Similarity.clusterArtifacts(idx)
       cents.write.parquet(s"$root/art/centroids")
@@ -2006,7 +1986,7 @@ class FileSourceSpec extends SparkSpec {
       // effective-empty, committed output and state stay verbatim
       run("ckpt2")
       assert(readOut() == got)
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 
   test("streamed fuzzy and semantic screens equal their frozen-artifact single shots") {
@@ -2015,8 +1995,7 @@ class FileSourceSpec extends SparkSpec {
     val dBatch = docs.filter(
         graft.operators.Curation.sampleBucket(col("doc_id")) >= 1000)
       .select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-screen-streams")
-    try {
+    withTempRoot("graft-screen-streams") { root =>
       val (bands, shingles) = graft.operators.Curation.evalFuzzyArtifacts(docs)
       bands.write.parquet(s"$root/fa/bands")
       shingles.write.parquet(s"$root/fa/shingles")
@@ -2057,6 +2036,6 @@ class FileSourceSpec extends SparkSpec {
           evalSide, graft.operators.Similarity.bucketTable(evalSide), vBatch)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(sGot.nonEmpty && sGot == sSingle)
-    } finally StreamingSessions.deleteRecursively(root)
+    }
   }
 }
