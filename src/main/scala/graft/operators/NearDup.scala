@@ -252,7 +252,9 @@ object NearDup {
     // duplicate-heavy graph keeps ~100k edges per partition so the
     // propagation joins stay parallel. Measured on a 20%-dup 500k-doc
     // corpus (200k nodes): 16.0 s at coalesce(1) → parallel rounds here.
-    val parts = partsFor(p.count() * 2)
+    // Capped at 64: the frames are candidate-bounded; a cluster
+    // deployment raises the cap with its parallelism.
+    val parts = math.max(1L, math.min(64L, p.count() * 2 / 100000L + 1L)).toInt
     val edges = p.union(p.select(col("doc_j").as("doc_i"), col("doc_i").as("doc_j")))
       .coalesce(parts).localCheckpoint()
     var labels = edges.select(col("doc_i").as("id")).distinct()
@@ -310,15 +312,14 @@ object NearDup {
     * Mechanics: band-key equi-join of the batch's signatures against
     * index ∪ batch signatures (never all-pairs; the index side is the
     * precomputed band table at scale), exact-Jaccard verify of the
-    * candidates, then min-label propagation over the quotient graph whose
-    * nodes are batch docs PLUS the touched index COMPONENTS (each index
-    * neighbor collapses to its stored component label). Component nodes
-    * must participate in the propagation — not just seed it — because a
-    * single batch doc can BRIDGE two index components, and the merged
-    * minimum has to reach every other batch doc attached to either
-    * component, not only the bridge itself. Iteration count is bounded by
-    * the quotient graph's diameter (the batch side of the corpus), never
-    * the index's.
+    * candidates, then connected components (union-find, minimum id as
+    * root) over the quotient graph whose nodes are batch docs PLUS the
+    * touched index COMPONENTS (each index neighbor collapses to its stored
+    * component label). Component nodes must be graph nodes — not just
+    * seed labels — because a single batch doc can BRIDGE two index
+    * components, and the merged minimum has to reach every other batch
+    * doc attached to either component, not only the bridge itself. The
+    * quotient graph grows with the batch, never with the index.
     *
     * Output: every batch doc with its union-corpus `cluster_id` and
     * `admitted` (the doc IS its cluster's canonical representative).
@@ -330,7 +331,6 @@ object NearDup {
     *   Spec-pinned: both paths produce identical output.
     */
   def incrementalNearDups(indexDocs: DataFrame, batchDocs: DataFrame,
-                          maxIters: Int = 50,
                           indexLabels: Option[DataFrame] = None): DataFrame = {
     // a violation would SILENTLY mis-admit batch docs and strand stale
     // index labels — fail loudly instead. The bound must come from the
@@ -356,7 +356,7 @@ object NearDup {
       val idxLab = indexLabels
         .getOrElse(clustersFromPairs(verifyJaccard(lshCandidates(idxSigs), idxSh)))
       admitCore(idxSh, idxSigs, indexDocs.select(col("doc_id")), idxLab,
-        bSh, batchDocs.select(col("doc_id")), maxIters)._1
+        bSh, batchDocs.select(col("doc_id")))._1
     } finally { idxSigs.unpersist(); bSh.unpersist(); idxSh.unpersist() }
   }
 
@@ -390,7 +390,6 @@ object NearDup {
     */
   def incrementalNearDupsIndexed(indexShingles: DataFrame, indexSigs: DataFrame,
                                  indexLabels: DataFrame, batchDocs: DataFrame,
-                                 maxIters: Int = 50,
                                  batchShingles: Option[DataFrame] = None)
       : (DataFrame, DataFrame) = {
     requireMonotoneIds(indexShingles.select(col("doc_id")), batchDocs,
@@ -404,7 +403,7 @@ object NearDup {
     try {
       val (admissions, quotient) = admitCore(indexShingles, indexSigs,
         indexShingles.select(col("doc_id")), indexLabels,
-        bSh, batchDocs.select(col("doc_id")), maxIters)
+        bSh, batchDocs.select(col("doc_id")))
       (admissions, repointLabels(quotient, indexLabels))
     } finally if (owned) bSh.unpersist()
   }
@@ -443,8 +442,7 @@ object NearDup {
     */
   private def admitCore(idxSh: DataFrame, idxSigs: DataFrame,
                         idxIdFrame: DataFrame, idxLabels: DataFrame,
-                        bSh: DataFrame, batchIds: DataFrame,
-                        maxIters: Int): (DataFrame, DataFrame) = {
+                        bSh: DataFrame, batchIds: DataFrame): (DataFrame, DataFrame) = {
     def bandsOf(sigs: DataFrame): DataFrame = sigs
       .select(col("doc_id"),
         posexplode(graft.functions.TextHashOps
@@ -457,7 +455,7 @@ object NearDup {
     val bBands = bandsOf(minhashSignatures(bSh)).localCheckpoint()
     val allBands = bandsOf(idxSigs).union(bBands)
     // candidate adjacency: batch doc -> any colliding doc (both
-    // orientations for batch-batch pairs — propagation wants symmetry)
+    // orientations for batch-batch pairs, as admitFromEdges expects)
     val cands = bBands.as("x").join(allBands.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
           col("x.band_key") === col("y.band_key") &&
@@ -475,78 +473,63 @@ object NearDup {
       .filter(col("inter") * 2 >= col("uni"))
       .select(col("doc_b"), col("doc_o"))
       .localCheckpoint()
-    admitFromEdges(edges, idxIdFrame, idxLabels, batchIds, maxIters)
+    admitFromEdges(edges, idxIdFrame, idxLabels, batchIds)
   }
 
   /** Quotient-graph admission over a VERIFIED edge set `(doc_b, doc_o)` —
-    * the propagation stage shared by the shingle/minhash candidates
+    * the labeling stage shared by the shingle/minhash candidates
     * ([[admitCore]]) and the embedding-LSH candidates
     * ([[graft.operators.Similarity.semanticDedupIncremental]]). `edges`
-    * must be localCheckpointed (it is counted and re-joined) and contain
+    * must be localCheckpointed (both quotient arms re-read it) and contain
     * batch→neighbor adjacency with batch-batch pairs in both
-    * orientations. Returns (admissions, converged quotient labels).
+    * orientations. Returns (admissions, quotient labels), both local
+    * frames.
+    *
+    * Labels are one union-find pass on the driver over the collected
+    * quotient graph, each root the smaller id, so every node labels to
+    * its component minimum whatever the graph's diameter. The collect
+    * holds one row per batch doc, per batch-batch edge orientation and
+    * per distinct (batch doc, touched index component) pair: it grows
+    * with the batch and its near-duplicates, never with the index.
     */
-  private[operators] def admitFromEdges(edges: DataFrame, idxIdFrame: DataFrame,
-                                        idxLabels: DataFrame, batchIds: DataFrame,
-                                        maxIters: Int): (DataFrame, DataFrame) = {
+  private[graft] def admitFromEdges(edges: DataFrame, idxIdFrame: DataFrame,
+                                    idxLabels: DataFrame,
+                                    batchIds: DataFrame): (DataFrame, DataFrame) = {
     val idxIds = idxIdFrame.select(col(idxIdFrame.columns.head).as("doc_o"))
     val idxLab = idxLabels.select(col("doc_id").as("doc_o"), col("cluster_id"))
     // quotient-graph edges: batch-batch pairs as-is; batch-index pairs
-    // collapse the index side to its COMPONENT id (stored label), with
-    // both orientations so minima flow batch -> component -> batch —
-    // the path a bridging batch doc needs to merge two index components
-    // for every other attached batch doc
+    // collapse the index side to its COMPONENT id (stored label), so a
+    // bridging batch doc merges two index components for every other
+    // attached batch doc. Batch ids ride along as self-edges (no verified
+    // edge is a self-pair), so isolated batch docs are nodes too — one
+    // collect for the whole graph.
     val bcEdges = edges.join(idxIds, "doc_o")
       .join(idxLab, Seq("doc_o"), "left")
-      .select(col("doc_b").as("doc_i"),
-        coalesce(col("cluster_id"), col("doc_o")).as("doc_j"))
-      .distinct()
-      .localCheckpoint() // referenced 3× (labels init + both union arms)
+      .select(col("doc_b"), coalesce(col("cluster_id"), col("doc_o")).as("doc_o"))
+      .distinct() // one row per touched component, not per index neighbor
     val bEdges = edges.join(batchIds.select(col("doc_id").as("doc_o")), "doc_o")
-      .select(col("doc_b").as("doc_i"), col("doc_o").as("doc_j"))
-    // same scale-aware coalesce policy as clustersFromPairs; the label
-    // frame is batch-proportional and the edge frame candidate-bounded,
-    // so size partitions to the larger of the two (edges is
-    // checkpointed and the batch count is a parquet count — both cheap)
-    val parts = partsFor(math.max(edges.count(), batchIds.count()))
-    val allEdges = bEdges
-      .union(bcEdges)
-      .union(bcEdges.select(col("doc_j").as("doc_i"), col("doc_i").as("doc_j")))
-      .coalesce(parts).localCheckpoint()
-    // nodes: batch docs + touched index components; a component node's
-    // id IS its stored minimum, so every initial label is its own id
-    var labels = batchIds.select(col("doc_id").as("id"))
-      .union(bcEdges.select(col("doc_j").as("id")))
-      .distinct()
-      .withColumn("label", col("id"))
-      .coalesce(parts).localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val neighborMin = allEdges
-        .join(labels, allEdges("doc_j") === labels("id"))
-        .groupBy(col("doc_i").as("nid")).agg(min(col("label")).as("nlabel"))
-      // same fused changed-flag probe as clustersFromPairs: no per-round
-      // shuffle join, just a scan of the checkpointed blocks
-      val next = labels.join(neighborMin, labels("id") === col("nid"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          (coalesce(col("nlabel"), col("label")) < col("label")).as("changed"))
-        .coalesce(parts).localCheckpoint()
-      converged = next.filter(col("changed")).isEmpty
-      labels = next.select(col("id"), col("label"))
-      iter += 1
+      .select(col("doc_b"), col("doc_o"))
+    val batchNodes = batchIds.select(col("doc_id").as("doc_b"), col("doc_id").as("doc_o"))
+    val graph = batchNodes.union(bEdges).union(bcEdges).collect()
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = { // iterative, with path compression
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val n = parent(y); parent(y) = r; y = n }
+      r
     }
-    require(converged,
-      s"incremental label propagation did not converge within $maxIters " +
-        "rounds — the batch-side quotient graph has a longer chain than " +
-        "the iteration budget")
-    val admissions = labels // restrict quotient labels to the batch nodes
-      .join(batchIds, labels("id") === batchIds("doc_id"))
-      .select(col("doc_id"), col("label").as("cluster_id"),
-        (col("label") === col("doc_id")).as("admitted"))
-      .orderBy(col("doc_id"))
-      .localCheckpoint()
+    graph.foreach { r =>
+      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val batch = graph.collect { case r if r.getLong(0) == r.getLong(1) => r.getLong(0) }
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val labels = parent.keys.toSeq.map(id => (id, find(id))).toDF("id", "label")
+    val admissions = batch.sorted.toSeq.map { id =>
+      val l = find(id); (id, l, l == id)
+    }.toDF("doc_id", "cluster_id", "admitted")
     (admissions, labels)
   }
 
@@ -580,14 +563,6 @@ object NearDup {
           "'canonical = min id' is not incrementally maintainable " +
           "under id interleaving; re-run over the whole union instead")
   }
-
-  /** Per-round partition count for the label-propagation frames:
-    * ~100k rows per partition, at least 1, capped at 64 (the loop's
-    * frames are candidate-bounded; a cluster deployment raises the cap
-    * with its parallelism).
-    */
-  private def partsFor(rows: Long): Int =
-    math.max(1L, math.min(64L, rows / 100000L + 1L)).toInt
 
   /** 64-bit SimHash near-dups. Signature: per token-hash bit b, sum ±1
     * over tokens; bit set iff the sum is positive. Candidates via the

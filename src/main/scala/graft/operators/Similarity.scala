@@ -325,7 +325,7 @@ object Similarity {
     * embedding space): candidates are the batch's bucket ∪ hamming-1
     * probes equi-joined against the stored bucket table ∪ the batch's own
     * buckets, verified by exact cosine against the vector stores, then
-    * min-label propagation over the quotient graph of batch vectors plus
+    * union-find components over the quotient graph of batch vectors plus
     * touched index COMPONENTS — so a bridging batch vector merges two
     * stored components for every attached vector, exactly as whole-corpus
     * [[semanticDedup]] would.
@@ -343,8 +343,8 @@ object Similarity {
     */
   def semanticDedupIncremental(indexEmb: DataFrame, indexBuckets: DataFrame,
                                indexLabels: DataFrame, batchEmb: DataFrame,
-                               threshold: Double, numPlanes: Int = NumPlanes,
-                               maxIters: Int = 50): (DataFrame, DataFrame) = {
+                               threshold: Double,
+                               numPlanes: Int = NumPlanes): (DataFrame, DataFrame) = {
     NearDup.requireMonotoneIds(indexBuckets.select(col("vec_id")),
       batchEmb.select(col("vec_id").as("doc_id")), "semanticDedupIncremental")
     // plane-count drift guard: a bucket table stored at a LARGER plane
@@ -388,7 +388,7 @@ object Similarity {
     val (adm, quotient) = NearDup.admitFromEdges(edges,
       indexBuckets.select(col("vec_id")),
       indexLabels.select(col("vec_id").as("doc_id"), col("cluster_id")),
-      batchEmb.select(col("vec_id").as("doc_id")), maxIters)
+      batchEmb.select(col("vec_id").as("doc_id")))
     val admissions = adm.select(col("doc_id").as("vec_id"), col("cluster_id"),
       col("admitted").as("kept"))
     val updated = NearDup.repointLabels(quotient,
@@ -802,23 +802,25 @@ object Similarity {
   def clusterBalancedAdmitWith(centroids: DataFrame, quota: DataFrame,
                                batch: DataFrame, perCell: Int = 8,
                                subStrata: Int = 16): DataFrame =
-    clusterBalancedAdmitAssigned(quota, assignCells(centroids, batch),
-      perCell, subStrata)
+    clusterBalancedAdmitAssigned(clusterPickAssigned(quota,
+      assignCells(centroids, batch), perCell, subStrata))
 
-  /** [[clusterBalancedAdmitWith]] over an ALREADY cell-assigned batch
-    * `(vec_id, cell)` — the admission loop assigns each micro-batch once
-    * and feeds both the admit and the quota update from it (standalone,
-    * the pair re-ran the broadcast-centroid assignment and its centroid
-    * collect twice per batch). */
-  def clusterBalancedAdmitAssigned(quota: DataFrame, assigned: DataFrame,
-                                   perCell: Int = 8,
-                                   subStrata: Int = 16): DataFrame =
+  /** The merged top-`perCell` pick over quota ∪ an ALREADY cell-assigned
+    * batch `(vec_id, cell)`: `(vec_id, cell, is_batch, rk)`, the one pick
+    * both [[clusterBalancedAdmitAssigned]] (its batch rows) and
+    * [[clusterQuotaAfterAssigned]] (all of it) project. The admission loop
+    * assigns and picks each micro-batch once and feeds both from it. */
+  def clusterPickAssigned(quota: DataFrame, assigned: DataFrame,
+                          perCell: Int = 8, subStrata: Int = 16): DataFrame =
     perCellPick(
       quota.select(col("vec_id"), col("cell"), lit(false).as("is_batch"))
         .unionAll(assigned
           .select(col("vec_id"), col("cell"), lit(true).as("is_batch"))),
       perCell, subStrata)
-      .filter(col("is_batch"))
+
+  /** The admissions of a [[clusterPickAssigned]] pick: its batch rows. */
+  def clusterBalancedAdmitAssigned(pick: DataFrame): DataFrame =
+    pick.filter(col("is_batch"))
       .select(col("vec_id"), col("cell"), col("rk"))
       .orderBy(col("vec_id"))
 
@@ -830,19 +832,12 @@ object Similarity {
   def clusterQuotaAfter(centroids: DataFrame, quota: DataFrame,
                         batch: DataFrame, perCell: Int = 8,
                         subStrata: Int = 16): DataFrame =
-    clusterQuotaAfterAssigned(quota, assignCells(centroids, batch),
-      perCell, subStrata)
+    clusterQuotaAfterAssigned(clusterPickAssigned(quota,
+      assignCells(centroids, batch), perCell, subStrata))
 
-  /** [[clusterQuotaAfter]] over an already cell-assigned batch — see
-    * [[clusterBalancedAdmitAssigned]]. */
-  def clusterQuotaAfterAssigned(quota: DataFrame, assigned: DataFrame,
-                                perCell: Int = 8,
-                                subStrata: Int = 16): DataFrame =
-    perCellPick(
-      quota.select(col("vec_id"), col("cell"))
-        .unionAll(assigned.select(col("vec_id"), col("cell"))),
-      perCell, subStrata)
-      .select(col("vec_id"), col("cell"))
+  /** The quota of a [[clusterPickAssigned]] pick: all of its keys. */
+  def clusterQuotaAfterAssigned(pick: DataFrame): DataFrame =
+    pick.select(col("vec_id"), col("cell"))
 
   /** One-shot convenience over the artifact pair: train centroids on the
     * standing corpus, derive its quota, admit the batch — the

@@ -46,7 +46,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *     — a legitimate replay's always do, out-of-order NEW input never
   *     does — and, where the frontier artifact is an append, must each be
   *     present in it (a torn append advances the frontier while losing
-  *     rows).
+  *     rows). Both checks run only on a batch that drops something.
   *
   * Exactly-once output is Structured Streaming's idempotent-sink rule:
   * a failed micro-batch replays with the same id and the same input
@@ -192,7 +192,8 @@ object ArtifactLoop {
     * present in the frontier artifact — a crash mid-job-commit of an
     * APPEND can advance the artifact's max while other rows never became
     * visible, which the output check cannot see but a replayed row
-    * missing from the artifact exposes.
+    * missing from the artifact exposes. Both checks run only on a batch
+    * that drops something; the steady-state batch pays one bounds job.
     */
   private[streaming] def aboveFrontier(batch: DataFrame, frontier: Option[Long],
       outDir: String, opName: String, idCol: String = "doc_id",
@@ -200,8 +201,9 @@ object ArtifactLoop {
     case None => batch
     case Some(f) =>
       val dropped = batch.filter(col(idCol) <= f)
-      requireDroppedAreReplays(dropped, f, outDir, opName, idCol)
-      torn.foreach { t =>
+      val anyDropped = requireDroppedAreReplays(dropped, f, outDir, opName, idCol)
+      // nothing dropped → the torn join is empty by construction: skip it
+      if (anyDropped) torn.foreach { t =>
         val keys = t.keys(dropped)
         val n = keys.join(t.stored, keys.columns.toSeq, "left_anti").count()
         require(n == 0,
@@ -220,12 +222,13 @@ object ArtifactLoop {
     * prune non-overlapping batch dirs. A frontier with NO committed
     * output (an artifact seeded from a batch-mode run against a fresh
     * outDir) treats every drop as unplaced — the correct loud
-    * diagnostic, not an obscure empty-read error.
+    * diagnostic, not an obscure empty-read error. Returns whether
+    * anything was dropped.
     */
   private def requireDroppedAreReplays(dropped: DataFrame, frontier: Long,
-      outDir: String, opName: String, idCol: String): Unit = {
+      outDir: String, opName: String, idCol: String): Boolean = {
     val bounds = dropped.agg(min(col(idCol)), max(col(idCol))).head()
-    if (bounds.isNullAt(0)) return // nothing dropped
+    if (bounds.isNullAt(0)) return false // nothing dropped
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     val sess = dropped.sparkSession
     val dirs = committedBatchDirs(sess, outDir).map(_.toString)
@@ -241,6 +244,7 @@ object ArtifactLoop {
         s"total) is at or below the frontier $frontier but holds no " +
         "committed output row — out-of-order ingest (not a replay); " +
         "re-run through the whole-corpus operator")
+    true
   }
 
   /** Pin the one-row `indexDir/params` artifact: on the first batch it

@@ -170,12 +170,14 @@ object StreamingDedup {
           // re-derived snapshot would equal the latest committed one, and
           // writing it under a fresh name would only churn the retention
           // window — skip the whole mutation block
-          if (!eff.isEmpty) {
+          // ONE stats action: emptiness and the snapshot name together
+          val effStats = eff.agg(count(lit(1)), max(col("doc_id"))).head()
+          if (effStats.getLong(0) > 0) {
             // snapshot name = the batch's own id frontier (max doc_id),
             // NOT the streaming batch id (see ArtifactLoop): eff ids are
             // above the artifact frontier, and a replay re-derives the
             // same name with identical content
-            val effMax = eff.agg(max(col("doc_id"))).head().getLong(0)
+            val effMax = effStats.getLong(1)
             // batch shingles are shared between admission and the artifact
             // append — shingling is the hottest dedup stage, don't pay it 2×
             val bSh = graft.operators.NearDup.shingled(eff).persist()
@@ -354,10 +356,11 @@ object StreamingDedup {
           // effective-empty batch (full replay): nothing to admit and the
           // re-derived label snapshot would equal the committed one — skip
           // the mutation block (same reasoning as the near-dup loop)
-          if (!eff.isEmpty) {
+          val effStats = eff.agg(count(lit(1)), max(col("vec_id"))).head()
+          if (effStats.getLong(0) > 0) {
             // snapshot name = the batch's id frontier, not the streaming
             // batch id (see the near-dup loop)
-            val effMax = eff.agg(max(col("vec_id"))).head().getLong(0)
+            val effMax = effStats.getLong(1)
             val (admissions, newLabels) = graft.operators.Similarity
               .semanticDedupIncremental(idxEmb, idxBuckets, idxLab, eff,
                 threshold, numPlanes)

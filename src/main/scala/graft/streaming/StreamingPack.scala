@@ -256,36 +256,38 @@ object StreamingPack {
       try {
         val sess = b.sparkSession
         // plain read, no checkpoint: the quota table is ≤ cells×perCell
-        // rows and consumed three times (frontier agg, admit, after) —
-        // re-reading a 128-row parquet beats an eager checkpoint job per
-        // micro-batch whose cached blocks leak for the stream's lifetime
-        // (the r12 importance-loop lesson)
+        // rows and consumed twice (frontier agg, pick) — re-reading a
+        // 128-row parquet beats an eager checkpoint job per micro-batch
+        // whose cached blocks leak for the stream's lifetime (the r12
+        // importance-loop lesson)
         val st = readClusterQuota(sess, stateDir, artifactDir)
         val frontier = st.agg(coalesce(max(col("max_vec_id")), lit(-1L)))
           .head().getLong(0)
-        val eff = widened(b.filter(col("vec_id") > frontier))
-        // ONE cell-assignment pass per batch (checkpointed: the admit
-        // and the quota update both consume it — standalone they re-ran
-        // the broadcast-centroid assignment twice), and ONE stats
-        // action replacing the separate isEmpty + max-frontier jobs
-        val cents = sess.read.parquet(s"$artifactDir/centroids")
-        val assigned = graft.operators.Similarity.assignCells(cents, eff)
-          .localCheckpoint()
-        val effStats = assigned
+        val fresh = b.filter(col("vec_id") > frontier)
+        // ONE stats action (count + new frontier) BEFORE the centroid read
+        // and the assignment: an effective-empty (replayed) batch skips both
+        val effStats = fresh
           .agg(count(lit(1)), coalesce(max(col("vec_id")), lit(-1L))).head()
         if (effStats.getLong(0) > 0) {
-          val quota = st.select(col("vec_id"), col("cell"))
+          // ONE assignment and ONE pick over quota ∪ batch per batch,
+          // checkpointed: the output rows and the quota snapshot are both
+          // projections of it
+          val pick = graft.operators.Similarity.clusterPickAssigned(
+            st.select(col("vec_id"), col("cell")),
+            graft.operators.Similarity.assignCells(
+              sess.read.parquet(s"$artifactDir/centroids"), widened(fresh)),
+            perCell).localCheckpoint()
           ArtifactLoop.writeOutputBatch(
-            graft.operators.Similarity.clusterBalancedAdmitAssigned(
-              quota, assigned, perCell), outDir, batchId)
+            graft.operators.Similarity.clusterBalancedAdmitAssigned(pick),
+            outDir, batchId)
           // frontier-bearing snapshot LAST (replay-safety contract),
-          // named by the frontier (see ArtifactLoop): eff is filtered to
+          // named by the frontier (see ArtifactLoop): fresh is filtered to
           // ids above the old frontier, so each effective batch's name
           // strictly increases, and a replayed batch re-derives the same
           // name with identical content (idempotent overwrite)
           val newFrontier = effStats.getLong(1)
           ArtifactLoop.commitSnapshot(graft.operators.Similarity
-            .clusterQuotaAfterAssigned(quota, assigned, perCell)
+            .clusterQuotaAfterAssigned(pick)
             .withColumn("max_vec_id", lit(math.max(frontier, newFrontier))),
             stateDir, newFrontier)
         }

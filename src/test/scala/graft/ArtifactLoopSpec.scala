@@ -4,7 +4,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{ArtifactLoop, SaltedSessionStream, StreamingDedup, StreamingSessions, StreamingSketches}
+import graft.streaming.{ArtifactLoop, SaltedSessionStream, StreamingDedup, StreamingPack, StreamingSessions, StreamingSketches}
 
 /** Task-side probe: records the CALLER's shuffle partitions each time a
   * row passes, from inside a running query (local mode shares the JVM).
@@ -26,8 +26,9 @@ object CallerConfProbe {
   * loop runs on its query's own session at the fold partition count and
   * never writes the caller's conf; a memory-sink replay holds the
   * caller's conf only while its query is built, and the salted session
-  * replay never writes the caller's split size; and the replay harnesses
-  * leave no temp roots behind.
+  * replay never writes the caller's split size; the replay harnesses
+  * leave no temp roots behind; and a steady-state admission batch runs a
+  * pinned number of Spark jobs.
   */
 class ArtifactLoopSpec extends SparkSpec {
 
@@ -137,5 +138,60 @@ class ArtifactLoopSpec extends SparkSpec {
       val left = graftTmp() -- before
       assert(left.isEmpty, s"$name left $left")
     }
+  }
+
+  /** Spark jobs of one steady-state micro-batch: `file(0)` is drained
+    * first (the artifacts grow from it), then `file(1)` is appended and
+    * drained alone under [[Profile.measure]]. */
+  private def steadyBatchJobs(name: String, file: Int => DataFrame)(
+      drain: (java.nio.file.Path, String) => Unit): Int =
+    withTempRoot(s"graft-jobs-$name") { root =>
+      val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
+      StreamingSessions.appendReplayFile(file(0), in, 0)
+      drain(root, in.toString)
+      StreamingSessions.appendReplayFile(file(1), in, 1)
+      val (_, rec) = Profile.measure(name)(drain(root, in.toString))
+      assert(rec.batches == 1, s"$name: ${rec.json}")
+      rec.jobs
+    }
+
+  test("steady-state admission batches stay within their job budget") {
+    import spark.implicits._
+    // near-dup loop: the second file bridges the first file's two docs,
+    // so the batch has index-side edges, a merge and a label snapshot
+    def block(p: String, n: Int) = (0 until n).map(i => s"$p$i")
+    val (a, b, m) = (block("a", 150), block("b", 150), block("m", 150))
+    val docs = Seq(
+      Seq((0L, (a ++ m).mkString(" ")), (5L, (b ++ m).mkString(" "))),
+      Seq((10L, (a.drop(50) ++ m ++ b.take(100)).mkString(" ")),
+        (11L, (b ++ m.take(75) ++ block("f", 75)).mkString(" "))))
+    val nearDupJobs = steadyBatchJobs("neardup", i => docs(i).toDF("doc_id", "text")) {
+      (root, in) => StreamingDedup.nearDupAdmissionStream(spark, in,
+        s"$root/index", s"$root/out", s"$root/ckpt")
+    }
+    // cluster loop: frozen artifacts from the sf0.001 prefix, the tail
+    // in two id-ordered files
+    val emb = Tables.embeddings(spark, fixture)
+    val mx = emb.agg(max(col("vec_id"))).head().getLong(0)
+    val (cut, mid) = (mx * 4 / 5, mx * 9 / 10)
+    val idx = emb.filter(col("vec_id") < cut)
+    val slices = Seq(emb.filter(col("vec_id") >= cut && col("vec_id") < mid),
+      emb.filter(col("vec_id") >= mid))
+    val clusterJobs = steadyBatchJobs("cluster", slices) { (root, in) =>
+      if (!java.nio.file.Files.exists(root.resolve("art"))) {
+        graft.operators.Similarity.clusterArtifacts(idx)
+          .write.parquet(s"$root/art/centroids")
+        graft.operators.Similarity.clusterBalancedSample(idx)
+          .select(col("vec_id"), col("cell")).withColumn("max_vec_id", lit(cut - 1))
+          .write.parquet(s"$root/art/quota")
+      }
+      StreamingPack.clusterAdmissionStream(spark, in, s"$root/art",
+        s"$root/state", s"$root/out", s"$root/ckpt")
+    }
+    // measured 30 and 16 at local[4], bounds 1 and 2 above; an
+    // unconditional torn-append join reads 33, a pick evaluated per
+    // consumer 21
+    assert(nearDupJobs <= 31, s"near-dup batch ran $nearDupJobs jobs")
+    assert(clusterJobs <= 18, s"cluster batch ran $clusterJobs jobs")
   }
 }

@@ -349,6 +349,68 @@ class NearDupSpec extends SparkSpec {
     assert(store == Set((1L, 0L), (10L, 0L)))
   }
 
+  /** `admitFromEdges` against a plain-Scala BFS component minimum over
+    * the same quotient graph: index ids `idx` (stored sparse labels
+    * `lab`), batch ids `batch`, verified adjacency `edges` (batch-batch
+    * pairs given once here, passed in both orientations). */
+  private def assertQuotientLabels(idx: Seq[Long], lab: Map[Long, Long],
+                                   batch: Seq[Long], edges: Seq[(Long, Long)]): Unit = {
+    val batchSet = batch.toSet
+    val qEdges = edges.map { case (b, o) =>
+      (b, if (batchSet(o)) o else lab.getOrElse(o, o)) }
+    val adj = qEdges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val nodes = batch ++ qEdges.map(_._2)
+    val compMin = scala.collection.mutable.Map.empty[Long, Long]
+    nodes.foreach { n =>
+      if (!compMin.contains(n)) {
+        val seen = scala.collection.mutable.Set(n)
+        val queue = scala.collection.mutable.Queue(n)
+        while (queue.nonEmpty)
+          adj.getOrElse(queue.dequeue(), Nil).foreach { m =>
+            if (seen.add(m)) queue.enqueue(m) }
+        seen.foreach(m => compMin(m) = seen.min)
+      }
+    }
+    val both = edges ++ edges.collect { case (b, o) if batchSet(o) => (o, b) }
+    val (adm, labels) = NearDup.admitFromEdges(
+      both.toDF("doc_b", "doc_o"), idx.toDF("doc_id"),
+      lab.toSeq.toDF("doc_id", "cluster_id"), batch.toDF("doc_id"))
+    assert(adm.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+      == batch.sorted.map(b => (b, compMin(b), compMin(b) == b)))
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      == nodes.map(n => n -> compMin(n)).toMap)
+  }
+
+  test("union-find quotient labels equal the BFS component minimum") {
+    // bridge: batch 10 touches index components {0} and {5}, batch 11
+    // touches 5 only — all of them label 0
+    assertQuotientLabels(Seq(0L, 5L), Map.empty, Seq(10L, 11L),
+      Seq(10L -> 0L, 10L -> 5L, 11L -> 5L))
+    // a stored label collapses index doc 3 onto component 1
+    assertQuotientLabels(Seq(1L, 3L, 4L), Map(3L -> 1L), Seq(10L, 11L, 12L),
+      Seq(10L -> 3L, 11L -> 12L, 12L -> 4L))
+    // a chain of 60 batch docs ending on an index component: a diameter
+    // the old 50-round propagation budget rejected
+    val chain = (100L until 160L)
+    assertQuotientLabels(Seq(2L, 7L), Map(7L -> 2L), chain,
+      chain.sliding(2).map(p => p(0) -> p(1)).toSeq :+ (159L -> 7L))
+    // seeded random quotient graphs
+    for (seed <- 1 to 5) {
+      val r = new scala.util.Random(seed)
+      val idx = (0L until 30L)
+      val lab = idx.filter(_ => r.nextDouble() < 0.4)
+        .map(i => i -> r.nextInt(i.toInt + 1).toLong).filter(p => p._1 != p._2).toMap
+      val batch = (100L until 140L)
+      val edges = (0 until 35).map { _ =>
+        val b = batch(r.nextInt(batch.size))
+        if (r.nextBoolean()) b -> idx(r.nextInt(idx.size))
+        else b -> batch(r.nextInt(batch.size))
+      }.filter(e => e._1 != e._2).distinct
+      assertQuotientLabels(idx, lab, batch, edges)
+    }
+  }
+
   test("clustersFromPairs: maxIters=1 accepts an empty (trivially converged) graph") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("doc_i", "doc_j")
