@@ -180,22 +180,6 @@ object Profile {
     (out, c.done(label, t0, System.currentTimeMillis(), wallMs))
   }
 
-  /** The scale mains' timer: runs `thunk` under [[measure]] and prints
-    * `label  seconds s`, then `rows=N` when `thunk` returns a row count and
-    * `(rate unit/s)` when `per` work units (events, docs, vectors) are
-    * given, then the record's JSON line, so every timed row carries its
-    * layer breakdown.
-    */
-  def time[T](label: String, per: Long = 0L, unit: String = "")(thunk: => T): T = {
-    val (out, p) = measure(label)(thunk)
-    val sec = p.wallMs / 1e3
-    val rows = out match { case n: Long => s"  rows=$n"; case _ => "" }
-    val rate = if (per > 0) f"  (${per / sec}%,.0f $unit/s)" else ""
-    println(f"$label%-28s $sec%8.2f s$rows$rate")
-    println(p.json)
-    out
-  }
-
   /** Profile one registry entry: [[Bench]]'s timed action, plus the shape
     * of the entry's own final plan (`toRdd` runs no listener-visible
     * action).

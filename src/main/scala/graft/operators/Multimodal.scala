@@ -715,7 +715,7 @@ object Multimodal {
     * path the 32-bit operator's scaladoc names: 16-BIT bands give 65 536
     * buckets, so banded candidates grow as n²/2¹⁶ instead of n²/2⁸ —
     * the image path's constants, which [[imageNearDups]] already sustains
-    * at 500k docs ([[graft.DevScale]] measures this path there too).
+    * at 500k docs (the `DevScale` scale main measures this path there too).
     */
   def audioFingerprints64(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession

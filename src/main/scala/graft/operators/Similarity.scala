@@ -951,9 +951,9 @@ object Similarity {
         ivfFloor)
       .unionAll(stats("lsh", lshTopKFrom(prep, numQueries, k), lshFloor))
       // SQ8 (r12): near-exact by construction — floor 190/200 (measured
-      // 197–200 across SFs, DevSqRecall); IVF-SQ8 shares the coarse
-      // quantizer's pruning ceiling, so its floor is the IVF floor
-      // (measured 151–163 vs IVF's 156–164)
+      // 197–200 across SFs by a one-off calibration main, since deleted);
+      // IVF-SQ8 shares the coarse quantizer's pruning ceiling, so its
+      // floor is the IVF floor (measured 151–163 vs IVF's 156–164)
       .unionAll(stats("sq8", sqTopKFrom(prepPq, numQueries, k), sq8Floor))
       .unionAll(stats("ivfsq",
         ivfSqTopKFrom(prep, centroids, numQueries, k, IvfProbes), ivfSqFloor))
@@ -1123,43 +1123,6 @@ object Similarity {
       it += 1
     }
     cents.map(_.toSeq).toSeq
-  }
-
-  /** PQ approximate top-k — the MEMORY-bounded ANN path that completes
-    * the family (brute: exact, LSH: bucketed, IVF: partitioned, PQ:
-    * compressed): every corpus vector is stored as `PqSubspaces` 4-bit
-    * codes (64 floats → 2 bytes, a 128× compression), and queries score
-    * the whole corpus by asymmetric distance computation — codebook
-    * lookups instead of raw vectors. At 100 TB the codes table is what
-    * fits in memory when the embedding column cannot; the scan is
-    * embarrassingly parallel and the nested-loop side is only the
-    * broadcast 20-query set (exempted in `PlanAuditSpec` alongside
-    * `ann_topk_brute`, whose scan shape PQ intentionally shares — PQ IS
-    * brute force over compressed codes).
-    *
-    * Every step is deterministic and engine-portable (md5 seeds,
-    * fixed-point Lloyd updates, 6-dp rounded assignment and ranking), so
-    * the DuckDB oracle replays training, encoding, ADC, and ranking
-    * bit-for-bit. Recall vs the exact baseline is additionally
-    * floor-gated in `SimilaritySpec`.
-    */
-  /** Diagnostic: ADC score of each vector against its OWN codes — the
-    * reconstruction quality ceiling (1.0 = lossless). Dev aid for sizing
-    * the codebooks; not a declared query.
-    */
-  private[graft] def pqSelfScores(embeddings: DataFrame): DataFrame = {
-    val prep = pqPrepared(embeddings).localCheckpoint()
-    val tr = pqTrainCorpus(prep)
-    val books = pqTrainAllSubspaces(tr)
-    val encoded = (0 until PqSubspaces).foldLeft(prep) { (df, s) =>
-      df.withColumn(s"code$s",
-        pqNearest(df, slice(col("vn"), s * PqSubDim + 1, PqSubDim), books(s)))
-    }
-    val contributions = (0 until PqSubspaces).map(s =>
-      dotN(prep, slice(col("vn"), s * PqSubDim + 1, PqSubDim),
-        element_at(typedlit(books(s)), (col(s"code$s") + 1).cast("int"))))
-    encoded.select(col("vec_id"),
-      contributions.reduce(_ + _).as("self_score"))
   }
 
   /** Frozen-codebook PQ encoding of a new batch — the daily-run member of
@@ -1663,6 +1626,24 @@ object Similarity {
     (0 until PqSubspaces).map(s =>
       element_at(col(s"lut$s"), (col(s"code$s") + 1).cast("int")))
 
+  /** PQ approximate top-k — the MEMORY-bounded ANN path that completes
+    * the family (brute: exact, LSH: bucketed, IVF: partitioned, PQ:
+    * compressed): every corpus vector is stored as `PqSubspaces` 4-bit
+    * codes (64 floats → 2 bytes, a 128× compression), and queries score
+    * the whole corpus by asymmetric distance computation — codebook
+    * lookups instead of raw vectors. At 100 TB the codes table is what
+    * fits in memory when the embedding column cannot; the scan is
+    * embarrassingly parallel and the nested-loop side is only the
+    * broadcast 20-query set (exempted in `PlanAuditSpec` alongside
+    * `ann_topk_brute`, whose scan shape PQ intentionally shares — PQ IS
+    * brute force over compressed codes).
+    *
+    * Every step is deterministic and engine-portable (md5 seeds,
+    * fixed-point Lloyd updates, 6-dp rounded assignment and ranking), so
+    * the DuckDB oracle replays training, encoding, ADC, and ranking
+    * bit-for-bit. Recall vs the exact baseline is additionally
+    * floor-gated in `SimilaritySpec`.
+    */
   def pqTopK(embeddings: DataFrame, numQueries: Int, k: Int): DataFrame = {
     val prep = pqPrepared(embeddings).localCheckpoint()
     val tr = pqTrainCorpus(prep)

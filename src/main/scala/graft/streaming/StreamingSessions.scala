@@ -163,14 +163,7 @@ object StreamingSessions {
       .write.partitionBy("slice").parquet(stage.toString)
     (1 to slices).foreach { i =>
       val dir = stage.resolve(s"slice=$i")
-      if (java.nio.file.Files.isDirectory(dir)) {
-        val part = java.nio.file.Files.list(dir).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-        val dest = inDir.resolve(f"$i%05d.parquet")
-        java.nio.file.Files.move(part, dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dest.toFile.setLastModified(i * 60000L)
-      }
+      if (java.nio.file.Files.isDirectory(dir)) stageReplayFile(dir, inDir, i)
     }
     root
   }
@@ -353,12 +346,55 @@ object StreamingSessions {
   def appendReplayFile(df: DataFrame, inDir: java.nio.file.Path, seq: Int): Unit = {
     val tmpDir = inDir.resolveSibling(s"stage_$seq")
     df.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-    val part = java.nio.file.Files.list(tmpDir).iterator().asScala
+    stageReplayFile(tmpDir, inDir, seq)
+  }
+
+  /** Move the one parquet part file written under `partDir` to
+    * `inDir/<seq>.parquet` and pin its mtime to `seq` minutes, the order
+    * the file source replays it in.
+    */
+  private def stageReplayFile(partDir: java.nio.file.Path,
+                              inDir: java.nio.file.Path, seq: Int): Unit = {
+    val part = java.nio.file.Files.list(partDir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
     val dest = inDir.resolve(f"$seq%05d.parquet")
     java.nio.file.Files.move(part, dest,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     dest.toFile.setLastModified(seq * 60000L)
+  }
+
+  /** Write the `nBatches` slices of `df` (`split(i, nBatches)`) as
+    * mtime-ordered replay files under `inDir`, one micro-batch each.
+    */
+  private[streaming] def writeSplit(df: DataFrame, inDir: java.nio.file.Path,
+                                    nBatches: Int, split: (Int, Int) => Column): Unit = {
+    java.nio.file.Files.createDirectories(inDir)
+    (0 until nBatches).foreach { i =>
+      appendReplayFile(df.filter(split(i, nBatches)), inDir, i + 1)
+    }
+  }
+
+  /** `xxhash64(cols) mod n` — the default deterministic batch split. */
+  private[streaming] def hashSplit(cols: String*)(i: Int, n: Int): Column =
+    pmod(xxhash64(cols.map(col): _*), lit(n)) === i
+
+  /** The replay runner of the `transformWithState` twins: `input` split
+    * two ways by `xxhash64(splitCols)`, streamed file-per-micro-batch
+    * through `stage` on the RocksDB provider with 4 state partitions, and
+    * returned as the sorted `user_id` completion set.
+    */
+  private[streaming] def replayTwoWay(input: DataFrame, name: String,
+      splitCols: String*)(stage: DataFrame => DataFrame): DataFrame = {
+    val spark = input.sparkSession
+    val root = java.nio.file.Files.createTempDirectory(s"graft_${name}_")
+    val inDir = root.resolve("in")
+    writeSplit(input, inDir, 2, hashSplit(splitCols: _*))
+    replayToMemory(spark, root, s"graft_${name}_sink", Seq(
+      StateStoreProvider -> RocksDbProvider,
+      "spark.sql.shuffle.partitions" -> "4")) {
+      stage(spark.readStream.schema(input.schema)
+        .option("maxFilesPerTrigger", "1").parquet(inDir.toString))
+    }.select(col("user_id")).orderBy(col("user_id"))
   }
 
   /** The `i`-th far-future [[FlushUser]] watermark-flush event (one row,
@@ -592,23 +628,12 @@ object StreamingSessions {
     // otherwise a fixture with such a session crashes the replay
     val sessions = graft.operators.Sessions.sessionAgg(events, gap)
       .filter(col("session_sum").isNotNull)
-      .select(col("user_id"), col("session_sum")).as[AlertInput]
-    val root = java.nio.file.Files.createTempDirectory("graft_tws_")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
+      .select(col("user_id"), col("session_sum"))
     // deterministic two-way split so ~half of each user's sessions land
     // in the second micro-batch (exercises the suppress path cross-batch)
-    appendReplayFile(sessions.filter(pmod(xxhash64(col("user_id"),
-      col("session_sum")), lit(2)) === 0).toDF(), inDir, 1)
-    appendReplayFile(sessions.filter(pmod(xxhash64(col("user_id"),
-      col("session_sum")), lit(2)) === 1).toDF(), inDir, 2)
-    replayToMemory(spark, root, "graft_tws_sink", Seq(
-      StateStoreProvider -> RocksDbProvider,
-      "spark.sql.shuffle.partitions" -> "4")) {
-      alertOnceTws(spark.readStream
-        .schema(org.apache.spark.sql.Encoders.product[AlertInput].schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-        .as[AlertInput], threshold).toDF()
-    }.select(col("user_id")).orderBy(col("user_id"))
+    replayTwoWay(sessions, "tws", "user_id", "session_sum") { src =>
+      alertOnceTws(src.as[AlertInput], threshold).toDF()
+    }
   }
 }
 
@@ -727,20 +752,9 @@ object FunnelCoverage {
     * to the batch unordered-coverage rule.
     */
   def replayCoverage(events: DataFrame, steps: Seq[String]): DataFrame = {
-    val spark = events.sparkSession
-    val root = java.nio.file.Files.createTempDirectory("graft_funnel_")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    val slim = events.select(col("user_id"), col("event_type"), col("event_id"))
-    StreamingSessions.appendReplayFile(
-      slim.filter(pmod(xxhash64(col("event_id")), lit(2)) === 0), inDir, 1)
-    StreamingSessions.appendReplayFile(
-      slim.filter(pmod(xxhash64(col("event_id")), lit(2)) === 1), inDir, 2)
-    StreamingSessions.replayToMemory(spark, root, "graft_funnel_sink", Seq(
-      StreamingSessions.StateStoreProvider -> StreamingSessions.RocksDbProvider,
-      "spark.sql.shuffle.partitions" -> "4")) {
-      coverageStream(spark.readStream.schema(slim.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString), steps).toDF()
-    }.select(col("user_id")).orderBy(col("user_id"))
+    StreamingSessions.replayTwoWay(
+      events.select(col("user_id"), col("event_type"), col("event_id")),
+      "funnel", "event_id")(coverageStream(_, steps).toDF())
   }
 }
 

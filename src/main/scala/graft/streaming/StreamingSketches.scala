@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Sketches
+import graft.streaming.StreamingSessions.{hashSplit, writeSplit}
 
 /** Streaming twin of the day-over-day drift monitor
   * ([[graft.operators.Sketches.valueDriftDaily]]): a `foreachBatch` loop
@@ -67,27 +68,11 @@ object StreamingSketches {
       Sketches.qdigestUpdate(_, _, sigma), modSplit("event_id"))
   }
 
-  /** `xxhash64(idCol) mod n` — the default deterministic batch split. */
-  private def hashSplit(idCol: String)(i: Int, n: Int): Column =
-    pmod(xxhash64(col(idCol)), lit(n)) === i
-
   /** `idCol mod n` — the engine-portable split the q-digest oracle and
     * the SQ8 maintainer replay.
     */
   private def modSplit(idCol: String)(i: Int, n: Int): Column =
     pmod(col(idCol), lit(n)) === i
-
-  /** Write the `nBatches` slices of `documents` (`split(i, nBatches)`) as
-    * mtime-ordered replay files under `inDir`, one micro-batch each.
-    */
-  private def writeSplit(documents: DataFrame, inDir: java.nio.file.Path,
-                         nBatches: Int, split: (Int, Int) => Column): Unit = {
-    java.nio.file.Files.createDirectories(inDir)
-    (0 until nBatches).foreach { i =>
-      StreamingSessions.appendReplayFile(
-        documents.filter(split(i, nBatches)), inDir, i + 1)
-    }
-  }
 
   /** Generic in-memory fold: split `documents` into `nBatches`
     * deterministic micro-batches and fold each into an artifact with

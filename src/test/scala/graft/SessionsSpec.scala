@@ -42,6 +42,18 @@ class SessionsSpec extends SparkSpec {
     assert(r.getAs[Double]("session_sum") == 6.0)
     // session_end = last event + gap
     assert(r.getAs[java.sql.Timestamp]("session_end") == ts("2024-01-01 00:01:28"))
+    // the same chain on a derived clock (the ingest-time variant): hours
+    // apart in `ts`, but the clock column (0 s, 29 s, 58 s) is what
+    // sessionizes
+    val ingest = events(
+      ("2024-01-01 00:00:00", 1L, 1.0),
+      ("2024-01-01 05:00:00", 1L, 2.0),
+      ("2024-01-01 10:00:00", 1L, 3.0))
+      .withColumn("ingest_ts",
+        timestamp_seconds(lit(1704067200L) + ($"value" - 1).cast("long") * 29))
+    val byClock = Sessions.sessionAggBy(ingest, lit("30 seconds"), $"ingest_ts").collect()
+    assert(byClock.map(_.getAs[Long]("event_count")).toSeq == Seq(3L))
+    assert(Sessions.sessionAgg(ingest, lit("30 seconds")).count() == 3)
   }
 
   test("rounding: avg at a half-cent boundary rounds half-up") {

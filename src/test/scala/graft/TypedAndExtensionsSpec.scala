@@ -46,5 +46,12 @@ class TypedAndExtensionsSpec extends SparkSpec {
       SparkSession.setDefaultSession(prev)
       SparkSession.setActiveSession(prev)
     }
+    // the runtime path for a session built elsewhere binds the same
+    // expression into that session's function registry
+    val s3 = spark.newSession()
+    val dot = "SELECT graft_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d"
+    intercept[org.apache.spark.sql.AnalysisException](s3.sql(dot))
+    graft.functions.ArrayOps.register(s3)
+    assert(s3.sql(dot).collect().head.getDouble(0) == 32.0)
   }
 }

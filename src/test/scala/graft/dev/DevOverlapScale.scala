@@ -8,9 +8,7 @@ package graft
 //   pair readout  — sources²/2 ≈ 500k pairs of ~KB artifact merges,
 //                   corpus never touched
 // and checks the estimates against the planted truth at the same
-// union-relative bound the oracle gate uses (5%). Args: [nSrc] [vocab].
-// The ARCHITECTURE.md rows were taken at 32 cores: set SPARK_GRAFT_CPUS=32
-// to re-run one (the session factory defaults to 4).
+// union-relative bound the oracle gate uses (5%). Args: [nSrc] [vocab] [lgK].
 import org.apache.spark.sql.functions._
 
 object DevOverlapScale {
@@ -24,7 +22,7 @@ object DevOverlapScale {
         .as("source"),
       concat(lit("t"), expr(s"id div $v") * step + pmod(col("id"), lit(v)))
         .as("tok"))
-    import Profile.time
+    import ScaleCorpus.time
     val lgK = args.drop(2).headOption.map(_.toInt).getOrElse(12)
     val state = time("state_build") {
       val st = toks.groupBy(col("source"))

@@ -5,9 +5,9 @@ package graft
 // every declared query (or the named subset), so plan-shape claims in
 // OPTIMIZATION_r*.md are checkable without running Spark.
 //
-// Usage: runMain graft.DevPlans <tag> <suffix> [query ...]
-//   e.g. runMain graft.DevPlans r14 before
-//        runMain graft.DevPlans r14 after t1_sessions_30s q3_top_revenue
+// Usage: sbt "Test/runMain graft.DevPlans <tag> <suffix> [query ...]"
+//   e.g. sbt "Test/runMain graft.DevPlans r14 before"
+//        sbt "Test/runMain graft.DevPlans r14 after t1_sessions_30s q3_top_revenue"
 //
 // Queries whose registry closure RUNS work at construction time (the
 // streaming replays execute their micro-batches before returning a frame)

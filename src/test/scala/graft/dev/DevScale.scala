@@ -1,94 +1,76 @@
 package graft
 
-// Scratch scale harness (dev aid): drives the session engine over a
-// synthetic 10M-row event stream on local[SPARK_GRAFT_CPUS] to measure
-// throughput and confirm the plan survives a 100×-rows scale-up of the
-// bench table.
-// The ARCHITECTURE.md rows were taken at 32 cores: set SPARK_GRAFT_CPUS=32
-// to re-run one (the session factory defaults to 4).
+// Scale harness: drives the session engine over a synthetic 10M-row event
+// stream, and the curation, dedup, ANN and sketch operators over 500k
+// docs and 500k×64 vectors (ScaleCorpus), to measure throughput and
+// confirm the plans survive a 100×-rows scale-up of the bench tables.
+// Args: [nEvents] [row ...]; naming rows runs only those rows, and
+// generates only the corpora they read.
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ScaleCorpus.{stored, time}
 import graft.operators.Sessions
 
 object DevScale {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
     val users = 50000L
+    val nDocs = 500000L
     val spark = SparkEntry.session()
-    // deterministic synthetic stream: n events, `users` tenants, uniform
-    // over 30 days (inter-event gap/user ≈ 13 min at 10M/50k)
-    val startMicros = 1704067200000000L // 2024-01-01 UTC
-    val spanMicros = 30L * 86400000000L
-    def synth(userCol: org.apache.spark.sql.Column) = spark.range(n).select(
-      col("id").as("event_id"),
-      timestamp_micros(lit(startMicros) + pmod(xxhash64(col("id")), lit(spanMicros)))
-        .as("ts"),
-      userCol.as("user_id"),
-      (pmod(xxhash64(col("id") + 13), lit(20000)) / 100.0).as("value"))
-    val events = synth(pmod(xxhash64(col("id") + 7), lit(users)))
-    events.write.mode("overwrite").parquet("/tmp/scale_events")
-    val ev = spark.read.parquet("/tmp/scale_events")
-    // optional row filter (args after nEvents): run only the named rows
-    val onlyRows = args.drop(1).toSet
-    def time(name: String)(f: => Long): Unit =
-      if (onlyRows.isEmpty || onlyRows(name)) Profile.time(name, n, "events")(f)
-    time("sessions_30min")(Sessions.sessionAgg(ev, lit("30 minutes")).count())
-    time("sessions_dynamic")(Sessions.sessionAgg(ev, Sessions.scaledDynamicGap).count())
-    time("big_customers")(Sessions.bigCustomers(
+    val only = args.drop(1).toSet
+    def wanted(rows: String*): Boolean = only.isEmpty || rows.exists(only)
+    // each row names the corpus it reads, generated on first use before
+    // the row's timer starts
+    def row(name: String, reads: => DataFrame, per: Long, unit: String,
+            readers: Seq[String] = Nil)(f: => Long): Unit =
+      if (wanted(name +: readers: _*)) { reads; time(name, per, unit)(f) }
+
+    // n events, `users` tenants, uniform over 30 days (inter-event
+    // gap/user ≈ 13 min at 10M/50k)
+    lazy val ev = stored(ScaleCorpus.events(spark, n, ScaleCorpus.uniformUser(users)),
+      "/tmp/scale_events")
+    def evRow(name: String, reads: => DataFrame = ev)(f: => Long): Unit =
+      row(name, reads, n, "events")(f)
+    // 100× the sf0.1 documents table: 500k docs, 1% planted near-dup pairs
+    lazy val dc = stored(ScaleCorpus.docs(spark, nDocs), "/tmp/scale_docs")
+    def docRow(name: String, reads: => DataFrame = dc)(f: => Long): Unit =
+      row(name, reads, nDocs, "docs")(f)
+    // a build row writes the artifacts `reader` reads, so it runs when
+    // either is named
+    def buildRow(name: String, reader: String, reads: => DataFrame = dc)(f: => Long): Unit =
+      row(name, reads, nDocs, "docs", Seq(reader))(f)
+
+    evRow("sessions_30min")(Sessions.sessionAgg(ev, lit("30 minutes")).count())
+    evRow("sessions_dynamic")(Sessions.sessionAgg(ev, Sessions.scaledDynamicGap).count())
+    evRow("big_customers")(Sessions.bigCustomers(
       Sessions.sessionAgg(ev, lit("30 minutes")), 400.0).count())
-    time("daily_activity")(graft.operators.Relational.dailyActivity(ev).count())
+    evRow("daily_activity")(graft.operators.Relational.dailyActivity(ev).count())
 
     // skew stress: 90% of events on ONE user. Sessionization cannot split
     // a single key (the window merge needs the key's full timeline), so
     // the hot partition bounds wall-clock — measured here honestly; the
     // mitigations are upstream (pre-bucket hot tenants, coarser gap) not
     // magic. AQE rebalances the OTHER keys around it.
-    val skewed = synth(when(pmod(xxhash64(col("id") + 3), lit(10)) < 9, 0L)
-      .otherwise(pmod(xxhash64(col("id") + 7), lit(users))))
-    skewed.write.mode("overwrite").parquet("/tmp/scale_events_skew")
-    val sk = spark.read.parquet("/tmp/scale_events_skew")
-    time("sessions_skew90")(Sessions.sessionAgg(sk, lit("30 minutes")).count())
+    lazy val sk = stored(ScaleCorpus.events(spark, n,
+      when(pmod(xxhash64(col("id") + 3), lit(10)) < 9, 0L)
+        .otherwise(ScaleCorpus.uniformUser(users))), "/tmp/scale_events_skew")
+    evRow("sessions_skew90", sk)(Sessions.sessionAgg(sk, lit("30 minutes")).count())
 
-    // dedup-kernel scale-up: 100× the sf0.1 documents table (500k synthetic
-    // docs, ~55 tokens each from a 31-word vocab, 1% planted near-dup pairs
-    // via a one-token edit of the previous doc). Measures the full
-    // MinHash+LSH pipeline (shingle -> signature -> band join -> verify)
-    // and clustering at a corpus the bench never sees.
-    val nDocs = 500000L
-    val vocab = Array("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
-      "eta", "theta", "iota", "kappa", "lambda", "mu", "nu", "xi", "omicron",
-      "pi", "rho", "sigma", "tau", "upsilon", "phi", "chi", "psi", "omega",
-      "scan", "hash", "merge", "join", "window", "batch", "query")
-    val words = (0 until 55).map(k =>
-      element_at(typedlit(vocab.toSeq),
-        (pmod(xxhash64(col("id") * 55 + k), lit(vocab.length)) + 1).cast("int")))
-    val baseText = concat_ws(" ", words: _*)
-    val docs = spark.range(nDocs).select(col("id").as("doc_id"),
-      when(pmod(col("id"), lit(100)) === 1,
-        // near-dup of the previous doc: same word stream shifted by one id,
-        // so ~54 of 55 tokens coincide with doc_id-1's text
-        concat_ws(" ", (0 until 55).map(k =>
-          element_at(typedlit(vocab.toSeq),
-            (pmod(xxhash64((col("id") - 1) * 55 + k), lit(vocab.length)) + 1)
-              .cast("int"))).dropRight(1) :+ lit("edited"): _*))
-        .otherwise(baseText).as("text"))
-    docs.write.mode("overwrite").parquet("/tmp/scale_docs")
-    val dc = spark.read.parquet("/tmp/scale_docs")
-    // the doc-row half of the same filter
-    val only = onlyRows
-    def timeDocs(name: String)(f: => Long): Unit =
-      if (only.isEmpty || only(name)) Profile.time(name, nDocs, "docs")(f)
-    timeDocs("minhash_lsh_500k")(
+    // dedup-kernel scale-up: the full MinHash+LSH pipeline (shingle ->
+    // signature -> band join -> verify) and clustering at a corpus the
+    // bench never sees
+    docRow("minhash_lsh_500k")(
       graft.operators.NearDup.minhashNearDups(dc).count())
-    timeDocs("dedup_clusters_500k")(
+    docRow("dedup_clusters_500k")(
       graft.operators.NearDup.nearDupClusters(dc).count())
-    timeDocs("simhash_500k")(
+    docRow("simhash_500k")(
       graft.operators.NearDup.simhashNearDups(dc).count())
     // incremental (daily-run) shape at the same 100× corpus: 400k-doc
     // index, 100k-doc new batch. Expected: the batch's ~1000 planted
     // near-dups (id%100==1 copies id-1, both in-batch here) are refused,
     // everything else admitted — printed for eyeball validation.
-    timeDocs("dedup_incremental_500k") {
+    docRow("dedup_incremental_500k") {
       val out = graft.operators.NearDup.incrementalNearDups(
         dc.filter(col("doc_id") < 400000L), dc.filter(col("doc_id") >= 400000L))
       val admitted = out.filter(col("admitted")).count()
@@ -101,35 +83,28 @@ object DevScale {
     // frames an OOM risk (LLM corpora commonly run 20-50% near-dup).
     // With the hints gone these are plain equi-joins; this run measures
     // the verify + clustering path at ~100k candidate pairs.
-    val dupDocs = spark.range(nDocs).select(col("id").as("doc_id"),
-      when(pmod(col("id"), lit(5)) === 1,
-        concat_ws(" ", (0 until 55).map(k =>
-          element_at(typedlit(vocab.toSeq),
-            (pmod(xxhash64((col("id") - 1) * 55 + k), lit(vocab.length)) + 1)
-              .cast("int"))).dropRight(1) :+ lit("edited"): _*))
-        .otherwise(baseText).as("text"))
-    dupDocs.write.mode("overwrite").parquet("/tmp/scale_docs_dup")
-    val dd = spark.read.parquet("/tmp/scale_docs_dup")
-    timeDocs("minhash_lsh_20pct_dup")(
+    lazy val dd = stored(ScaleCorpus.docs(spark, nDocs, dupEvery = 5),
+      "/tmp/scale_docs_dup")
+    docRow("minhash_lsh_20pct_dup", dd)(
       graft.operators.NearDup.minhashNearDups(dd).count())
-    timeDocs("dedup_clusters_20pct_dup")(
+    docRow("dedup_clusters_20pct_dup", dd)(
       graft.operators.NearDup.nearDupClusters(dd).count())
 
     // shard packing at 500k docs: the distributed prefix sum's stage-2
     // window sees 500k/4096 ≈ 122 rows; everything else is parallel
-    timeDocs("pack_shards_500k")(
+    docRow("pack_shards_500k")(
       graft.operators.Curation.packShards(dc, 65536L).count())
 
     // decontamination at 500k docs: ~24M 8-gram postings (50k-doc eval
     // split), equi-join on the 8-byte gram hash; the ~1% planted near-dup
     // chains whose members straddle the md5 eval split are the expected
     // contamination hits
-    timeDocs("decontaminate_500k")(
+    docRow("decontaminate_500k")(
       graft.operators.Curation.decontaminate(dc).count())
 
     // incremental EXACT admission at the same 400k/100k split: two hash
     // aggregations + one key-table equi-join — the cheap daily-run path
-    timeDocs("dedup_inc_exact_500k")(
+    docRow("dedup_inc_exact_500k")(
       graft.operators.Dedup.incrementalExact(
         dc.filter(col("doc_id") < 400000L),
         dc.filter(col("doc_id") >= 400000L)).count())
@@ -139,7 +114,7 @@ object DevScale {
     // timed APART from the admission (the recurring daily cost). The gap
     // between dedup_inc_indexed and dedup_incremental_500k is what the
     // persisted artifacts buy.
-    timeDocs("neardup_index_build") {
+    buildRow("neardup_index_build", "dedup_inc_indexed_500k") {
       val idx = dc.filter(col("doc_id") < 400000L)
       graft.operators.NearDup.shingled(idx)
         .write.mode("overwrite").parquet("/tmp/scale_idx_sh")
@@ -150,7 +125,7 @@ object DevScale {
         .write.mode("overwrite").parquet("/tmp/scale_idx_lab")
       spark.read.parquet("/tmp/scale_idx_lab").count()
     }
-    timeDocs("dedup_inc_indexed_500k") {
+    docRow("dedup_inc_indexed_500k") {
       val (adm, upd) = graft.operators.NearDup.incrementalNearDupsIndexed(
         spark.read.parquet("/tmp/scale_idx_sh"),
         spark.read.parquet("/tmp/scale_idx_sig"),
@@ -167,21 +142,11 @@ object DevScale {
     // stay deterministic. The curve below records recall (planted dups
     // dropped) and candidate volume around the auto answer.
     val nVecs = 500000L
-    def vecAt(idCol: org.apache.spark.sql.Column) =
-      transform(sequence(lit(0), lit(63)), d =>
-        (pmod(xxhash64(idCol * 64 + d), lit(2001)) - lit(1000)) / 1000.0)
-    val vecs = spark.range(nVecs).select(col("id").as("vec_id"),
-      when(pmod(col("id"), lit(100)) === 1,
-        // near-identical to the previous vector: one component nudged
-        transform(vecAt(col("id") - 1), (x, i) =>
-          x + when(i === 0, lit(0.01)).otherwise(lit(0.0))))
-        .otherwise(vecAt(col("id"))).as("embedding"))
-    vecs.write.mode("overwrite").parquet("/tmp/scale_vecs")
-    val ve = spark.read.parquet("/tmp/scale_vecs")
+    lazy val ve = stored(ScaleCorpus.vectors(spark, nVecs), "/tmp/scale_vecs")
     val autoP = graft.operators.Similarity.autoPlanes(nVecs)
     println(s"autoPlanes($nVecs) = $autoP")
     for (p <- Seq(autoP - 4, autoP, autoP + 4)) {
-      timeDocs(s"semantic_dedup p=$p") {
+      docRow(s"semantic_dedup p=$p", ve) {
         val out = graft.operators.Similarity.semanticDedup(ve, 0.9, numPlanes = p)
         val dropped = out.filter(!col("kept")).count()
         println(f"  (p=$p: dropped $dropped of ~5000 planted dups)")
@@ -192,7 +157,7 @@ object DevScale {
     // incremental semantic admission at the same 500k-vector corpus:
     // 400k-vector persisted index (bucket table + sparse labels — the
     // amortized build), then a 100k-vector batch admitted O(batch)
-    timeDocs("semdedup_index_build") {
+    buildRow("semdedup_index_build", "semdedup_inc_500k", ve) {
       val idx = ve.filter(col("vec_id") < 400000L)
       graft.operators.Similarity.bucketTable(idx, numPlanes = autoP)
         .write.mode("overwrite").parquet("/tmp/scale_vec_buckets")
@@ -201,7 +166,7 @@ object DevScale {
         .write.mode("overwrite").parquet("/tmp/scale_vec_labels")
       spark.read.parquet("/tmp/scale_vec_labels").count()
     }
-    timeDocs("semdedup_inc_500k") {
+    docRow("semdedup_inc_500k", ve) {
       val (adm, upd) = graft.operators.Similarity.semanticDedupIncremental(
         ve.filter(col("vec_id") < 400000L),
         spark.read.parquet("/tmp/scale_vec_buckets"),
@@ -218,7 +183,7 @@ object DevScale {
     // commit, label snapshot, vector/bucket artifact appends per batch) —
     // wall-clock here is the recurring cost of running semantic admission
     // as a stream instead of the single-shot incremental call above
-    timeDocs("sem_admission_stream") {
+    docRow("sem_admission_stream", ve) {
       val root = java.nio.file.Files.createTempDirectory("scale_sem_stream")
       try {
         val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
@@ -243,22 +208,22 @@ object DevScale {
     // word-TYPE table is 31 rows here), each of the 10 rounds is a tiny
     // cached-table aggregate; encoding is the heavy map-only pass over
     // ~27.5M tokens exploded to symbols
-    timeDocs("bpe_train_500k")(
+    docRow("bpe_train_500k")(
       graft.functions.TextAnalysis.trainBpeMerges(dc).count())
-    timeDocs("bpe_encode_500k")(
+    docRow("bpe_encode_500k")(
       graft.functions.TextAnalysis.encodeBpe(dc).count())
 
     // frozen-artifact encode: artifacts trained once on a 400k-doc prefix
     // (the amortized tokenizer build), then the 100k-doc tail encoded
     // O(batch) with the shipped tables — no second vocabulary pass
-    timeDocs("bpe_artifacts_build") {
+    buildRow("bpe_artifacts_build", "bpe_encode_inc_500k") {
       val (m, v) = graft.functions.TextAnalysis.bpeArtifacts(
         dc.filter(col("doc_id") < 400000L))
       m.write.mode("overwrite").parquet("/tmp/scale_bpe_merges")
       v.write.mode("overwrite").parquet("/tmp/scale_bpe_vocab")
       spark.read.parquet("/tmp/scale_bpe_vocab").count()
     }
-    timeDocs("bpe_encode_inc_500k")(
+    docRow("bpe_encode_inc_500k")(
       graft.functions.TextAnalysis.encodeBpeWith(
         spark.read.parquet("/tmp/scale_bpe_merges"),
         spark.read.parquet("/tmp/scale_bpe_vocab"),
@@ -272,26 +237,15 @@ object DevScale {
     // tracks merges APPLIED (≤ |word|−1), not the 1000-rank table — the
     // row the chained-replace spelling could never print (a 1000-node
     // replace chain per projection)
-    timeDocs("bpe_encode_1k_merges_500k") {
-      val rnd = new scala.util.Random(7L)
-      val vocab: Seq[String] = (0 until 20000).map { _ =>
-        (0 until (4 + rnd.nextInt(9))).map(_ => ('a' + rnd.nextInt(26)).toChar)
-          .mkString
-      }.distinct
-      val vlit = typedlit(vocab)
-      val rich = spark.range(500000).select(col("id").as("doc_id"),
-        concat_ws(" ", transform(sequence(lit(1), lit(30)), i =>
-          element_at(vlit, (pmod(xxhash64(col("id") * 31 + i), lit(vocab.size))
-            + 1).cast("int")))).as("text"))
-        .localCheckpoint() // time the tokenizer, not the generator
-      graft.functions.TextAnalysis.encodeBpe(rich, numMerges = 1000).count()
-    }
+    lazy val rich = ScaleCorpus.richDocs(spark, nDocs)
+    docRow("bpe_encode_1k_merges_500k", rich)(
+      graft.functions.TextAnalysis.encodeBpe(rich, numMerges = 1000).count())
 
     // k-means corpus clustering at 500k×64-dim (1000× the sf0.01 oracle
     // corpus): per iteration one map pass + a (cell,pos)=16×64-key
     // fixed-point shuffle — wall-clock should track the 4 corpus scans
     // (3 Lloyd + final assignment), nothing quadratic
-    timeDocs("cluster_embeddings_500k") {
+    docRow("cluster_embeddings_500k", ve) {
       val out = graft.operators.Similarity.clusterEmbeddings(ve)
       val cells = out.count()
       val covered = out.agg(sum(col("n_vectors"))).head().getLong(0)
@@ -303,13 +257,13 @@ object DevScale {
     // 16 cells × 64 dims = 1024 rows; admission of the 100k batch is the
     // map-only NearestCells pass (compare with cluster_embeddings_500k —
     // the gap is what freezing the quantizer buys a daily run)
-    timeDocs("cluster_assign_build") {
+    buildRow("cluster_assign_build", "cluster_assign_inc_500k", ve) {
       graft.operators.Similarity.clusterArtifacts(
         ve.filter(col("vec_id") < 400000L))
         .write.mode("overwrite").parquet("/tmp/scale_cents")
       spark.read.parquet("/tmp/scale_cents").count()
     }
-    timeDocs("cluster_assign_inc_500k")(
+    docRow("cluster_assign_inc_500k", ve)(
       graft.operators.Similarity.assignWith(
         spark.read.parquet("/tmp/scale_cents"),
         ve.filter(col("vec_id") >= 400000L)).count())
@@ -317,23 +271,23 @@ object DevScale {
     // PQ at 500k vectors (r9): 8 subspace codebooks trained + the whole
     // corpus encoded to 8 codes/vector + 20-query ADC scan over the
     // compressed codes — the memory-bounded ANN path at 100× bench scale
-    timeDocs("pq_topk_500k")(
+    docRow("pq_topk_500k", ve)(
       graft.operators.Similarity.pqTopK(ve, 20, 10).count())
     // the production composition at the same 500k: cell pruning should
     // cut the scored candidates ~cells/probes-fold vs the PQ full scan
-    timeDocs("ivfpq_topk_500k")(
+    docRow("ivfpq_topk_500k", ve)(
       graft.operators.Similarity.ivfPqTopK(ve, 20, 10).count())
 
     // sequence packing at 500k docs / ~27.5M tokens into 4096-token
     // sequences: the shared prefix sum plus a map-only explode —
     // ~500k + 6.7k span rows out, tokens never materialized
-    timeDocs("pack_sequences_500k")(
+    docRow("pack_sequences_500k")(
       graft.operators.Curation.packSequences(dc, 4096L).count())
 
     // token-budget mixture at 500k docs: per-language admission via the
     // (lang, md5-bucket) two-level prefix — no corpus-frame window; the
     // marker words live in the synthetic vocab, so langid stratifies
-    timeDocs("mixture_tokens_500k")(
+    docRow("mixture_tokens_500k")(
       graft.operators.Curation.mixtureSampleTokens(dc,
         Map("en" -> 500000L, "es" -> 500000L, "de" -> 1000000L,
             "zh" -> 2000000L)).count())
@@ -343,7 +297,7 @@ object DevScale {
     // near-dup doc (1%) copies its source's first 50 tokens, so its
     // chunks 0-4 lose to the source — expected ≈ 5k docs × 5 = 25k
     // dropped spans, printed for eyeballing
-    timeDocs("span_dedup_500k") {
+    docRow("span_dedup_500k") {
       val out = graft.operators.Dedup.spanDedup(dc)
       val dropped = out.agg(sum(col("spans_dropped"))).head().getLong(0)
       println(f"  ($dropped duplicate spans removed)")
@@ -355,72 +309,73 @@ object DevScale {
     // synthetic stream — measures that the watermarked window-agg state
     // (≤ 4 open windows per 6 h of event time) stays flat while the
     // harness cost tracks data volume, not window count
-    val ev6 = ev.select(col("event_id"), col("ts"), col("user_id"),
-      lit("view").as("event_type"), col("value"), lit("{}").as("props"))
-    time("sliding_replay_10m")(graft.streaming.StreamingSessions
+    lazy val ev6 = ScaleCorpus.eventTable(ev, lit("view"))
+    evRow("sliding_replay_10m", ev6)(graft.streaming.StreamingSessions
       .replaySlidingOutOfOrder(ev6).count())
 
     // bucketed co-located join: both sides bucketed+sorted on user_id join
     // with ZERO exchanges — the pre-partitioning strategy for repeated
     // fact⋈fact joins at 100 TB (vs a per-query shuffle)
-    val profiles = spark.range(users).select(col("id").as("user_id"),
-      pmod(xxhash64(col("id")), lit(5)).as("tier"))
-    spark.sql("DROP TABLE IF EXISTS ev_b"); spark.sql("DROP TABLE IF EXISTS pr_b")
-    // a fresh derby metastore doesn't know about dirs left by prior runs
-    Seq("ev_b", "pr_b").foreach { t =>
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"spark-warehouse/$t"))
+    if (wanted("bucketed_join_agg")) {
+      val profiles = spark.range(users).select(col("id").as("user_id"),
+        pmod(xxhash64(col("id")), lit(5)).as("tier"))
+      spark.sql("DROP TABLE IF EXISTS ev_b"); spark.sql("DROP TABLE IF EXISTS pr_b")
+      // a fresh derby metastore doesn't know about dirs left by prior runs
+      Seq("ev_b", "pr_b").foreach { t =>
+        org.apache.commons.io.FileUtils.deleteQuietly(
+          new java.io.File(s"spark-warehouse/$t"))
+      }
+      ev.write.mode("overwrite").bucketBy(32, "user_id").sortBy("user_id")
+        .saveAsTable("ev_b")
+      profiles.write.mode("overwrite").bucketBy(32, "user_id").sortBy("user_id")
+        .saveAsTable("pr_b")
+      val joined = spark.table("ev_b").join(spark.table("pr_b"), "user_id")
+        .groupBy(col("tier")).agg(count(lit(1)).as("n"))
+      val plan = joined.queryExecution.executedPlan.toString
+      // the tier-agg shuffle is expected; the JOIN key must not shuffle
+      val exchanges = "hashpartitioning\\(user_id".r.findAllIn(plan).length
+      println(s"bucketed-join exchanges on user_id = $exchanges (want 0)")
+      evRow("bucketed_join_agg")(joined.count())
     }
-    ev.write.mode("overwrite").bucketBy(32, "user_id").sortBy("user_id")
-      .saveAsTable("ev_b")
-    profiles.write.mode("overwrite").bucketBy(32, "user_id").sortBy("user_id")
-      .saveAsTable("pr_b")
-    val joined = spark.table("ev_b").join(spark.table("pr_b"), "user_id")
-      .groupBy(col("tier")).agg(count(lit(1)).as("n"))
-    val plan = joined.queryExecution.executedPlan.toString
-    // the tier-agg shuffle is expected; the JOIN key must not shuffle
-    val exchanges = "hashpartitioning\\(user_id".r.findAllIn(plan).length
-    println(s"bucketed-join exchanges on user_id = $exchanges (want 0)")
-    time("bucketed_join_agg")(joined.count())
 
     // round-5 additions at the same 500k-doc / 10M-event corpora ------
 
     // domain-reputation over 1000 synthetic sources (500 docs each): the
     // per-source rollup is domain-dimension-sized; the gate's anti-join
     // build side is the bad-source subset of those 1000 rows
-    val srcDocs = dc.withColumn("source",
+    lazy val srcDocs = dc.withColumn("source",
       concat(lit("src"), pmod(col("doc_id"), lit(1000))))
-    timeDocs("source_reputation_500k")(
+    docRow("source_reputation_500k", srcDocs)(
       graft.operators.Curation.sourceReputation(srcDocs).count())
-    timeDocs("gate_by_source_500k")(
+    docRow("gate_by_source_500k", srcDocs)(
       graft.operators.Curation.gateBySource(srcDocs).count())
 
     // token-id encoding at 500k docs: 31-token vocab broadcast to the
     // 27.5M-row exploded frame; per-doc order restored by a 55-element
     // struct sort — nothing corpus-global
-    timeDocs("tokenize_ids_500k")(
+    docRow("tokenize_ids_500k")(
       graft.functions.TextAnalysis.encodeTokenIds(dc, 1000).count())
 
     // BM25 search at 500k docs: the exploded frame filters to the three
     // query terms BEFORE aggregation, so the scored frame is
     // term-proportional (~1.5M rows of 27.5M)
-    timeDocs("search_bm25_500k")(
+    docRow("search_bm25_500k")(
       graft.functions.TextAnalysis.searchBm25(
         dc, Seq("scan", "hash", "edited"), 20).count())
 
     // retention triangle at 10M events / 50k users: two user-keyed hash
     // aggs + one user equi-join; output bounded by days² (30×30)
-    time("retention_10m")(
+    evRow("retention_10m")(
       graft.operators.Relational.retentionCohorts(ev).count())
 
     // bigram LM at 500k docs: ~27M bigram occurrences through two
     // map-combined count aggs + two per-distinct-gram joins
-    timeDocs("bigram_lm_500k")(
+    docRow("bigram_lm_500k")(
       graft.functions.TextAnalysis.bigramLmScore(dc).count())
 
     // corpus diff at 500k vs a 90%-overlap second version: one full
     // outer equi-join of md5 projections
-    timeDocs("corpus_diff_500k") {
+    docRow("corpus_diff_500k") {
       val v2 = dc.filter(col("doc_id") % 10 =!= 0)
         .withColumn("text", when(col("doc_id") % 7 === 0,
           concat(col("text"), lit(" v2"))).otherwise(col("text")))
@@ -431,7 +386,7 @@ object DevScale {
     // domain gate -> subset quantile gate -> exact dedup -> near-dup
     // canonicalize (full corpus) -> shard pack — the whole-corpus
     // near-dup clustering dominates, everything else is aggregations
-    timeDocs("pipeline_500k") {
+    docRow("pipeline_500k") {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(md5(col("text"))).orderBy(col("doc_id"))
       val g1 = srcDocs.join(graft.operators.Curation
@@ -451,24 +406,24 @@ object DevScale {
     // shuffle); the near-dup/admission joins touch only fixed-width
     // fingerprints. The doc_id frame is all these operators read.
     val mm = graft.operators.Multimodal
-    timeDocs("phash_500k")(mm.imageHashes(dc).count())
+    docRow("phash_500k")(mm.imageHashes(dc).count())
     // NOTE this corpus is adversarially duplicate-heavy at 500k: the
     // mod-256 pixel recipe renders identical images for doc ids equal
     // mod lcm(256, 221) = 56576, i.e. ~9-member identical classes →
     // ~4M TRUE pairs. The banded search clears it regardless (the join
     // stays band-bucketed; output size, not candidate blowup, is the
     // cost) — the image analogue of the 20%-duplicate text corpora
-    timeDocs("image_dups_500k")(mm.imageNearDups(dc).count())
+    docRow("image_dups_500k")(mm.imageNearDups(dc).count())
     // incremental perceptual admission at the daily-run split: the 400k
     // index side is the persisted FINGERPRINT artifact (computed once
     // here, read back as parquet) — batch cost is fingerprint 100k new
     // images + 4 banded joins against the artifact. On THIS corpus every
     // batch doc has an identical smaller-id twin (see above), so all
     // 100k are refused — printed to keep the measurement honest
-    if (only.isEmpty || only("image_admission_500k"))
+    if (wanted("image_admission_500k"))
       mm.imageHashes(dc.filter(col("doc_id") < 400000L))
         .write.mode("overwrite").parquet("/tmp/scale_phash")
-    timeDocs("image_admission_500k") {
+    docRow("image_admission_500k") {
       val adm = mm.fingerprintAdmission(
         spark.read.parquet("/tmp/scale_phash"),
         mm.imageHashes(dc.filter(col("doc_id") >= 400000L)),
@@ -483,7 +438,7 @@ object DevScale {
     // quadratic) — so only extraction is measured on the 32-bit form,
     // and the SEARCH runs on the 64-bit contour below (16-bit bands,
     // the image path's constants — audioNearDups64)
-    timeDocs("audio_fp_500k")(mm.audioFingerprints(dc).count())
+    docRow("audio_fp_500k")(mm.audioFingerprints(dc).count())
     // 64-bit contour: longer clips (~1.1k samples), 4×16-bit bands →
     // 65 536 buckets, so the banded search holds at 500k like the image
     // path. NOTE this synthetic contour space is adversarially DENSE:
@@ -493,30 +448,31 @@ object DevScale {
     // row is output-bounded, not candidate-blowup-bounded: measured
     // r13, extraction 22.2 s, search 85.1 s INCLUDING materializing all
     // 62M pairs (~730k pairs/s)
-    timeDocs("audio64_fp_500k")(mm.audioFingerprints64(dc).count())
-    timeDocs("audio64_dups_500k")(mm.audioNearDups64(dc).count())
-    timeDocs("video_scenes_500k")(mm.videoScenes(dc).count())
+    docRow("audio64_fp_500k")(mm.audioFingerprints64(dc).count())
+    docRow("audio64_dups_500k")(mm.audioNearDups64(dc).count())
+    docRow("video_scenes_500k")(mm.videoScenes(dc).count())
 
     // round-8 wave 2: diagnostics + sketch artifacts + timer sessions ------
 
     // Deequ-style constraint suite at 500k docs: one partial-aggregated
     // scan (+ the distinct-agg Expand) over a 5-column projection
-    val fullDocs = srcDocs
+    lazy val fullDocs = srcDocs
       .withColumn("lang", concat(lit("l"), pmod(col("doc_id"), lit(5))))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    timeDocs("constraints_500k")(
+    docRow("constraints_500k", fullDocs)(
       graft.operators.Curation.validateConstraints(fullDocs).count())
 
     // skew diagnostic on both 10M-event shapes: the uniform corpus must
     // NOT trigger salting, the 90%-one-key corpus must — printed so the
     // decision the profile exists for is visible in the log
-    Seq("uniform" -> ev, "skew90" -> sk).foreach { case (label, frame) =>
-      time(s"skew_profile_$label") {
+    def skewRow(label: String, frame: => DataFrame): Unit =
+      evRow(s"skew_profile_$label", frame) {
         val r = graft.operators.Sketches.skewProfile(frame).head()
         println(f"  (ratio=${r.getDouble(5)}%.1f needs_salting=${r.getBoolean(6)})")
         1L
       }
-    }
+    skewRow("uniform", ev)
+    skewRow("skew90", sk)
 
     // HLL vocabulary sketches at 500k docs / 1000 sources: artifact build
     // is the 27.5M-token aggregation; the incremental update then costs
@@ -524,13 +480,14 @@ object DevScale {
     // ~KB binaries. Estimates are gated vs exact in the bench suite; here
     // the measurement is the build/update/readout cost split.
     val sk8 = graft.operators.Sketches
-    sk8.vocabSketchState(srcDocs.filter(col("doc_id") < 400000L))
-      .write.mode("overwrite").parquet("/tmp/scale_vocab_sketch")
-    timeDocs("vocab_sketch_build_500k")(sk8.vocabSketchState(srcDocs).count())
-    timeDocs("vocab_sketch_update_100k")(
+    if (wanted("vocab_sketch_update_100k", "vocab_sketch_readout"))
+      sk8.vocabSketchState(srcDocs.filter(col("doc_id") < 400000L))
+        .write.mode("overwrite").parquet("/tmp/scale_vocab_sketch")
+    docRow("vocab_sketch_build_500k", srcDocs)(sk8.vocabSketchState(srcDocs).count())
+    docRow("vocab_sketch_update_100k", srcDocs)(
       sk8.vocabSketchUpdate(spark.read.parquet("/tmp/scale_vocab_sketch"),
         srcDocs.filter(col("doc_id") >= 400000L)).count())
-    timeDocs("vocab_sketch_readout")(
+    docRow("vocab_sketch_readout")(
       sk8.vocabSketchEstimates(spark.read.parquet("/tmp/scale_vocab_sketch"))
         .count())
 
@@ -538,10 +495,11 @@ object DevScale {
     // build is the 27.5M-token scan with ≤k-entry maps as the ONLY
     // shuffled state per (task, source); update folds a 100k batch into
     // stored artifacts via the O(sources · k) DataFrame merge
-    sk8.heavyHitterState(srcDocs.filter(col("doc_id") < 400000L))
-      .write.mode("overwrite").parquet("/tmp/scale_hh_sketch")
-    timeDocs("heavy_hitters_build_500k")(sk8.heavyHitterState(srcDocs).count())
-    timeDocs("heavy_hitters_update_100k")(
+    if (wanted("heavy_hitters_update_100k"))
+      sk8.heavyHitterState(srcDocs.filter(col("doc_id") < 400000L))
+        .write.mode("overwrite").parquet("/tmp/scale_hh_sketch")
+    docRow("heavy_hitters_build_500k", srcDocs)(sk8.heavyHitterState(srcDocs).count())
+    docRow("heavy_hitters_update_100k", srcDocs)(
       sk8.heavyHitterUpdate(spark.read.parquet("/tmp/scale_hh_sketch"),
         srcDocs.filter(col("doc_id") >= 400000L)).count())
 
@@ -549,61 +507,60 @@ object DevScale {
     // the bounded-disorder replay at 1M events / 50k users, 30 min gap —
     // the from-scratch session state machine at 10× bench volume; state
     // is O(open sessions per user), timers one per key
-    val ev1m = ev6.filter(col("event_id") % 10 === 0)
-    time("timer_sessions_1m")(graft.streaming.TimerSessions
+    lazy val ev1m = ev6.filter(col("event_id") % 10 === 0)
+    evRow("timer_sessions_1m", ev1m)(graft.streaming.TimerSessions
       .replayTimerSessions(ev1m, 1800L).count())
 
     // round-8 wave 3: ordered funnel + the analytics batch ------
 
     // typed event stream for the sequence analytics (deterministic 5-way
     // type split; ev6's constant type would collapse every transition)
-    val evTyped = ev.select(col("event_id"), col("ts"), col("user_id"),
+    lazy val evTyped = ScaleCorpus.eventTable(ev,
       element_at(typedlit(Seq("view", "click", "purchase", "error", "scroll")),
-        (pmod(xxhash64(col("event_id") + 29), lit(5)) + 1).cast("int"))
-        .as("event_type"),
-      col("value"), lit("{}").as("props"))
+        (pmod(xxhash64(col("event_id") + 29), lit(5)) + 1).cast("int")))
 
     // ordered streaming funnel at 1M events / 50k users through the
     // bounded-disorder replay: state is O(buffered chain per user), and
     // finality comes from event-time timers at watermark + window
-    time("ordered_funnel_1m")(graft.streaming.TimerFunnel
+    evRow("ordered_funnel_1m", evTyped)(graft.streaming.TimerFunnel
       .replayOrderedFunnel(evTyped.filter(col("event_id") % 10 === 0),
         stepWithinSec = 86400L).count())
 
     // HDR-histogram quantile artifacts at 10M events: build is one
     // partial-aggregated scan to O(types · bins) rows; update folds a 1M
     // batch by vector add; readout walks only the artifact
-    graft.operators.Sketches
-      .valueHistState(evTyped.filter(col("event_id") % 10 =!= 0))
-      .write.mode("overwrite").parquet("/tmp/scale_vhist")
-    time("value_hist_build_10m")(
+    if (wanted("value_hist_update_1m", "value_hist_readout"))
+      graft.operators.Sketches
+        .valueHistState(evTyped.filter(col("event_id") % 10 =!= 0))
+        .write.mode("overwrite").parquet("/tmp/scale_vhist")
+    evRow("value_hist_build_10m", evTyped)(
       graft.operators.Sketches.valueHistState(evTyped).count())
-    time("value_hist_update_1m")(
+    evRow("value_hist_update_1m", evTyped)(
       graft.operators.Sketches.valueHistUpdate(
         spark.read.parquet("/tmp/scale_vhist"),
         evTyped.filter(col("event_id") % 10 === 0)).count())
-    time("value_hist_readout")(
+    evRow("value_hist_readout", evTyped)(
       graft.operators.Sketches.valueHistQuantiles(
         spark.read.parquet("/tmp/scale_vhist")).count())
 
     // batch sequence analytics at 10M events: each is ONE user_id hash
     // shuffle (window sort) + a dimension-sized final agg
-    time("markov_transitions_10m")(
+    evRow("markov_transitions_10m", evTyped)(
       graft.operators.Relational.eventTransitions(evTyped).count())
-    time("inter_event_gaps_10m")(
+    evRow("inter_event_gaps_10m", evTyped)(
       graft.operators.Relational.interEventGaps(evTyped).count())
-    time("funnel_time_10m")(
+    evRow("funnel_time_10m", evTyped)(
       graft.operators.Relational.funnelConversionTime(evTyped).count())
     // two corpus scans + two 5-row median/MAD aggs broadcast back; the
     // exact percentile's value-count map stays at |distinct cents| = 20k
-    time("mad_outliers_10m")(
+    evRow("mad_outliers_10m", evTyped)(
       graft.operators.Relational.madOutliers(evTyped).count())
-    time("gapfill_10m")(
+    evRow("gapfill_10m", evTyped)(
       graft.operators.Relational.gapFillDaily(evTyped).count())
 
     // word entropy at 500k docs: the 27.5M-token (doc, tok) agg + per-doc
     // combine — same shuffle spread as tokenDocFrequency
-    timeDocs("word_entropy_500k")(
+    docRow("word_entropy_500k")(
       graft.functions.TextAnalysis.wordEntropy(dc).count())
 
     // containment at 500k docs over a LONG-TAIL shingle corpus (~5M
@@ -619,12 +576,10 @@ object DevScale {
     val base55 = (0 until 55).map(k => ctok(col("id") * 55 + k))
     val host = (0 until 55).map(k => ctok((col("id") - 1) * 55 + k)) ++
       (0 until 30).map(k => ctok(col("id") * 1000 + k + 7))
-    val cdocs = spark.range(nDocs).select(col("id").as("doc_id"),
+    lazy val cd = stored(spark.range(nDocs).select(col("id").as("doc_id"),
       when(pmod(col("id"), lit(100)) === 1, concat_ws(" ", host: _*))
-        .otherwise(concat_ws(" ", base55: _*)).as("text"))
-    cdocs.write.mode("overwrite").parquet("/tmp/scale_docs_longtail")
-    val cd = spark.read.parquet("/tmp/scale_docs_longtail")
-    timeDocs("containment_500k") {
+        .otherwise(concat_ws(" ", base55: _*)).as("text")), "/tmp/scale_docs_longtail")
+    docRow("containment_500k", cd) {
       val out = graft.operators.NearDup.containmentNearDups(cd)
       val full = out.filter(col("cont_bp") === 10000L).count()
       println(f"  ($full fully-contained pairs — ~5000 planted)")
@@ -635,11 +590,11 @@ object DevScale {
     // source (r9): candidate volume is band-collision-bounded, so unlike
     // the exact posting join this shape also survives hot-shingle corpora;
     // the guard itself is two edge-table equi-joins over the ~1% dup pairs.
-    // The candidate bound is printed alongside the quarantine count.
-    // candidate bound printed from a separate pass so the timed row
-    // prices the guard itself (r9's first run timed both together)
-    val leakEdges = graft.operators.NearDup.minhashNearDups(cd).count()
-    timeDocs("split_leakage_500k") {
+    // The candidate bound is printed alongside the quarantine count, from
+    // a separate untimed pass so the timed row prices the guard itself
+    // (r9's first run timed both together)
+    lazy val leakEdges = graft.operators.NearDup.minhashNearDups(cd).count()
+    docRow("split_leakage_500k", { leakEdges; cd }) {
       val out = graft.operators.Curation.splitWithLeakageGuard(cd)
       val q = out.filter(col("split") === "quarantine").count()
       println(f"  ($leakEdges banded near-dup edges; $q train docs quarantined)")
@@ -651,7 +606,7 @@ object DevScale {
     // anchor-collision-bounded; the O(len²) Levenshtein kernel runs only
     // on candidates. The 1%-planted one-token-edit dups share their head
     // anchor by construction.
-    timeDocs("edit_distance_500k")(
+    docRow("edit_distance_500k")(
       graft.operators.NearDup.editDistanceNearDups(dc).count())
 
     // round-9 additions --------------------------------------------
@@ -664,40 +619,41 @@ object DevScale {
         "HOUSEHOLD", "MACHINERY")),
         (pmod(xxhash64(col("id") + 41), lit(5)) + 1).cast("int"))
         .as("c_mktsegment"))
-    time("salted_enrich_10m")(
+    evRow("salted_enrich_10m")(
       graft.operators.Relational.saltedEnrichJoin(ev, custDim).count())
 
     // the measured chooser on the 90%-hot-key corpus: profile (two
     // partial-agg passes) + the salted branch it must route to
-    time("adaptive_totals_skew")(
+    evRow("adaptive_totals_skew", sk)(
       graft.operators.Relational.adaptiveUserTotals(sk).count())
 
     // timer-rebuilt sessions at the FULL 10M (the 1M row above isolates
     // state-machine cost; this one adds the micro-batch scheduling cost
     // at bench-table volume ×100)
-    time("timer_sessions_10m")(graft.streaming.TimerSessions
+    evRow("timer_sessions_10m", ev6)(graft.streaming.TimerSessions
       .replayTimerSessions(ev6, 1800L).count())
 
     // q-digest artifacts at 10M events: build is one value-count agg +
     // 8 artifact-sized rounds; update folds a 1M batch by artifact merge;
     // readout walks only the artifact
-    graft.operators.Sketches
-      .qdigestState(evTyped.filter(col("event_id") % 10 =!= 0))
-      .write.mode("overwrite").parquet("/tmp/scale_qdigest")
-    time("qdigest_build_10m")(
+    if (wanted("qdigest_update_1m", "qdigest_readout"))
+      graft.operators.Sketches
+        .qdigestState(evTyped.filter(col("event_id") % 10 =!= 0))
+        .write.mode("overwrite").parquet("/tmp/scale_qdigest")
+    evRow("qdigest_build_10m", evTyped)(
       graft.operators.Sketches.qdigestState(evTyped).count())
-    time("qdigest_update_1m")(
+    evRow("qdigest_update_1m", evTyped)(
       graft.operators.Sketches.qdigestUpdate(
         spark.read.parquet("/tmp/scale_qdigest"),
         evTyped.filter(col("event_id") % 10 === 0)).count())
-    time("qdigest_readout")(
+    evRow("qdigest_readout", evTyped)(
       graft.operators.Sketches.qdigestQuantiles(
         spark.read.parquet("/tmp/scale_qdigest")).count())
 
     // streaming drift monitor replay at 10M / 4 micro-batches: per-batch
     // cost is the batch scan + an artifact-sized vector add, drift read
     // purely from the final artifact
-    time("drift_stream_10m")(
+    evRow("drift_stream_10m", evTyped)(
       graft.streaming.StreamingSketches.replayDriftMonitor(evTyped).count())
 
     // round-10 additions --------------------------------------------
@@ -706,30 +662,30 @@ object DevScale {
     // mean offsets; codebooks (here and in pq/ivfpq above) now train on
     // the bounded md5 sample (PqTrainSample = 6.4k) instead of 16
     // full-corpus Lloyd passes — the r9 PQ row's dominant cost
-    timeDocs("ivfpq_res_topk_500k")(
+    docRow("ivfpq_res_topk_500k", ve)(
       graft.operators.Similarity.ivfPqResTopK(ve, 20, 10).count())
     // two-stage retrieval: the same ADC scan + exact re-rank of the
     // top-40 candidates per query (candidate-bounded raw-vector reads)
-    timeDocs("ivfpq_res_refine_500k")(
+    docRow("ivfpq_res_refine_500k", ve)(
       graft.operators.Similarity.ivfPqResRefineTopK(ve, 20, 10).count())
 
     // streamed doc-fold maintainers at 500k docs / 3 micro-batches:
     // per-batch cost = the batch scan + an artifact-sized merge (CM:
     // 4×1024 cells, MG: 8 counters/source, HLL: one sketch/source)
-    val dcs = dc.withColumn("source",
+    lazy val dcs = dc.withColumn("source",
       concat(lit("s"), pmod(col("doc_id"), lit(8)).cast("string")))
-    timeDocs("cmsketch_stream_500k")(
+    docRow("cmsketch_stream_500k")(
       graft.streaming.StreamingSketches.replayCmSketch(dc).count())
-    timeDocs("hh_stream_500k")(
+    docRow("hh_stream_500k", dcs)(
       graft.streaming.StreamingSketches.replayHeavyHitters(dcs).count())
-    timeDocs("vocab_sketch_stream_500k")(
+    docRow("vocab_sketch_stream_500k", dcs)(
       graft.streaming.StreamingSketches.replayVocabSketch(dcs).count())
     // the persisted variant adds one versioned parquet artifact
     // write+read per batch — the crash-recoverable production shape
-    timeDocs("cmsketch_persist_500k")(
+    docRow("cmsketch_persist_500k")(
       graft.streaming.StreamingSketches.replayCmSketchPersisted(dc,
         java.nio.file.Files.createTempDirectory("graft_cmp10_")).count())
-    timeDocs("hh_persist_500k")(
+    docRow("hh_persist_500k", dcs)(
       graft.streaming.StreamingSketches.replayHeavyHittersPersisted(dcs,
         java.nio.file.Files.createTempDirectory("graft_hhp10_")).count())
     spark.stop()

@@ -1,10 +1,9 @@
 package graft
 
-// Focused ANN-at-scale harness (dev aid): times the PQ family over the
-// 500k-vector table DevScale writes to /tmp/scale_vecs, so the PQ rows
-// can be re-measured without the full 20-minute DevScale sweep.
-// The ARCHITECTURE.md rows were taken at 32 cores: set SPARK_GRAFT_CPUS=32
-// to re-run one (the session factory defaults to 4).
+// Focused ANN-at-scale harness: times the PQ family over the 500k-vector
+// table DevScale writes to /tmp/scale_vecs, so the PQ rows can be
+// re-measured without the full 20-minute DevScale sweep.
+import org.apache.spark.sql.functions._
 
 object DevScaleAnn {
   def main(args: Array[String]): Unit = {
@@ -34,32 +33,27 @@ object DevScaleAnn {
       args.find(a => !modeFlags(a)).getOrElse(
         if (clustered) "/tmp/scale_vecs_10m_cl"
         else if (tenM) "/tmp/scale_vecs_10m" else "/tmp/scale_vecs")
-    if ((tenM || clustered) && !new java.io.File(path + "/_SUCCESS").exists()) {
-      import org.apache.spark.sql.functions._
-      val nVecs = 10000000L
-      def vecAt(idCol: org.apache.spark.sql.Column) =
-        if (clustered)
-          transform(sequence(lit(0), lit(63)), d =>
-            (pmod(xxhash64(pmod(xxhash64(idCol + 17), lit(256)) * 64 + d +
-              lit(99991L)), lit(2001)) - lit(1000)) / 1000.0 +
-              ((pmod(xxhash64(idCol * 64 + d), lit(2001)) - lit(1000))
-                * lit(0.00015)))
-        else
-          transform(sequence(lit(0), lit(63)), d =>
-            (pmod(xxhash64(idCol * 64 + d), lit(2001)) - lit(1000)) / 1000.0)
-      spark.range(nVecs).select(col("id").as("vec_id"),
-          vecAt(col("id")).as("embedding"))
-        .write.mode("overwrite").parquet(path)
-    }
-    val ve = spark.read.parquet(path)
+    def vecAt(idCol: org.apache.spark.sql.Column) =
+      if (clustered)
+        transform(sequence(lit(0), lit(63)), d =>
+          (pmod(xxhash64(pmod(xxhash64(idCol + 17), lit(256)) * 64 + d +
+            lit(99991L)), lit(2001)) - lit(1000)) / 1000.0 +
+            ((pmod(xxhash64(idCol * 64 + d), lit(2001)) - lit(1000))
+              * lit(0.00015)))
+      else ScaleCorpus.vecAt(idCol)
+    val ve =
+      if (tenM || clustered)
+        ScaleCorpus.stored(spark.range(10000000L).select(col("id").as("vec_id"),
+          vecAt(col("id")).as("embedding")), path, reuse = true)
+      else spark.read.parquet(path)
     val n = ve.count()
     def time(name: String)(f: => Long): Unit = {
-      Profile.time(name, n, "vecs")(f)
+      ScaleCorpus.time(name, n, "vecs")(f)
       // each operator localCheckpoints multi-GB frames; without freeing
       // them between rows the LATER rows fight block eviction (at 10M the
       // 3rd query measured 3x its clean-JVM cost) — rows must be
       // independent measurements
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      ScaleCorpus.freeCached()
     }
     // "recall" = the quality half of the scale audit: exact top-k ground
     // truth for a query sample (per-partition bounded-heap reduction —
@@ -70,7 +64,6 @@ object DevScaleAnn {
     // re-pinning at the 10M distribution, not just the sf0.01 fixture
     // (`SimilaritySpec` `ann_recall_floor`).
     if (args.contains("recall")) {
-      import org.apache.spark.sql.functions._
       val nq = 100; val k = 10
       val t0 = System.nanoTime()
       // ground truth: same contract as bruteForceTopK (cos rounded to
@@ -138,7 +131,7 @@ object DevScaleAnn {
       }.toSet
       println(f"[recall] exact top-$k ground truth for ${qArr.length} queries " +
         f"in ${(System.nanoTime() - t0) / 1e9}%.1f s (${exact.size} pairs)")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      ScaleCorpus.freeCached()
       def hitsOf(name: String, df: => org.apache.spark.sql.DataFrame): Long = {
         val t = System.nanoTime()
         val got = df.select(col("query_id"), col("neighbor_id")).collect()
@@ -147,7 +140,7 @@ object DevScaleAnn {
         println(f"[recall] $name%-22s hits@$k = $hits/${exact.size} " +
           f"(${hits * 100.0 / exact.size}%.1f%%)  " +
           f"${(System.nanoTime() - t) / 1e9}%.1f s incl. operator")
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        ScaleCorpus.freeCached()
         hits
       }
       // "check": validate the heap-reduced ground truth against the
@@ -168,7 +161,7 @@ object DevScaleAnn {
         println(f"[auto] probe n=${probe.getLong(0)} cells_auto=${probe.getLong(1)} " +
           f"fit_bp=${probe.getLong(2)} regime=${probe.getString(3)} " +
           f"(${(System.nanoTime() - t) / 1e9}%.1f s)")
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        ScaleCorpus.freeCached()
         hitsOf("adaptive_ann_topk",
           graft.operators.Similarity.adaptiveAnnTopK(ve, nq, k))
         spark.stop()
@@ -229,7 +222,6 @@ object DevScaleAnn {
       // the SQ8 staleness gate at volume: bounds agg over the 8M index +
       // one quantize-and-count pass per side — the daily-run cost of
       // asking "are the frozen bounds stale?"
-      import org.apache.spark.sql.functions._
       val cut = ve.agg(expr("(max(vec_id) * 4) div 5").cast("long"))
         .head().getLong(0)
       val idx = ve.filter(col("vec_id") < cut)

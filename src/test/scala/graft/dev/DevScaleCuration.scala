@@ -2,33 +2,18 @@ package graft
 
 // Scale harness for the round-12 curation operators: the decontamination
 // triad's fuzzy/semantic members and DSIR importance resampling at 100×
-// bench scale (500k docs / 500k×64 vectors), same synthetic corpora as
-// DevScale so rows are comparable across rounds.
-// The ARCHITECTURE.md rows were taken at 32 cores: set SPARK_GRAFT_CPUS=32
-// to re-run one (the session factory defaults to 4).
+// bench scale (500k docs / 500k×64 vectors), the DevScale corpora
+// (ScaleCorpus) so rows are comparable across rounds. Args: [nDocs].
 import org.apache.spark.sql.functions._
+
+import graft.ScaleCorpus.stored
 
 object DevScaleCuration {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val spark = SparkEntry.session()
-    def time(name: String)(f: => Long): Unit = Profile.time(name, nDocs, "docs")(f)
-
-    // the DevScale 31-word doc corpus with 1% planted near-dup pairs
-    // (id%100==1 copies id-1 with a one-token edit)
-    val vocab = Array("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
-      "eta", "theta", "iota", "kappa", "lambda", "mu", "nu", "xi", "omicron",
-      "pi", "rho", "sigma", "tau", "upsilon", "phi", "chi", "psi", "omega",
-      "scan", "hash", "merge", "join", "window", "batch", "query")
-    def wordsAt(idCol: org.apache.spark.sql.Column) = (0 until 55).map(k =>
-      element_at(typedlit(vocab.toSeq),
-        (pmod(xxhash64(idCol * 55 + k), lit(vocab.length)) + 1).cast("int")))
-    val docs = spark.range(nDocs).select(col("id").as("doc_id"),
-      when(pmod(col("id"), lit(100)) === 1,
-        concat_ws(" ", wordsAt(col("id") - 1).dropRight(1) :+ lit("edited"): _*))
-        .otherwise(concat_ws(" ", wordsAt(col("id")): _*)).as("text"))
-    docs.write.mode("overwrite").parquet("/tmp/scale_docs")
-    val dc = spark.read.parquet("/tmp/scale_docs")
+    def time(name: String)(f: => Long): Unit = ScaleCorpus.time(name, nDocs, "docs")(f)
+    val dc = stored(ScaleCorpus.docs(spark, nDocs), "/tmp/scale_docs")
 
     // fuzzy decontamination at 500k / 10% eval split: candidates are the
     // train-band × eval-band equi-join (eval-collision-bounded); the ~1%
@@ -56,21 +41,11 @@ object DevScaleCuration {
         fullDocs.filter(col("doc_id") >= nDocs * 4 / 5), "l1").count()
     }
 
-    // the DevScale 64-dim vector corpus with 1% planted near-identical
-    // pairs; semantic decon EXACT at a small eval (0.2% → ~1k vectors:
-    // the screen is inherently train×eval) vs the LSH prefilter at the
-    // full 10% eval (50k vectors) with the corpus-size plane count —
-    // the gap is what the bucketed candidates buy
-    def vecAt(idCol: org.apache.spark.sql.Column) =
-      transform(sequence(lit(0), lit(63)), d =>
-        (pmod(xxhash64(idCol * 64 + d), lit(2001)) - lit(1000)) / 1000.0)
-    val vecs = spark.range(nDocs).select(col("id").as("vec_id"),
-      when(pmod(col("id"), lit(100)) === 1,
-        transform(vecAt(col("id") - 1), (x, i) =>
-          x + when(i === 0, lit(0.01)).otherwise(lit(0.0))))
-        .otherwise(vecAt(col("id"))).as("embedding"))
-    vecs.write.mode("overwrite").parquet("/tmp/scale_vecs")
-    val ve = spark.read.parquet("/tmp/scale_vecs")
+    // semantic decon EXACT at a small eval (0.2% → ~1k vectors: the
+    // screen is inherently train×eval) vs the LSH prefilter at the full
+    // 10% eval (50k vectors) with the corpus-size plane count — the gap
+    // is what the bucketed candidates buy
+    val ve = stored(ScaleCorpus.vectors(spark, nDocs), "/tmp/scale_vecs")
     val autoP = graft.operators.Similarity.autoPlanes(nDocs)
     time("decon_semantic_exact_2bp") {
       graft.operators.Similarity
@@ -98,9 +73,7 @@ object DevScaleCuration {
     // scan + broadcast artifact join + the ~0.6 s micro-batch tax), the
     // artifacts never rescan
     val half = nDocs / 2
-    val pool = dc.withColumn("lang",
-      concat(lit("l"), pmod(col("doc_id"), lit(5))))
-      .filter(col("doc_id") < half)
+    val pool = fullDocs.filter(col("doc_id") < half)
     val tail = dc.filter(col("doc_id") >= half &&
         graft.operators.Curation.sampleBucket(col("doc_id")) >= 1000)
       .select(col("doc_id"), col("text"))

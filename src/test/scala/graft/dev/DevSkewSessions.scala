@@ -16,9 +16,7 @@ package graft
 //              one task there as well)
 //
 // Results must agree exactly — the runner asserts salted ≡ builtin before
-// printing timings. Args: [nEvents] [hotPermille] ["timer"]
-// The ARCHITECTURE.md rows were taken at 32 cores: set SPARK_GRAFT_CPUS=32
-// to re-run one (the session factory defaults to 4).
+// printing timings. Args: [nEvents] [hotPermille] ["timer"] ["stream"]
 import org.apache.spark.sql.functions._
 
 object DevSkewSessions {
@@ -26,28 +24,17 @@ object DevSkewSessions {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
     val hotPermille = args.drop(1).headOption.map(_.toInt).getOrElse(900)
     val spark = SparkEntry.session()
-    val startMicros = 1704067200000000L
-    val spanMicros = 30L * 86400000000L // 30 days
-    val path = s"/tmp/skew_sess_events_${n}_$hotPermille"
-    if (!new java.io.File(path + "/_SUCCESS").exists())
-      spark.range(n).select(
-        col("id").as("event_id"),
-        timestamp_micros(lit(startMicros) + pmod(xxhash64(col("id")), lit(spanMicros)))
-          .as("ts"),
-        // hotPermille/1000 of events on user 4, the rest across 50k users
+    // hotPermille/1000 of events on user 4, the rest across 50k users
+    val ev = ScaleCorpus.stored(ScaleCorpus.eventTable(ScaleCorpus.events(spark, n,
         when(pmod(xxhash64(col("id") + 3), lit(1000)) < hotPermille, lit(4L))
-          .otherwise(pmod(xxhash64(col("id") + 7), lit(50000L))).as("user_id"),
-        lit("view").as("event_type"),
-        (pmod(xxhash64(col("id") + 13), lit(20000)) / 100.0).as("value"),
-        lit("{}").as("props"))
-        .write.mode("overwrite").parquet(path)
-    val ev = spark.read.parquet(path)
+          .otherwise(ScaleCorpus.uniformUser(50000L))), lit("view")),
+      s"/tmp/skew_sess_events_${n}_$hotPermille", reuse = true)
     val prof = graft.operators.Sketches.skewProfile(ev).head()
     println(s"[skewsess] n=$n hot=${hotPermille}‰ skew_ratio=${prof.getAs[Double]("skew_ratio")} " +
       s"max_key_rows=${prof.getAs[Long]("max_key_rows")} needs_salting=${prof.getAs[Boolean]("needs_salting")}")
     def time(name: String)(f: => Long): Unit = {
-      Profile.time(name, n, "events")(f)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      ScaleCorpus.time(name, n, "events")(f)
+      ScaleCorpus.freeCached()
     }
     // 30 s gap on a 90%-hot 10M/30-day corpus ⇒ the hot user's mean
     // spacing (~0.29 s) keeps it in a handful of giant sessions — the
