@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{BaseSubqueryExec, InputAdapter, LeafExecNode, QueryExecution, SparkPlan, WholeStageCodegenExec}
@@ -22,7 +23,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    AQE-final form) — scans, exchanges, nested-loop and cartesian
   *    joins, operators outside whole-stage codegen;
   *  - `StreamingQueryListener`: micro-batches, the per-batch `durationMs`
-  *    phases summed, and the `stateOperators` metrics.
+  *    phases summed, and the `stateOperators` metrics;
+  *  - Spark's `CodegenMetrics`: the Janino compiles the block ran (a
+  *    JVM-wide counter, so concurrent work counts too). Each streaming
+  *    query runs on its own session clone with its own artifact class
+  *    loader, so its generated classes miss the codegen cache and
+  *    compile again.
   *
   * Usage: `sbt "runMain graft.Profile <sfDir> <query>..."` — one JSON line
   * per query on stdout, timing the same action as [[Bench]]
@@ -47,7 +53,7 @@ object Profile {
       shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
       resultBytes: Long, shape: Shape, batches: Int,
       durationMs: Map[String, Long], stateRows: Long, stateMemoryBytes: Long,
-      stateCommitMs: Long) {
+      stateCommitMs: Long, codegenCompiles: Long) {
     def json: String = {
       val phases = durationMs.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -62,7 +68,7 @@ object Profile {
         "non_codegen" -> shape.nonCodegen, "batches" -> batches,
         "duration_ms" -> phases, "state_rows" -> stateRows,
         "state_memory_bytes" -> stateMemoryBytes,
-        "state_commit_ms" -> stateCommitMs)
+        "state_commit_ms" -> stateCommitMs, "codegen_compiles" -> codegenCompiles)
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     }
   }
@@ -144,6 +150,9 @@ object Profile {
       synchronized { shape += Profile.shape(qe.executedPlan) }
     def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
 
+    private def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    private val compiles0 = compiles
+
     private val sc = spark.sparkContext
     org.apache.spark.GraftListenerBus.drain(sc)
     sc.addSparkListener(this)
@@ -164,7 +173,8 @@ object Profile {
             if (b <= end) (acc, end) else (acc + b - math.max(a, end), b) }
         Record(label, wallMs, math.max(0.0, wallMs - busy), jobs, stages,
           tasks, taskMs, gcMs, readB, writeB, spillB, resultB, shape,
-          batchIds.size, phases.toMap, stateRows, stateMem, stateCommit)
+          batchIds.size, phases.toMap, stateRows, stateMem, stateCommit,
+          compiles - compiles0)
       }
     }
   }

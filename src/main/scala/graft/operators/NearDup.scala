@@ -385,8 +385,9 @@ object NearDup {
     *    snapshot returned here is the equivalent full state.
     *
     * The monotone-id guard bounds by the shingle artifact's ids (covering
-    * every doc that can collide) — a column-pruned scan answered largely
-    * from parquet footer stats, never a text read.
+    * every doc that can collide) — a column-pruned id scan, never a text
+    * read. The streaming loop, whose frontier already proves the
+    * invariant, calls [[incrementalNearDupsIndexedCore]] instead.
     */
   def incrementalNearDupsIndexed(indexShingles: DataFrame, indexSigs: DataFrame,
                                  indexLabels: DataFrame, batchDocs: DataFrame,
@@ -394,6 +395,23 @@ object NearDup {
       : (DataFrame, DataFrame) = {
     requireMonotoneIds(indexShingles.select(col("doc_id")), batchDocs,
       "incrementalNearDupsIndexed")
+    incrementalNearDupsIndexedCore(indexShingles, indexSigs, indexLabels,
+      batchDocs, batchShingles)
+  }
+
+  /** [[incrementalNearDupsIndexed]] without its monotone-id guard.
+    * PRECONDITION: every batch doc_id is above `max(indexShingles.doc_id)`;
+    * under id interleaving the output is silently wrong, not an error.
+    * [[graft.streaming.StreamingDedup.nearDupAdmissionStream]] discharges
+    * it by construction: its batch is filtered to ids above the frontier
+    * of this very shingle artifact
+    * ([[graft.streaming.ArtifactLoop.aboveFrontier]]), so the guard's
+    * aggregates could never fire there. Every other caller goes through
+    * the guarded operator.
+    */
+  private[graft] def incrementalNearDupsIndexedCore(indexShingles: DataFrame,
+      indexSigs: DataFrame, indexLabels: DataFrame, batchDocs: DataFrame,
+      batchShingles: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     // a caller that also APPENDS the batch shingles to its artifact store
     // (the streaming loop) passes them in already-cached so the hottest
     // stage isn't computed twice; a supplied frame's caching is the

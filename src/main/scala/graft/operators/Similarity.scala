@@ -340,6 +340,10 @@ object Similarity {
     * equi-join (batch-probe-proportional build side) and the sparse
     * candidate-id join against the vector store; no whole-index pair
     * generation, no corpus re-bucketing.
+    *
+    * The monotone-id guard (every stored vec_id < every batch vec_id)
+    * bounds by the bucket artifact's ids; the streaming loop, whose
+    * frontier already proves it, calls [[semanticDedupIncrementalCore]].
     */
   def semanticDedupIncremental(indexEmb: DataFrame, indexBuckets: DataFrame,
                                indexLabels: DataFrame, batchEmb: DataFrame,
@@ -347,6 +351,24 @@ object Similarity {
                                numPlanes: Int = NumPlanes): (DataFrame, DataFrame) = {
     NearDup.requireMonotoneIds(indexBuckets.select(col("vec_id")),
       batchEmb.select(col("vec_id").as("doc_id")), "semanticDedupIncremental")
+    semanticDedupIncrementalCore(indexEmb, indexBuckets, indexLabels, batchEmb,
+      threshold, numPlanes)
+  }
+
+  /** [[semanticDedupIncremental]] without its monotone-id guard (the
+    * plane-count guard stays). PRECONDITION: every batch vec_id is above
+    * `max(indexBuckets.vec_id)`; under id interleaving the output is
+    * silently wrong, not an error.
+    * [[graft.streaming.StreamingDedup.semanticAdmissionStream]] discharges
+    * it by construction: its batch is filtered to ids above the frontier
+    * of this very bucket artifact
+    * ([[graft.streaming.ArtifactLoop.aboveFrontier]]), so the guard's
+    * aggregates could never fire there. Every other caller goes through
+    * the guarded operator.
+    */
+  private[graft] def semanticDedupIncrementalCore(indexEmb: DataFrame,
+      indexBuckets: DataFrame, indexLabels: DataFrame, batchEmb: DataFrame,
+      threshold: Double, numPlanes: Int): (DataFrame, DataFrame) = {
     // plane-count drift guard: a bucket table stored at a LARGER plane
     // count than this run probes at carries bucket values outside this
     // run's bit space — the equi-join keys would live in different

@@ -46,7 +46,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *     — a legitimate replay's always do, out-of-order NEW input never
   *     does — and, where the frontier artifact is an append, must each be
   *     present in it (a torn append advances the frontier while losing
-  *     rows). Both checks run only on a batch that drops something.
+  *     rows). Both checks run only on a batch that drops something. One
+  *     aggregate over the artifact's ids ∪ the batch's ids
+  *     ([[frontierBounds]]) gives the frontier, the batch's min id
+  *     (whether anything drops) and its max id (emptiness and the
+  *     snapshot name), so a steady-state batch pays one job for all
+  *     three, and the batch a loop admits is above the artifact's max id
+  *     by construction — the monotone-id precondition of the indexed
+  *     dedup operators, whose guard-less cores the loops call.
   *
   * Exactly-once output is Structured Streaming's idempotent-sink rule:
   * a failed micro-batch replays with the same id and the same input
@@ -169,12 +176,58 @@ object ArtifactLoop {
     spark.read.parquet(dirs: _*)
   }
 
-  /** `max(idCol)` of a frontier-bearing artifact; `None` while it is
-    * empty.
+  /** What a frontier loop asks of each batch, answered by ONE aggregate
+    * ([[frontierBounds]]): the `frontier` (max id of the frontier-bearing
+    * artifact; `None` while it is empty) and the batch's `batchMin` and
+    * `batchMax` ids (`None` for an empty batch).
     */
-  private[streaming] def frontierOf(artifact: DataFrame, idCol: String): Option[Long] = {
-    val r = artifact.agg(max(col(idCol))).head()
-    if (r.isNullAt(0)) None else Some(r.getLong(0))
+  private[graft] final case class FrontierBounds(frontier: Option[Long],
+      batchMin: Option[Long], batchMax: Option[Long]) {
+
+    /** Whether the batch holds ids at or below the frontier — a replay or
+      * out-of-order input, the only case that pays the dropped-row checks.
+      */
+    def drops: Boolean = frontier.exists(f => batchMin.exists(_ <= f))
+
+    /** Max id above the frontier: the effective batch's max, which names
+      * its snapshot; `None` when no row lies above the frontier.
+      */
+    def effectiveMax: Option[Long] = batchMax.filter(m => frontier.forall(m > _))
+
+    /** The bounds of both inputs together. */
+    def merge(o: FrontierBounds): FrontierBounds = {
+      def pick(a: Option[Long], b: Option[Long], f: (Long, Long) => Long) =
+        (a ++ b).reduceOption(f)
+      FrontierBounds(pick(frontier, o.frontier, math.max),
+        pick(batchMin, o.batchMin, math.min), pick(batchMax, o.batchMax, math.max))
+    }
+  }
+
+  /** The [[FrontierBounds]] of `batchIds` against `artifactIds`, each a
+    * one-column frame of long ids (nulls ignored), in one aggregate over
+    * their union: per-partition bounds merged on the driver, so one job
+    * with no exchange — a DataFrame `agg` plans a shuffle, which adaptive
+    * execution runs as three jobs.
+    */
+  private[graft] def frontierBounds(artifactIds: DataFrame,
+                                    batchIds: DataFrame): FrontierBounds = {
+    def tagged(ids: DataFrame, artifact: Boolean) =
+      ids.select(lit(artifact), col(ids.columns.head).cast("long"))
+    tagged(artifactIds, artifact = true).union(tagged(batchIds, artifact = false))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        var (seenArtifact, seenBatch) = (false, false)
+        var (frontier, lo, hi) = (Long.MinValue, Long.MaxValue, Long.MinValue)
+        rows.foreach { r =>
+          if (!r.isNullAt(1)) {
+            val id = r.getLong(1)
+            if (r.getBoolean(0)) { seenArtifact = true; frontier = math.max(frontier, id) }
+            else { seenBatch = true; lo = math.min(lo, id); hi = math.max(hi, id) }
+          }
+        }
+        Iterator(FrontierBounds(Option.when(seenArtifact)(frontier),
+          Option.when(seenBatch)(lo), Option.when(seenBatch)(hi)))
+      }
+      .collect().foldLeft(FrontierBounds(None, None, None))(_ merge _)
   }
 
   /** Torn-append layer of [[aboveFrontier]]: `keys` maps the dropped rows
@@ -182,60 +235,65 @@ object ArtifactLoop {
     * artifact's keys. `name` names the artifact in the diagnostic, and
     * `rebuild` says how to recover.
     */
-  private[streaming] final case class TornCheck(name: String,
+  private[graft] final case class TornCheck(name: String,
       keys: DataFrame => DataFrame, stored: DataFrame, rebuild: String)
 
-  /** The rows of `batch` whose `idCol` lies above `frontier` (all of
-    * them when there is none yet). The dropped rest must be replays:
-    * each must hold a committed output row under `outDir`
+  /** The rows of `batch` whose `idCol` lies above the frontier of
+    * `artifactIds` (the frontier-bearing artifact's id column; all rows
+    * while it is empty), with their max id — `None` when none pass, so a
+    * caller needs no emptiness job of its own. The dropped rest must be
+    * replays: each must hold a committed output row under `outDir`
     * ([[requireDroppedAreReplays]]), and, with `torn`, each key must be
     * present in the frontier artifact — a crash mid-job-commit of an
     * APPEND can advance the artifact's max while other rows never became
     * visible, which the output check cannot see but a replayed row
     * missing from the artifact exposes. Both checks run only on a batch
-    * that drops something; the steady-state batch pays one bounds job.
+    * that drops something; the steady-state batch pays the one
+    * [[frontierBounds]] aggregate.
     */
-  private[streaming] def aboveFrontier(batch: DataFrame, frontier: Option[Long],
+  private[graft] def aboveFrontier(batch: DataFrame, artifactIds: DataFrame,
       outDir: String, opName: String, idCol: String = "doc_id",
-      torn: Option[TornCheck] = None): DataFrame = frontier match {
-    case None => batch
-    case Some(f) =>
-      val dropped = batch.filter(col(idCol) <= f)
-      val anyDropped = requireDroppedAreReplays(dropped, f, outDir, opName, idCol)
-      // nothing dropped → the torn join is empty by construction: skip it
-      if (anyDropped) torn.foreach { t =>
-        val keys = t.keys(dropped)
-        val n = keys.join(t.stored, keys.columns.toSeq, "left_anti").count()
-        require(n == 0,
-          s"$opName: $n replayed rows are absent from the ${t.name} " +
-            s"artifact — torn ${t.name} append (crash mid-commit); ${t.rebuild}")
-      }
-      batch.filter(col(idCol) > f)
+      torn: Option[TornCheck] = None): (DataFrame, Option[Long]) = {
+    val bounds = frontierBounds(artifactIds, batch.select(col(idCol)))
+    val eff = bounds.frontier match {
+      case None => batch
+      case Some(f) =>
+        if (bounds.drops) {
+          val dropped = batch.filter(col(idCol) <= f)
+          requireDroppedAreReplays(dropped, bounds.batchMin.get, f, outDir,
+            opName, idCol)
+          torn.foreach { t =>
+            val keys = t.keys(dropped)
+            val n = keys.join(t.stored, keys.columns.toSeq, "left_anti").count()
+            require(n == 0,
+              s"$opName: $n replayed rows are absent from the ${t.name} " +
+                s"artifact — torn ${t.name} append (crash mid-commit); ${t.rebuild}")
+          }
+        }
+        batch.filter(col(idCol) > f)
+    }
+    (eff, bounds.effectiveMax)
   }
 
-  /** Replay-vs-violation guard: every dropped row must hold a COMMITTED
-    * output row, because the output batch commits before any frontier-
-    * bearing artifact write — a legitimately replayed id always has one,
-    * an out-of-order NEW id never does. Paid only on batches that drop
-    * something (replays and violations, never the steady-state path);
-    * the output scan carries an id range filter so parquet footer stats
-    * prune non-overlapping batch dirs. A frontier with NO committed
-    * output (an artifact seeded from a batch-mode run against a fresh
-    * outDir) treats every drop as unplaced — the correct loud
-    * diagnostic, not an obscure empty-read error. Returns whether
-    * anything was dropped.
+  /** Replay-vs-violation guard: every dropped row (ids in `[lo, frontier]`)
+    * must hold a COMMITTED output row, because the output batch commits
+    * before any frontier-bearing artifact write — a legitimately replayed
+    * id always has one, an out-of-order NEW id never does. Paid only on
+    * batches that drop something (replays and violations, never the
+    * steady-state path); the output scan carries the id range filter so
+    * parquet footer stats prune non-overlapping batch dirs. A frontier
+    * with NO committed output (an artifact seeded from a batch-mode run
+    * against a fresh outDir) treats every drop as unplaced — the correct
+    * loud diagnostic, not an obscure empty-read error.
     */
-  private def requireDroppedAreReplays(dropped: DataFrame, frontier: Long,
-      outDir: String, opName: String, idCol: String): Boolean = {
-    val bounds = dropped.agg(min(col(idCol)), max(col(idCol))).head()
-    if (bounds.isNullAt(0)) return false // nothing dropped
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+  private def requireDroppedAreReplays(dropped: DataFrame, lo: Long,
+      frontier: Long, outDir: String, opName: String, idCol: String): Unit = {
     val sess = dropped.sparkSession
     val dirs = committedBatchDirs(sess, outDir).map(_.toString)
     val placedIds =
       if (dirs.isEmpty) emptyFrame(sess, StructType(Seq(StructField(idCol, LongType))))
       else sess.read.parquet(dirs: _*).select(col(idCol))
-        .filter(col(idCol).between(lo, hi))
+        .filter(col(idCol).between(lo, frontier))
     val unplaced = dropped.select(col(idCol)).distinct()
       .join(placedIds, Seq(idCol), "left_anti")
       .agg(min(col(idCol)), count(lit(1))).head()
@@ -244,7 +302,6 @@ object ArtifactLoop {
         s"total) is at or below the frontier $frontier but holds no " +
         "committed output row — out-of-order ingest (not a replay); " +
         "re-run through the whole-corpus operator")
-    true
   }
 
   /** Pin the one-row `indexDir/params` artifact: on the first batch it

@@ -70,8 +70,8 @@ object StreamingDedup {
           // wave through an out-of-order NEW doc sharing its text with an
           // indexed one (whole-corpus dedup would have made the lower id
           // canonical) — and per KEY against the key table (torn append).
-          val eff = ArtifactLoop.aboveFrontier(b,
-            ArtifactLoop.frontierOf(idx, "canonical_id"), outDir,
+          val (eff, _) = ArtifactLoop.aboveFrontier(b,
+            idx.select(col("canonical_id")), outDir,
             "exactAdmissionStream", torn = Some(ArtifactLoop.TornCheck("key",
               _.select(md5(col("text")).as("text_key")),
               idx.select(col("text_key")),
@@ -112,7 +112,8 @@ object StreamingDedup {
     *
     * Replay safety, by construction rather than by luck:
     *  - the batch is filtered to ids ABOVE the SHINGLE artifact's frontier
-    *    (`max(doc_id)` — parquet footer stats), and the shingle append is
+    *    (`max(doc_id)`, read in the loop's one frontier aggregate
+    *    [[ArtifactLoop.frontierBounds]]), and the shingle append is
     *    the LAST write of the step, so the frontier artifact commits only
     *    after everything else: a replayed micro-batch either reprocesses
     *    in full (artifacts at most duplicate-appended, which the admission
@@ -153,37 +154,38 @@ object StreamingDedup {
         // replay frontier from the SHINGLE artifact — the last write of
         // this step, so by the time a doc is at-or-below the frontier,
         // every other write for its batch has landed; reprocessing it
-        // would trip the monotone-id guard and double-index it. Dropped
-        // docs are checked per DOC against the committed output (a
-        // shingle-less out-of-order doc carries no signature yet still
-        // owes the corpus an admission row) and per SHINGLED doc against
-        // the shingle artifact (torn append: future admissions would
-        // silently miss near-dups against the lost rows).
-        val eff = ArtifactLoop.aboveFrontier(b,
-          ArtifactLoop.frontierOf(idxSh, "doc_id"), outDir,
+        // would break the admission core's monotone-id precondition and
+        // double-index it. Dropped docs are checked per DOC against the
+        // committed output (a shingle-less out-of-order doc carries no
+        // signature yet still owes the corpus an admission row) and per
+        // SHINGLED doc against the shingle artifact (torn append: future
+        // admissions would silently miss near-dups against the lost rows).
+        val (effRows, effMax) = ArtifactLoop.aboveFrontier(b,
+          idxSh.select(col("doc_id")), outDir,
           "nearDupAdmissionStream", torn = Some(ArtifactLoop.TornCheck(
             "shingle", graft.operators.NearDup.shingled(_).select(col("doc_id")),
             idxSh.select(col("doc_id")),
-            "rebuild the artifacts from whole-corpus dedup"))).persist()
+            "rebuild the artifacts from whole-corpus dedup")))
+        val eff = effRows.persist()
         try {
           // an effective-empty batch (full replay) mutates nothing: the
           // re-derived snapshot would equal the latest committed one, and
           // writing it under a fresh name would only churn the retention
-          // window — skip the whole mutation block
-          // ONE stats action: emptiness and the snapshot name together
-          val effStats = eff.agg(count(lit(1)), max(col("doc_id"))).head()
-          if (effStats.getLong(0) > 0) {
-            // snapshot name = the batch's own id frontier (max doc_id),
-            // NOT the streaming batch id (see ArtifactLoop): eff ids are
-            // above the artifact frontier, and a replay re-derives the
-            // same name with identical content
-            val effMax = effStats.getLong(1)
+          // window — skip the whole mutation block.
+          // snapshot name = the batch's own id frontier (max doc_id),
+          // NOT the streaming batch id (see ArtifactLoop): eff ids are
+          // above the artifact frontier, and a replay re-derives the
+          // same name with identical content
+          effMax.foreach { effMax =>
             // batch shingles are shared between admission and the artifact
             // append — shingling is the hottest dedup stage, don't pay it 2×
             val bSh = graft.operators.NearDup.shingled(eff).persist()
             try {
+              // eff lies above the shingle artifact's max doc_id, which is
+              // the operator's monotone-id precondition: call the guard-less
+              // core
               val (admissions, newLabels) = graft.operators.NearDup
-                .incrementalNearDupsIndexed(idxSh, idxSigs, idxLab, eff,
+                .incrementalNearDupsIndexedCore(idxSh, idxSigs, idxLab, eff,
                   batchShingles = Some(bSh))
               ArtifactLoop.writeOutputBatch(admissions, outDir, batchId)
               // snapshot labels BEFORE the artifact appends: if an append
@@ -266,18 +268,19 @@ object StreamingDedup {
           Seq("hex_len" -> hexLen, "max_hamming" -> maxHamming))
         // replay frontier from the fingerprint artifact — the last (and
         // only) artifact write, so a frontier-covered doc's batch landed
-        val eff = ArtifactLoop.aboveFrontier(bfp,
-          ArtifactLoop.frontierOf(idxFps, "doc_id"), outDir,
+        val (effRows, effMax) = ArtifactLoop.aboveFrontier(bfp,
+          idxFps.select(col("doc_id")), outDir,
           "perceptualAdmissionStream", torn = Some(ArtifactLoop.TornCheck(
             "fingerprint", _.select(col("doc_id")), idxFps.select(col("doc_id")),
             "rebuild the index by re-running the batch fingerprint " +
-              "extraction over the corpus"))).persist()
+              "extraction over the corpus")))
+        val eff = effRows.persist()
         try {
           val admissions = graft.operators.Multimodal.fingerprintAdmission(
             idxFps, eff, fpCol, hexLen, maxHamming)
           ArtifactLoop.writeOutputBatch(admissions, outDir, batchId)
           // frontier-bearing artifact append LAST (contract above)
-          if (!eff.isEmpty)
+          if (effMax.nonEmpty)
             eff.write.mode("append").parquet(s"$indexDir/fps")
         } finally eff.unpersist()
       } finally bfp.unpersist()
@@ -346,23 +349,24 @@ object StreamingDedup {
         // step, so a frontier-covered vector's batch has fully landed; a
         // replayed vector absent from it exposes a torn bucket append
         // (rows future admissions would silently never probe)
-        val eff = ArtifactLoop.aboveFrontier(b,
-          ArtifactLoop.frontierOf(idxBuckets, "vec_id"), outDir,
+        val (effRows, effMax) = ArtifactLoop.aboveFrontier(b,
+          idxBuckets.select(col("vec_id")), outDir,
           "semanticAdmissionStream", idCol = "vec_id",
           torn = Some(ArtifactLoop.TornCheck("bucket", _.select(col("vec_id")),
             idxBuckets.select(col("vec_id")),
-            "rebuild the index from whole-corpus semanticDedup"))).persist()
+            "rebuild the index from whole-corpus semanticDedup")))
+        val eff = effRows.persist()
         try {
           // effective-empty batch (full replay): nothing to admit and the
           // re-derived label snapshot would equal the committed one — skip
-          // the mutation block (same reasoning as the near-dup loop)
-          val effStats = eff.agg(count(lit(1)), max(col("vec_id"))).head()
-          if (effStats.getLong(0) > 0) {
-            // snapshot name = the batch's id frontier, not the streaming
-            // batch id (see the near-dup loop)
-            val effMax = effStats.getLong(1)
+          // the mutation block (same reasoning as the near-dup loop).
+          // snapshot name = the batch's id frontier, not the streaming
+          // batch id (see the near-dup loop)
+          effMax.foreach { effMax =>
+            // eff lies above the bucket artifact's max vec_id, which is the
+            // operator's monotone-id precondition: call the guard-less core
             val (admissions, newLabels) = graft.operators.Similarity
-              .semanticDedupIncremental(idxEmb, idxBuckets, idxLab, eff,
+              .semanticDedupIncrementalCore(idxEmb, idxBuckets, idxLab, eff,
                 threshold, numPlanes)
             ArtifactLoop.writeOutputBatch(admissions, outDir, batchId)
             // snapshot labels BEFORE the artifact appends (same idempotence

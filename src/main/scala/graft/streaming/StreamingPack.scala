@@ -105,9 +105,11 @@ object StreamingPack {
         val frontier = st.getLong(1)
         // the empty-corpus frontier (-1) still runs the dropped-are-
         // replays check: it drops only ids at or below -1
-        val eff = ArtifactLoop.aboveFrontier(b, Some(frontier), outDir,
-          "packAdmissionStream")
-        if (!eff.isEmpty) {
+        val (eff, effMax) = ArtifactLoop.aboveFrontier(b,
+          sess.createDataFrame(java.util.Arrays.asList(Row(frontier)),
+            StructType(Seq(stateSchema("max_doc_id")))),
+          outDir, "packAdmissionStream")
+        effMax.foreach { newFrontier =>
           val stateDf = sess.createDataFrame(
             java.util.Arrays.asList(
               Row(st.getLong(0), st.getLong(1), st.getLong(2))),
@@ -118,7 +120,6 @@ object StreamingPack {
             ArtifactLoop.writeOutputBatch(placements, outDir, batchId)
             // frontier-bearing snapshot LAST (replay-safety contract),
             // named by the NEW FRONTIER (see ArtifactLoop)
-            val newFrontier = eff.agg(max(col("doc_id"))).head().getLong(0)
             ArtifactLoop.commitSnapshot(graft.operators.Curation
               .packStateAfter(stateDf, eff)
               .withColumn("prev_max_doc_id", lit(frontier)), stateDir, newFrontier)
@@ -256,19 +257,20 @@ object StreamingPack {
       try {
         val sess = b.sparkSession
         // plain read, no checkpoint: the quota table is ≤ cells×perCell
-        // rows and consumed twice (frontier agg, pick) — re-reading a
+        // rows and consumed twice (frontier aggregate, pick) — re-reading a
         // 128-row parquet beats an eager checkpoint job per micro-batch
         // whose cached blocks leak for the stream's lifetime (the r12
         // importance-loop lesson)
         val st = readClusterQuota(sess, stateDir, artifactDir)
-        val frontier = st.agg(coalesce(max(col("max_vec_id")), lit(-1L)))
-          .head().getLong(0)
+        // ONE aggregate (quota frontier + the batch's max id) BEFORE the
+        // centroid read and the assignment: an effective-empty (replayed)
+        // batch skips both. No dropped-row check (see above), so only the
+        // bounds are read
+        val bounds = ArtifactLoop.frontierBounds(st.select(col("max_vec_id")),
+          b.select(col("vec_id")))
+        val frontier = bounds.frontier.getOrElse(-1L)
         val fresh = b.filter(col("vec_id") > frontier)
-        // ONE stats action (count + new frontier) BEFORE the centroid read
-        // and the assignment: an effective-empty (replayed) batch skips both
-        val effStats = fresh
-          .agg(count(lit(1)), coalesce(max(col("vec_id")), lit(-1L))).head()
-        if (effStats.getLong(0) > 0) {
+        bounds.batchMax.filter(_ > frontier).foreach { newFrontier =>
           // ONE assignment and ONE pick over quota ∪ batch per batch,
           // checkpointed: the output rows and the quota snapshot are both
           // projections of it
@@ -285,10 +287,9 @@ object StreamingPack {
           // ids above the old frontier, so each effective batch's name
           // strictly increases, and a replayed batch re-derives the same
           // name with identical content (idempotent overwrite)
-          val newFrontier = effStats.getLong(1)
           ArtifactLoop.commitSnapshot(graft.operators.Similarity
             .clusterQuotaAfterAssigned(pick)
-            .withColumn("max_vec_id", lit(math.max(frontier, newFrontier))),
+            .withColumn("max_vec_id", lit(newFrontier)),
             stateDir, newFrontier)
         }
       } finally b.unpersist()

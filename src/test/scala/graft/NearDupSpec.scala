@@ -280,6 +280,19 @@ class NearDupSpec extends SparkSpec {
     assert(ex2.getMessage.contains("monotone"))
   }
 
+  test("indexed: interleaved ids violate the monotone invariant loudly") {
+    // the public artifact-table operator keeps its guard (the streaming
+    // loop calls the guard-less core only after its frontier filter)
+    val index = Seq((0L, base), (7L, other)).toDF("doc_id", "text")
+    val batch = Seq((5L, nearDup)).toDF("doc_id", "text") // 5 < index max 7
+    val idxSh = NearDup.shingled(index)
+    val ex = intercept[IllegalArgumentException] {
+      NearDup.incrementalNearDupsIndexed(idxSh, NearDup.minhashSignatures(idxSh),
+        NearDup.nearDupClusters(index), batch)._1.collect()
+    }
+    assert(ex.getMessage.contains("monotone"), ex.getMessage)
+  }
+
   test("incremental: a supplied index label table reproduces the rebuild path") {
     import spark.implicits._
     // reuse the bridge construction — the hardest labeling case — and feed

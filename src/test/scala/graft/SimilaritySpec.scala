@@ -399,6 +399,20 @@ class SimilaritySpec extends SparkSpec {
     assert(e2.getMessage.contains("corrupted"))
   }
 
+  test("semanticDedupIncremental: interleaved ids violate the monotone invariant loudly") {
+    // the public operator keeps its guard (the streaming loop calls the
+    // guard-less core only after its frontier filter)
+    val idx = vecs((0L, Seq(1f, 0f)), (7L, Seq(0f, 1f)))
+    val batch = vecs((5L, Seq(1f, 0.01f))) // 5 < index max 7
+    val labels = Similarity.semanticDedup(idx, 0.4)
+      .filter(!$"kept").select($"vec_id", $"cluster_id")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.semanticDedupIncremental(idx, Similarity.bucketTable(idx),
+        labels, batch, 0.4)._1.collect()
+    }
+    assert(e.getMessage.contains("monotone"), e.getMessage)
+  }
+
   test("semanticDedupIncremental rejects a bucket table from more planes") {
     val idx = vecs((0L, Seq(1f, 0f)), (1L, Seq(0f, 1f)))
     val batch = vecs((10L, Seq(1f, 0.01f)))
